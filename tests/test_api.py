@@ -1162,6 +1162,215 @@ def test_missing_object_inherits_bucket_acl(spark):
     assert status == 404 and "NoSuchBucket" in err
 
 
+def _job_count(spark, group: str, call) -> int:
+    """Spark jobs ``call()`` launches, counted by a job group of its own
+    (``group`` must be unique) after the listener bus drains."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_serve_job_counts_per_request_kind(spark, tmp_path):
+    """Bucket, grant and CORS lookups read the tables' driver snapshots:
+    once those are warm, a request runs only the Spark job its object or
+    part read needs, and bucket-only requests run none.  The model is
+    read back from parquet, as a served store is."""
+    from pithos_spark import tables as T
+    from pithos_spark.sources import store
+    from tests.conftest import SF_SMOKE
+
+    t = T.load_tables(spark, SF_SMOKE)
+    store.write_objects_layout(T.objects_df(t), str(tmp_path / "objects"))
+    for name, derive in (("buckets", T.buckets_df), ("grants", T.grants_df),
+                         ("parts", T.parts_df)):
+        derive(t).write.parquet(str(tmp_path / name))
+    model = {n: spark.read.parquet(str(tmp_path / n))
+             for n in ("objects", "buckets", "grants", "parts")}
+
+    bucket = model["buckets"].limit(1).collect()[0]
+    b, owner = bucket["bucket"], bucket["tenant"]
+    key = model["objects"].filter(f"bucket = '{b}'").limit(1).collect()[0]["object"]
+    part = model["parts"].limit(1).collect()[0]
+    # kind -> (request, status, Spark jobs once the snapshots are warm)
+    requests = {
+        "list_v1_page": (("GET", f"/{b}", {}), 200, 1),
+        "list_v2_page": (("GET", f"/{b}", {"list-type": "2"}), 200, 1),
+        "head_object": (("HEAD", f"/{b}/{key}", {}), 200, 1),
+        "head_object_miss": (("HEAD", f"/{b}/no-such-key", {}), 404, 1),
+        "list_parts": (("GET", f"/{b}/{part['object']}",
+                        {"uploadid": part["upload"]}), 200, 1),
+        "head_bucket": (("HEAD", f"/{b}", {}), 200, 0),
+        "get_acl": (("GET", f"/{b}", {"acl": ""}), 200, 0),
+        "get_service": (("GET", "/", {}), 200, 0),
+    }
+    for args, status, _ in requests.values():  # warm: collects the snapshots
+        assert api.serve(model, *args, tenant=owner)[0] == status, args
+    got = {
+        kind: _job_count(spark, f"job-count-{kind}",
+                         lambda a=args: api.serve(model, *a, tenant=owner))
+        for kind, (args, _, _) in requests.items()
+    }
+    assert got == {kind: jobs for kind, (_, _, jobs) in requests.items()}
+
+
+def _snapshot_model(spark):
+    """A small hand-built model whose dimension tables hold NULL
+    ``bucket``/``tenant`` rows, canonical, group and path-keyed grants."""
+    buckets = spark.createDataFrame(
+        [
+            ("b-own", "alice", True, "2024-01-01"),
+            ("b-grant", "bob", False, "2024-01-02"),
+            ("b-pub", "bob", True, "2024-01-03"),
+            ("a-first", "alice", False, "2024-01-04"),
+            ("b-\u00e9t\u00e9", "alice", False, "2024-01-07"),
+            ("b-Zed", "alice", True, "2024-01-08"),
+            (None, "alice", False, "2024-01-05"),
+            ("b-orphan", None, False, "2024-01-06"),
+        ],
+        "bucket string, tenant string, versioned boolean, created string",
+    )
+    grants = spark.createDataFrame(
+        [
+            ("b-grant", "READ", "carol", "canonical"),
+            ("b-grant", "READ_ACP", "carol", "canonical"),
+            ("b-grant", "WRITE", "staff", "group"),
+            ("b-pub", "READ", "AllUsers", "group"),
+            ("b-pub", "READ_ACP", "AllUsers", "group"),
+            ("b-own/obj.txt", "READ", "dave", "canonical"),
+            ("b-own/obj.txt", "READ_ACP", "dave", "canonical"),
+            (None, "FULL_CONTROL", "AllUsers", "group"),
+        ],
+        "bucket string, perm string, grantee_id string, grantee_type string",
+    )
+    objects = spark.createDataFrame(
+        [
+            ("b-own", "obj.txt", "i1", 3, "2024-01-01", "c1", None,
+             "STANDARD", "alice"),
+            ("b-grant", "g.txt", "i2", 4, "2024-01-02", "c2", "private",
+             "STANDARD", "bob"),
+            ("b-pub", "p.txt", "i3", 5, "2024-01-03", "c3", "public-read",
+             "STANDARD", "bob"),
+        ],
+        "bucket string, object string, inode string, size long, atime string,"
+        " checksum string, acl string, storageclass string, owner string",
+    )
+    cors = spark.createDataFrame(
+        [
+            ("b-own", "*", ["GET", "HEAD"], ["*"], 300),
+            ("b-own", "https://app.example.com", ["PUT"], [], 60),
+            (None, "*", ["GET"], [], 10),
+        ],
+        "bucket string, origin_pattern string, methods array<string>,"
+        " headers array<string>, max_age int",
+    )
+    return {"buckets": buckets, "grants": grants, "objects": objects,
+            "cors_rules": cors}
+
+
+# (method, uri, params, tenant, memberof) -> the status both paths answer
+_SNAPSHOT_REQUESTS = [
+    (("GET", "/", {}, "alice", ()), 200),          # NULL bucket row sorts first
+    (("GET", "/", {}, "bob", ()), 200),
+    (("GET", "/", {}, "nobody", ()), 200),
+    (("GET", "/", {}, None, ()), 403),
+    (("HEAD", "/b-own", {}, "alice", ()), 200),    # owner
+    (("HEAD", "/b-grant", {}, "carol", ()), 200),  # canonical grant
+    (("HEAD", "/b-grant", {}, "erin", ()), 403),
+    (("HEAD", "/b-pub", {}, None, ()), 200),       # AllUsers group grant
+    (("HEAD", "/b-orphan", {}, None, ()), 403),    # NULL tenant owns nothing
+    (("HEAD", "/missing", {}, "alice", ()), 404),
+    (("GET", "/missing", {"acl": ""}, "alice", ()), 404),
+    (("GET", "/b-own", {"acl": ""}, "alice", ()), 200),
+    (("GET", "/b-grant", {"acl": ""}, "carol", ()), 200),
+    (("GET", "/b-pub", {"acl": ""}, None, ()), 200),
+    (("GET", "/b-grant", {"acl": ""}, None, ()), 403),
+    (("GET", "/b-own", {"cors": ""}, "alice", ()), 200),
+    (("GET", "/b-pub", {"cors": ""}, "bob", ()), 404),
+    (("GET", "/b-own", {"location": ""}, "alice", ()), 200),
+    (("GET", "/b-pub", {"versioning": ""}, "bob", ()), 200),
+    (("GET", "/b-orphan", {"versioning": ""}, "alice", ()), 403),
+    (("PUT", "/b-own", {}, "alice", ()), 409),
+    (("PUT", "/fresh-bucket", {}, "alice", ()), 200),
+    (("HEAD", "/b-own/obj.txt", {}, "dave", ()), 200),   # path-keyed grant
+    (("HEAD", "/b-own/obj.txt", {}, "erin", ()), 403),
+    (("GET", "/b-own/obj.txt", {"acl": ""}, "dave", ()), 200),
+    (("HEAD", "/b-pub/p.txt", {}, None, ()), 200),       # canned public-read
+    (("HEAD", "/b-grant/g.txt", {}, "carol", ()), 403),  # private object
+    (("GET", "/b-grant", {}, "carol", ()), 200),
+    (("DELETE", "/b-grant/g.txt", {}, "frank", ("staff",)), 204),
+    (("DELETE", "/b-grant/g.txt", {}, "frank", ()), 403),
+]
+
+
+def test_snapshot_matches_per_request_path(spark, monkeypatch, caplog):
+    """The driver snapshot answers exactly what the per-request Spark
+    filter answers: SNAPSHOT_ROWS = 0 forces every table onto the
+    per-request path, and every response must be byte-identical."""
+    import logging
+    import weakref
+
+    def run():
+        model = _snapshot_model(spark)
+        out = []
+        for (method, uri, params, tenant, memberof), _ in _SNAPSHOT_REQUESTS:
+            status, payload = api.serve(
+                model, method, uri, params, tenant=tenant, memberof=memberof
+            )
+            if isinstance(payload, dict) and not all(
+                isinstance(v, str) for v in payload.values()
+            ):
+                payload = None  # mutation plans: compare the status only
+            out.append((status, payload))
+        return out
+
+    with caplog.at_level(logging.INFO, logger="pithos_spark"):
+        monkeypatch.setattr(api, "_SNAPSHOTS", weakref.WeakKeyDictionary())
+        snap = run()
+        monkeypatch.setattr(api, "_SNAPSHOTS", weakref.WeakKeyDictionary())
+        monkeypatch.setattr(api, "SNAPSHOT_ROWS", 0)
+        per_request = run()
+    assert [s for s, _ in snap] == [want for _, want in _SNAPSHOT_REQUESTS]
+    assert snap == per_request
+    decisions = [r.getMessage() for r in caplog.records]
+    for table, rows in (("buckets", 8), ("grants", 8), ("cors_rules", 3)):
+        assert f"snapshot {table}: rows={rows}, snapshotted" in decisions
+        assert f"snapshot {table}: rows>0, kept per request" in decisions
+    # GET Service lists alice's buckets in Spark's order: NULL first,
+    # then UTF-8 byte order
+    names = [e.text for e in ET.fromstring(snap[0][1]).iter(f"{{{xmlio.S3_NS}}}Name")]
+    buckets = _snapshot_model(spark)["buckets"]
+    assert names == [r["bucket"] for r in buckets.filter("tenant = 'alice'")
+                     .orderBy("bucket").collect()]
+    assert names[0] is None and len(names) == 5
+
+
+def test_committed_grants_plan_is_seen_by_next_authorize(spark):
+    """A model DataFrame is a snapshot: put-object's grants plan,
+    committed into a new model, is a new DataFrame, so the next
+    authorize_request reads the creator grant it carries."""
+    model = {**_snapshot_model(spark), "chunks": spark.createDataFrame(
+        [], "inode string, chunk_seq long, chunksize long, payload string")}
+    spec = ("object:READ_ACP",)
+    # warm the old model's snapshots: frank holds no grant on the key yet
+    assert api.authorize_request(
+        model, spec, "b-grant", "new.txt", "frank")[0] == 403
+    status, out = api.serve(model, "PUT", "/b-grant/new.txt", body="x",
+                            tenant="frank", memberof=("staff",))
+    assert status == 200
+    committed = {**model, "grants": out["grants"]}
+    assert api.authorize_request(
+        committed, spec, "b-grant", "new.txt", "frank") is None
+    # the old model still answers from its own snapshot
+    assert api.authorize_request(
+        model, spec, "b-grant", "new.txt", "frank")[0] == 403
+
+
 def test_head_refusal_payload_is_header_dict(spark):
     """HTTP HEAD carries no body: a refusal on a HEAD request must keep
     the (status, header-dict) payload shape the HEAD handlers return,
