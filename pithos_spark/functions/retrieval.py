@@ -150,6 +150,38 @@ def build_postings(documents: DataFrame) -> DataFrame:
     )
 
 
+def order_postings(postings: DataFrame) -> DataFrame:
+    """Row order of the postings table — build, batch append, staged
+    segment and fold: hash-clustered on term, sorted by (term, doc_id)
+    within files, so a pushed ``term IN (...)`` filter skips row
+    groups inside every file (see write_postings_layout's r14 note on
+    why hash, not range)."""
+    return postings.repartition("term").sortWithinPartitions("term", "doc_id")
+
+
+def write_postings_stats(spark, path: str, n_docs: int, total_len: int) -> None:
+    """The layout's 1-row additive corpus counters table."""
+    from pithos_spark.functions.layoutcommit import write_tiny_table
+
+    write_tiny_table(
+        spark.createDataFrame(
+            [(int(n_docs), int(total_len))], "n_docs long, total_len long"
+        ),
+        path,
+    )
+
+
+def delta_postings_stats(documents: DataFrame) -> DataFrame:
+    """The 1-row (n_docs, total_len) counters a batch of NEW documents
+    adds to the layout's stats — the batch append's and the staged
+    segment's delta, one definition."""
+    toks = documents.select(F.size(_tokens(F.col("text"))).alias("_n"))
+    return toks.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("total_len"),
+    )
+
+
 def write_postings_layout(documents: DataFrame, path: str) -> None:
     """The retrieval analog of store.write_objects_layout: materialize
     the inverted index hash-clustered by term and sorted within files,
@@ -173,12 +205,9 @@ def write_postings_layout(documents: DataFrame, path: str) -> None:
     # the postings write and the 1-row stats aggregate are independent
     # jobs — overlapped (guide §2.6); finalize_rebuild runs after both
     overlap_jobs(
-        lambda: (
-            p.repartition("term")
-            .sortWithinPartitions("term", "doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{path}/postings")
-        ),
+        lambda: order_postings(p)
+        .write.mode("overwrite")
+        .parquet(f"{path}/postings"),
         lambda: (
             toks.agg(
                 F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -234,36 +263,19 @@ def append_to_postings_layout(delta_documents: DataFrame, path: str) -> None:
         end_append,
         read_current,
         read_tiny_rows,
-        write_tiny_table,
     )
 
-    spark = delta_documents.sparkSession
     root = read_current(path)
     old = read_tiny_rows(f"{root}/stats")[0]
     p = build_postings(delta_documents)
     begin_append(root)  # torn-append marker: cleared after the stats write
-    (
-        p.repartition("term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("append")
-        .parquet(f"{root}/postings")
-    )
-    toks = delta_documents.select(F.size(_tokens(F.col("text"))).alias("_n"))
-    d = toks.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("total_len"),
-    ).collect()[0]
-    write_tiny_table(
-        spark.createDataFrame(
-            [
-                (
-                    int(old["n_docs"]) + int(d["n_docs"]),
-                    int(old["total_len"]) + int(d["total_len"]),
-                )
-            ],
-            "n_docs long, total_len long",
-        ),
+    order_postings(p).write.mode("append").parquet(f"{root}/postings")
+    d = delta_postings_stats(delta_documents).collect()[0]
+    write_postings_stats(
+        delta_documents.sparkSession,
         f"{root}/stats",
+        int(old["n_docs"]) + int(d["n_docs"]),
+        int(old["total_len"]) + int(d["total_len"]),
     )
     end_append(root)
 

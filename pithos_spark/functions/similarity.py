@@ -940,6 +940,33 @@ def ivf_kmeans_topk(
     ).drop("query_id")
 
 
+def read_centers(root: str) -> dict[int, list[int]]:
+    """The frozen coarse centers of the generation at ``root``:
+    {cluster: centroid_q}, read driver-side — a k-row table, so no
+    Spark job (r18, the r17 meta-read precedent)."""
+    return {
+        int(r["cluster"]): [int(v) for v in r["centroid_q"]]
+        for r in read_tiny_rows(f"{root}/centers")
+    }
+
+
+def read_codebooks(root: str) -> dict[tuple[int, int], list[int]]:
+    """The frozen PQ codebooks of the generation at ``root``:
+    {(m, code): centroid_q}, read driver-side — an M x K table, so no
+    Spark job (r18)."""
+    return {
+        (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
+        for r in read_tiny_rows(f"{root}/codebooks")
+    }
+
+
+def order_ivf_assigned(assigned: DataFrame) -> DataFrame:
+    """Row order of the plain-IVF assignment rows in a staged segment
+    and a fold (the fold adds the cluster directory partitioning):
+    clustered on cluster, sorted by vec_id within files."""
+    return assigned.repartition("cluster").sortWithinPartitions("vec_id")
+
+
 def save_ivf_index(
     assigned: DataFrame,
     centers: DataFrame,
@@ -1059,10 +1086,7 @@ def ivf_assign_delta(
         scale = stored
     elif scale is None:
         scale = 1000  # pre-meta layout, build-time default
-    centers = {
-        int(r["cluster"]): [int(v) for v in r["centroid_q"]]
-        for r in read_tiny_rows(f"{gen_root}/centers")
-    }
+    centers = read_centers(gen_root)
     qv = new_embeddings.select(
         "vec_id",
         "label",
@@ -1925,6 +1949,16 @@ def pq_serve_topk(
     )
 
 
+def order_pq_codes(codes: DataFrame) -> DataFrame:
+    """Row order of the PQ code table — build, batch append, staged
+    segment and fold: range-partitioned and sorted on (vec_id, m), so
+    the rerank probe's ``vec_id IN (...)`` and the anti-query filter
+    skip row groups and a vector's M rows sit together."""
+    return codes.repartitionByRange("vec_id", "m").sortWithinPartitions(
+        "vec_id", "m"
+    )
+
+
 def save_pq_index(
     embeddings: DataFrame,
     path: str,
@@ -1975,12 +2009,9 @@ def save_pq_index(
         "m int, code int, centroid_q array<bigint>",
     )
     overlap_jobs(
-        lambda: (
-            codes.repartitionByRange("vec_id", "m")
-            .sortWithinPartitions("vec_id", "m")
-            .write.mode("overwrite")
-            .parquet(f"{path}/codes")
-        ),
+        lambda: order_pq_codes(codes)
+        .write.mode("overwrite")
+        .parquet(f"{path}/codes"),
         lambda: write_tiny_table(cb_df, f"{path}/codebooks"),
         lambda: write_tiny_table(
             spark.createDataFrame(
@@ -2021,15 +2052,10 @@ def load_pq_index(spark, path: str, root: str | None = None):
     # driver-side too (the serving tail now computes the query LUT on
     # the driver, so a distributed codebook scan per serve bought
     # nothing but a job).  Same parquet bytes, same values.
-    meta = read_tiny_rows(f"{root}/meta")[0]
-    codebooks = {
-        (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-        for r in read_tiny_rows(f"{root}/codebooks")
-    }
     return (
         spark.read.parquet(f"{root}/codes"),
-        codebooks,
-        meta,
+        read_codebooks(root),
+        read_tiny_rows(f"{root}/meta")[0],
     )
 
 
@@ -2043,23 +2069,9 @@ def append_to_pq_index(new_embeddings: DataFrame, path: str) -> None:
     row-local given frozen codebooks.  Codebook DRIFT is the documented
     limitation, as for any frozen production quantizer: when the
     vector distribution moves, retrain via save_pq_index and re-encode."""
-    # frozen codebooks + meta are KB-sized: driver-side reads of the
-    # live generation (no Spark jobs just to fetch the artifacts — r17)
     gen = read_current(path)
     assert_not_torn(gen)
-    meta = read_tiny_rows(f"{gen}/meta")[0]
-    codebooks = {
-        (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-        for r in read_tiny_rows(f"{gen}/codebooks")
-    }
-    codes = pq_encode(
-        new_embeddings,
-        codebooks,
-        int(meta["m_sub"]),
-        int(meta["scale"]),
-        int(meta["dim"]),
-        extra=["label"],  # rides row-locally; re-attach join removed
-    )
+    codes = pq_encode_delta(new_embeddings.sparkSession, new_embeddings, gen)
     # torn-append marker (VERDICT r15 task 4): a crash mid-append
     # leaves a partially-visible code delta and a retry double-appends
     # code rows — duplicate vec_id rows in every dedup tier and
@@ -2073,13 +2085,27 @@ def append_to_pq_index(new_embeddings: DataFrame, path: str) -> None:
     # resolution above — a second read_current here could race a
     # concurrent fold).
     begin_append(gen)
-    (
-        codes.repartitionByRange("vec_id", "m")
-        .sortWithinPartitions("vec_id", "m")
-        .write.mode("append")
-        .parquet(f"{gen}/codes")
-    )
+    order_pq_codes(codes).write.mode("append").parquet(f"{gen}/codes")
     end_append(gen)
+
+
+def pq_encode_delta(
+    spark, new_embeddings: DataFrame, gen_root: str
+) -> DataFrame:
+    """Encode a delta against the FROZEN codebooks of the generation at
+    ``gen_root``: (vec_id, m, code, label) rows, row-local — shared by
+    :func:`append_to_pq_index` and the staged streaming ingest (the PQ
+    twin of :func:`ivfpq_residual_encode_delta`).  Codebooks and meta
+    are KB-sized driver-side reads (no Spark job — r17)."""
+    meta = read_tiny_rows(f"{gen_root}/meta")[0]
+    return pq_encode(
+        new_embeddings,
+        read_codebooks(gen_root),
+        int(meta["m_sub"]),
+        int(meta["scale"]),
+        int(meta["dim"]),
+        extra=["label"],  # rides row-locally; re-attach join removed
+    )
 
 
 def pq_topk_from_layout(
@@ -2857,6 +2883,15 @@ def _ivfpq_residual_serve(
     )
 
 
+def order_residual_codes(codes: DataFrame) -> DataFrame:
+    """Row order of the residual-IVFADC code table — build, batch
+    append, staged segment and fold: clustered on the coarse cluster,
+    sorted by (vec_id, m) within files.  The base tables add the
+    cluster directory partitioning on top; a staged segment keeps
+    cluster as a plain column."""
+    return codes.repartition("cluster").sortWithinPartitions("vec_id", "m")
+
+
 def save_ivfpq_residual_index(
     embeddings: DataFrame,
     path: str,
@@ -2928,13 +2963,10 @@ def save_ivfpq_residual_index(
     from pithos_spark.plans.helpers import overlap_jobs
 
     overlap_jobs(
-        lambda: (
-            codes.repartition("cluster")
-            .sortWithinPartitions("vec_id", "m")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(f"{path}/codes")
-        ),
+        lambda: order_residual_codes(codes)
+        .write.mode("overwrite")
+        .partitionBy("cluster")
+        .parquet(f"{path}/codes"),
         lambda: centers.write.mode("overwrite").parquet(f"{path}/centers"),
         lambda: write_tiny_table(
             spark.createDataFrame(
@@ -2984,8 +3016,7 @@ def append_to_ivfpq_residual_index(
     # (save_ivfpq_residual_index) is the recovery
     begin_append(path)
     (
-        codes.repartition("cluster")
-        .sortWithinPartitions("vec_id", "m")
+        order_residual_codes(codes)
         .write.mode("append")
         .partitionBy("cluster")
         .parquet(f"{path}/codes")
@@ -3004,14 +3035,8 @@ def ivfpq_residual_encode_delta(
     the staged streaming ingest
     (``streaming/ingest.streaming_ivfpq_residual_ingest``)."""
     meta = read_tiny_rows(f"{gen_root}/meta")[0]
-    centers = {
-        int(r["cluster"]): [int(v) for v in r["centroid_q"]]
-        for r in read_tiny_rows(f"{gen_root}/centers")
-    }
-    codebooks = {
-        (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-        for r in read_tiny_rows(f"{gen_root}/codebooks")
-    }
+    centers = read_centers(gen_root)
+    codebooks = read_codebooks(gen_root)
     # the residual join's k-row build side, from the same driver-read
     # rows (a local relation — no parquet scan job per micro-batch)
     centers_df = spark.createDataFrame(
@@ -3074,14 +3099,8 @@ def ivfpq_residual_topk_from_layout(
     return _ivfpq_residual_serve(
         qv,
         spark.read.parquet(f"{path}/codes"),
-        {
-            int(r["cluster"]): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{path}/centers")
-        },
-        {
-            (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{path}/codebooks")
-        },
+        read_centers(path),
+        read_codebooks(path),
         query_vec_id,
         k,
         n_probe,
@@ -3124,17 +3143,9 @@ def ivfpq_residual_batch_topk_from_layout(
     meta = read_tiny_rows(f"{path}/meta")[0]
     codes = spark.read.parquet(f"{path}/codes")
     # centers/codebooks are KB-sized driver artifacts (r18)
-    centers = {
-        int(r["cluster"]): [int(v) for v in r["centroid_q"]]
-        for r in read_tiny_rows(f"{path}/centers")
-    }
-    codebooks = {
-        (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-        for r in read_tiny_rows(f"{path}/codebooks")
-    }
     return _ivfpq_residual_batch_serve(
-        embeddings, codes, centers, codebooks, meta, query_ids, k, n_probe,
-        rerank,
+        embeddings, codes, read_centers(path), read_codebooks(path), meta,
+        query_ids, k, n_probe, rerank,
     )
 
 
@@ -3261,14 +3272,8 @@ def ivfpq_residual_filtered_topk_from_layout(
     return _ivfpq_residual_serve(
         qv,
         codes,
-        {
-            int(r["cluster"]): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{path}/centers")
-        },
-        {
-            (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{path}/codebooks")
-        },
+        read_centers(path),
+        read_codebooks(path),
         query_vec_id,
         k,
         n_probe,

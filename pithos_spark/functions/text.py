@@ -1817,6 +1817,68 @@ GROUP BY doc_id
 ORDER BY doc_id"""
 
 
+def write_gram_tables(
+    src, n_buckets: int, path: str, mode: str = "overwrite"
+) -> None:
+    """The gram layout's physical format, declared once — build, batch
+    append, staged segment and fold all write through here: each of
+    the five count tables PARTITIONED BY its murmur3 gram bucket
+    ``b = pmod(hash(key), n_buckets)`` and sorted by key within files.
+    ``src`` is either trigram windows (counted per gram) or, for a
+    fold, a dict of per-table partial count rows (summed per gram).
+
+    ONE exchange per table: hash-repartitioning on the gram key into
+    n_buckets partitions IS the bucket function — Spark's partition id
+    is pmod(murmur3(key), n), the same expression as column b — so the
+    aggregation reuses the exchange (clustered on key) AND every task
+    holds exactly its own b directory.  The former shape paid a second
+    keyless repartition("b") exchange per table whose few distinct
+    values spread over 200 partitions (guide §2.4/§2.5).  The five
+    writes are independent jobs — overlapped (guide §2.6); callers
+    commit (marker, install or pointer swap) only after all settle."""
+    from pithos_spark.plans.helpers import overlap_jobs
+
+    def _write_one(key, cnt):
+        if isinstance(src, dict):
+            rows, agg = src[cnt], F.sum(cnt).cast("long")
+        else:
+            rows, agg = src, F.count(F.lit(1))
+        (
+            rows.repartition(n_buckets, F.col(key))
+            .groupBy(key)
+            .agg(agg.alias(cnt))
+            .withColumn("b", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
+            .sortWithinPartitions(key)
+            .write.mode(mode)
+            .partitionBy("b")
+            .parquet(f"{path}/{cnt}")
+        )
+
+    overlap_jobs(
+        *[
+            (lambda key=key, cnt=cnt: _write_one(key, cnt))
+            for key, cnt in _TRIGRAM_COUNT_TABLES
+        ]
+    )
+
+
+def write_gram_stats(
+    spark, path: str, n_total: int, n_buckets: int, n_segments: int
+) -> None:
+    """The gram layout's 1-row totals table.  ``n_segments`` is the
+    partial rows per gram (1 = merged, readers skip the LSM merge;
+    0 = unknown, always merge)."""
+    from pithos_spark.functions.layoutcommit import write_tiny_table
+
+    write_tiny_table(
+        spark.createDataFrame(
+            [(int(n_total), int(n_buckets), int(n_segments))],
+            "n_total long, n_buckets int, n_segments int",
+        ),
+        path,
+    )
+
+
 def write_trigram_lm_layout(
     lm_documents: DataFrame, path: str, n_buckets: int | None = None
 ) -> None:
@@ -1840,8 +1902,6 @@ def write_trigram_lm_layout(
     partitions its grams hash into — see
     :func:`trigram_probe_from_layout`'s partition-filter plan.
     """
-    from pithos_spark.plans.helpers import overlap_jobs
-
     tri_lm = _trigram_windows(lm_documents).persist()
     try:
         n_total = max(tri_lm.count(), 1)
@@ -1859,47 +1919,13 @@ def write_trigram_lm_layout(
             n_buckets = 4
             while n_buckets < 4096 and n_total // (2 * n_buckets) >= 50_000:
                 n_buckets *= 2
-        # ONE exchange per table: hash-repartitioning on the gram
-        # key into n_buckets partitions IS the bucket function —
-        # Spark's partition id is pmod(murmur3(key), n), the same
-        # expression as column b — so the count aggregation reuses
-        # the exchange (clustered on key) AND every task holds
-        # exactly its own b directory.  The former shape paid a
-        # second keyless repartition("b") exchange per table whose
-        # few distinct values spread over 200 partitions
-        # (guide §2.4/§2.5).  The five table writes are independent
-        # jobs over the persisted windows — overlapped (guide §2.6).
-        def _write_one(key, cnt):
-            (
-                tri_lm.repartition(n_buckets, F.col(key))
-                .groupBy(key)
-                .agg(F.count(F.lit(1)).alias(cnt))
-                .withColumn("b", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
-                .sortWithinPartitions(key)
-                .write.mode("overwrite")
-                .partitionBy("b")
-                .parquet(f"{path}/{cnt}")
-            )
-
-        overlap_jobs(
-            *[
-                (lambda key=key, cnt=cnt: _write_one(key, cnt))
-                for key, cnt in _TRIGRAM_COUNT_TABLES
-            ]
-        )
-        from pithos_spark.functions.layoutcommit import (
-            finalize_rebuild,
-            write_tiny_table,
-        )
+        write_gram_tables(tri_lm, n_buckets, path)
+        from pithos_spark.functions.layoutcommit import finalize_rebuild
 
         # n_segments=1: a fresh build holds exactly one partial row per
         # gram, so readers may skip the LSM merge (fast path below)
-        write_tiny_table(
-            lm_documents.sparkSession.createDataFrame(
-                [(n_total, n_buckets, 1)],
-                "n_total long, n_buckets int, n_segments int",
-            ),
-            f"{path}/stats",
+        write_gram_stats(
+            lm_documents.sparkSession, f"{path}/stats", n_total, n_buckets, 1
         )
         # a rebuild is the documented torn-append recovery: cut CURRENT
         # back to this fresh generation 0 and GC old generations and
@@ -1941,10 +1967,8 @@ def append_to_trigram_lm_layout(
         end_append,
         read_current,
         read_tiny_rows,
-        write_tiny_table,
     )
 
-    spark = delta_lm_documents.sparkSession
     root = read_current(path)
     stats = read_tiny_rows(f"{root}/stats")[0]
     n_buckets = int(stats["n_buckets"])
@@ -1952,48 +1976,21 @@ def append_to_trigram_lm_layout(
     try:
         d_total = tri.count()
         begin_append(root)  # torn-append marker, cleared after stats
-
-        # one exchange per table: partition id == pmod(murmur3(key), n)
-        # == b (see write_trigram_lm_layout); the five appends are
-        # independent jobs over the persisted delta windows, overlapped
-        # (guide §2.6) — all behind the same torn-append marker, so a
-        # crash with any subset written still reads as torn.
-        def _append_one(key, cnt):
-            (
-                tri.repartition(n_buckets, F.col(key))
-                .groupBy(key)
-                .agg(F.count(F.lit(1)).alias(cnt))
-                .withColumn("b", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
-                .sortWithinPartitions(key)
-                .write.mode("append")
-                .partitionBy("b")
-                .parquet(f"{root}/{cnt}")
-            )
-
-        from pithos_spark.plans.helpers import overlap_jobs
-
-        overlap_jobs(
-            *[
-                (lambda key=key, cnt=cnt: _append_one(key, cnt))
-                for key, cnt in _TRIGRAM_COUNT_TABLES
-            ]
-        )
+        # all five appends behind the same torn-append marker, so a
+        # crash with any subset written still reads as torn
+        write_gram_tables(tri, n_buckets, root, mode="append")
         # preserve "unknown" (0): a pre-n_segments-column layout may
         # already hold several partial rows per gram, so writing 1 here
         # would let readers take the no-merge fast path over duplicate
         # gram rows and silently corrupt every score — 0 keeps forcing
         # the LSM merge (ADVICE r15)
         base_segs = _n_segments_of(stats)
-        write_tiny_table(
-            spark.createDataFrame(
-                [(
-                    int(stats["n_total"]) + d_total,
-                    n_buckets,
-                    base_segs + 1 if base_segs else 0,
-                )],
-                "n_total long, n_buckets int, n_segments int",
-            ),
+        write_gram_stats(
+            delta_lm_documents.sparkSession,
             f"{root}/stats",
+            int(stats["n_total"]) + d_total,
+            n_buckets,
+            base_segs + 1 if base_segs else 0,
         )
         end_append(root)
     finally:

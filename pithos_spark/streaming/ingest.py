@@ -3,8 +3,9 @@
 Batch form: a daily crawl delta lands and
 ``retrieval.append_to_postings_layout`` folds it in (VERDICT r13 task
 4).  This module is the Structured Streaming twin for the continuous
-version of the same ingest — micro-batches of new documents keep the
-BM25 postings layout serveable without ever rebuilding it.
+version of the same ingest — micro-batches keep every persisted
+layout (postings, trigram grams, PQ, residual IVFADC, plain IVF,
+objects) serveable without ever rebuilding it.
 
 Replay safety is the design constraint (the same one
 streaming_decode_coverage documents): foreachBatch is at-least-once,
@@ -38,6 +39,14 @@ after it, it only finishes the cleanup.  Because the fold fully merges
 per-gram partial rows, a compacted trigram layout returns to
 ``n_segments == 1`` and the readers' LSM merge fast-path turns back on.
 
+The protocol is written once: :func:`_stage_stream` is every layout's
+ingest and :func:`_fold` every layout's compaction.  A layout supplies
+only its segment writer, its fold writer and its row order — the row
+order declared by the module that owns the layout (``order_postings``,
+``order_pq_codes``, ``order_residual_codes``, ``order_ivf_assigned``,
+``text.write_gram_tables``, ``store.write_objects_layout``), so every
+write of one physical format calls one definition.
+
 When to compact: fold when ``trigram_segment_stats``'s
 ``avg_segments_x1000`` crosses :data:`COMPACT_WHEN_AVG_SEGMENTS_X1000`
 (derivation in SCALE_r15).  The ANN and objects layouts key on live
@@ -58,6 +67,7 @@ on the ingest path.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 
@@ -92,33 +102,20 @@ from pithos_spark.functions.layoutcommit import (
 COMPACT_WHEN_AVG_SEGMENTS_X1000 = 2000
 
 
-def streaming_postings_ingest(
-    new_documents_stream,
-    layout_path: str,
-    checkpoint: str,
-):
-    """Maintain the postings layout from a stream of NEW documents:
-    each micro-batch tokenizes its documents (one delta-linear
-    ``build_postings`` pass, hash-clustered on term and sorted within
-    the segment so the pushed ``term IN`` filter row-group-skips
-    inside it) and
+# --- the staged-layout lifecycle, written once -------------------------------
 
-    - writes the segment's posting rows COMPLETELY under
-      ``{layout}/staged_tmp/seg=<key>``, then installs them at
-      ``{layout}/staged/seg=<key>`` with one atomic rename —
-      idempotent under at-least-once replay, and no reader can ever see
-      a half-written segment;
-    - appends one (n_docs, total_len, seg) row under
-      ``{layout}/staged_stats`` — additive counters, deduped by seg at
-      read (and re-derivable from the rows if this append is the step
-      a crash ate).
 
-    Serving reads through :func:`bm25_topk_with_staged`; fold segments
-    into the base with :func:`compact_staged_postings`.  Assumes the
-    stream carries genuinely new doc_ids (the batch append's contract —
-    updates go through a rebuild)."""
-    from pithos_spark.functions.retrieval import _tokens, build_postings
-
+def _stage_stream(stream, layout_path: str, checkpoint: str, write_segment):
+    """THE staged ingest, shared by every layout: for each non-empty
+    micro-batch, ``write_segment(batch_df, batch_id, tmp)`` writes the
+    segment's tables COMPLETELY under ``{layout}/staged_tmp/seg=<key>``,
+    which then installs at ``{layout}/staged/seg=<key>`` with one
+    atomic rename.  A layout with additive corpus counters returns a
+    1-row stats DataFrame; it is appended seg-tagged under
+    ``{layout}/staged_stats`` only AFTER the install — the order
+    :func:`_gc_staged_stats` relies on (a row in its snapshot always
+    has its segment visible).  Runs the stream to completion of the
+    data available now (``availableNow``)."""
     token = segment_token(checkpoint)
 
     def _ingest(batch_df, batch_id):
@@ -126,33 +123,90 @@ def streaming_postings_ingest(
             return
         seg = f"{token}-{batch_id}"
         tmp = f"{layout_path}/staged_tmp/seg={seg}"
-        (
-            build_postings(batch_df)
-            .repartition("term")
-            .sortWithinPartitions("term", "doc_id")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
+        stats = write_segment(batch_df, batch_id, tmp)
         install_staged_segment(tmp, f"{layout_path}/staged/seg={seg}")
-        toks = batch_df.select(F.size(_tokens(F.col("text"))).alias("_n"))
-        (
-            toks.agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.coalesce(F.sum("_n"), F.lit(0))
-                .cast("long")
-                .alias("total_len"),
+        if stats is not None:
+            (
+                stats.withColumn("seg", F.lit(seg))
+                .write.mode("append")
+                .parquet(f"{layout_path}/staged_stats")
             )
-            .withColumn("seg", F.lit(seg))
-            .write.mode("append")
-            .parquet(f"{layout_path}/staged_stats")
-        )
 
     return (
-        new_documents_stream.writeStream.foreachBatch(_ingest)
+        stream.writeStream.foreachBatch(_ingest)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _fold(spark, layout_path: str, write_generation) -> int:
+    """THE compaction, shared by every layout (VERDICT r14 task 1):
+    resolve the live generation once and refuse a torn base (never
+    bake one into a generation).  If segments are live,
+    ``write_generation(root, live, tmp)`` writes the COMPLETE merged
+    tables under ``FOLD_TMP`` and returns the rows folded; the folded
+    keys join them, the dir is renamed to the next ``fold_gen_<k>``
+    and ``CURRENT`` swaps atomically.  Everything after the swap is
+    pure GC (readers mask folded keys): staged dirs, staged stats,
+    superseded generations (VERDICT r15 task 5; never read once
+    CURRENT moves).  With nothing live the GC still runs, over the
+    previously-folded keys a crashed cleanup left behind.
+
+    Killed at any step, a re-run either redoes the fold from intact
+    inputs (pointer still on the old generation) or just finishes the
+    cleanup.  Every step is a module-global lookup, so the crash
+    matrices can kill the fold at each one.  Cost: O(layout), the
+    classic LSM major compaction, while ingest stays delta-linear —
+    run it at the policy cadence, not per batch."""
+    root = read_current(layout_path)
+    assert_not_torn(root)
+    live = _live_staged_segs(layout_path, root)
+    if not live:
+        n, live = 0, sorted(folded_segment_keys(root))
+    else:
+        tmp = f"{layout_path}/{FOLD_TMP}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        n = write_generation(root, live, tmp)
+        write_tiny_table(
+            _folded_segments_df(spark, layout_path, root, live),
+            f"{tmp}/folded_segments",
+        )
+        gen = next_gen_rel(layout_path)
+        os.rename(tmp, f"{layout_path}/{gen}")
+        commit_current(layout_path, gen)  # THE commit point
+    _gc_staged(layout_path, live)
+    _gc_staged_stats(spark, layout_path)
+    gc_generations(layout_path)
+    return n
+
+
+def _fold_rows(
+    spark, layout_path, table, order, partition_by=None, carry=(), finish=None
+) -> int:
+    """:func:`_fold` for the layouts whose staged rows are DISJOINT
+    from the base (new doc_ids / vec_ids by the ingest contract), so
+    the fold is a union, not a merge: restore the layout's row
+    ``order`` (and cluster directory ``partition_by``) over base ∪
+    staged, copy the frozen tiny tables in ``carry`` forward, and let
+    ``finish(root, live, tmp)`` write anything else the generation
+    needs (the postings counters).  Returns the staged rows folded."""
+
+    def write_generation(root, live, tmp):
+        staged = _staged_rows(spark, layout_path, live)
+        n = staged.count()
+        base = spark.read.parquet(f"{root}/{table}")
+        w = order(base.unionByName(staged)).write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(f"{tmp}/{table}")
+        for t in carry:
+            write_tiny_table(spark.read.parquet(f"{root}/{t}"), f"{tmp}/{t}")
+        if finish:
+            finish(root, live, tmp)
+        return n
+
+    return _fold(spark, layout_path, write_generation)
 
 
 def _live_staged_segs(layout_path: str, gen_root: str) -> list[str]:
@@ -164,45 +218,47 @@ def _live_staged_segs(layout_path: str, gen_root: str) -> list[str]:
     return [s for s in staged_segment_keys(layout_path) if s not in folded]
 
 
-def _staged_segments_attributed(spark, layout_path: str, live: list[str]):
-    """The live segments' rows WITH a ``seg`` attribution column — one
-    scan per segment, because attribution is the point.  Serving paths
-    use the single-scan fast paths instead (:func:`_staged_rows` for
-    the flat postings/ANN shape, :func:`_staged_trigram_tables` for
-    the gram tables); this per-segment union remains for the readers
-    that genuinely key on the segment (:func:`ann_staged_stats`,
-    :func:`objects_staged_stats`; the counter derivations read their
-    missing segments by path).
+def _staged_rows(spark, layout_path: str, live: list[str]):
+    """All live staged segments' rows in ONE multi-path scan — the
+    serving fast path for the flat segment shape (postings / ANN codes
+    / assignments / object mutations), whose consumers drop
+    per-segment attribution anyway.  One scan node with N paths
+    replaces N scan+union subplans (~0.09 s/segment measured,
+    SCALE_r17 §1 — subplan/file-open overhead, not data volume).  Safe
+    because these segment dirs hold no partition subdirs, so the
+    multi-root conflicting-directory-structures check that forces the
+    trigram layout's per-segment reads never applies.  Reads by
+    explicit per-segment path: a segment dir exists iff its tables are
+    complete (single-rename install)."""
+    return spark.read.parquet(
+        *[f"{layout_path}/staged/seg={s}" for s in live]
+    )
 
-    Reads by explicit per-segment path: a segment dir exists iff its
-    tables are complete (single-rename install), so no partial segment
-    can leak in."""
-    parts = [
-        spark.read.parquet(f"{layout_path}/staged/seg={s}").withColumn(
-            "seg", F.lit(s)
-        )
-        for s in live
-    ]
-    df = parts[0]
-    for part in parts[1:]:
-        df = df.unionByName(part)
-    return df
+
+def _with_staged(spark, layout_path: str, root: str, base):
+    """``base`` ∪ the live staged rows, masked against the generation
+    at ``root`` — resolved ONCE by the caller and threaded through both
+    the base read and the mask: two resolutions race a concurrent
+    fold (segments folded in between would be masked while their rows
+    live only in the newer base; ADVICE r16)."""
+    live = _live_staged_segs(layout_path, root)
+    if not live:
+        return base
+    return base.unionByName(_staged_rows(spark, layout_path, live))
 
 
 def _staged_counters(
     layout_path: str, live: list[str], cols: tuple, derive
 ) -> dict:
-    """Shared staged-stats readout (the other half of the task-8
-    unification): the deduped seg-tagged counter rows for the live
-    segments, with any segment whose stats append a crash ate DERIVED
-    from the segment's own rows (ADVICE r14 — serving base counters
-    against unioned staged rows drifts every score).  ``cols`` are the
-    additive counter columns; ``derive(missing_segs)`` returns their
-    exact values for stats-less segments.  Driver-side cost: a
-    per-segment list of tiny rows, read with
-    :func:`layoutcommit.read_tiny_rows` — the table stays KB-sized
-    (one row per live segment, plus at most one replayed duplicate),
-    so the read costs no distributed job (r17)."""
+    """Shared staged-stats readout: the deduped seg-tagged counter rows
+    for the live segments, with any segment whose stats append a crash
+    ate DERIVED from the segment's own rows (ADVICE r14 — serving base
+    counters against unioned staged rows drifts every score).
+    ``cols`` are the additive counter columns; ``derive(missing_segs)``
+    returns their exact values for stats-less segments.  Driver-side:
+    the table stays KB-sized (one row per live segment, plus at most
+    one replayed duplicate), so :func:`layoutcommit.read_tiny_rows`
+    reads it with no distributed job (r17)."""
     stats_dir = f"{layout_path}/staged_stats"
     live_set = set(live)
     rows: list[dict] = []
@@ -225,21 +281,203 @@ def _staged_counters(
     return out
 
 
-def _staged_rows(spark, layout_path: str, live: list[str]):
-    """All live staged segments' rows in ONE multi-path scan — the
-    serving fast path for the single-table (postings / ANN code /
-    assignment) segment shape, whose consumers drop per-segment
-    attribution anyway.  One scan node with N paths replaces N
-    scan+union subplans, deleting the per-segment serving tax
-    (~0.09 s/segment measured, SCALE_r17 §1 — subplan/file-open
-    overhead, not data volume).  Safe because these segment dirs are
-    FLAT parquet directories (no partition subdirs), so the multi-root
-    conflicting-directory-structures check that forces the trigram
-    layout's per-segment reads never applies; readers that DO need
-    attribution (``_staged_counters`` derivations, occupancy
-    telemetry) keep using :func:`_staged_segments_attributed`."""
-    return spark.read.parquet(
-        *[f"{layout_path}/staged/seg={s}" for s in live]
+def _gc_staged(layout_path: str, segs: list[str]) -> None:
+    """Remove folded staged segments (plus any leftover fold temp).
+    Pure garbage collection — every reader already masks these keys via
+    the live generation's folded_segments table, so a crash anywhere in
+    here changes nothing and a re-run finishes the job.  Temp cleanup
+    is scoped to the folded keys: a concurrently-ingesting micro-batch
+    may be mid-write under ``staged_tmp/seg=<other>`` (an abandoned
+    temp from a crashed ingest is harmless — its replay overwrites
+    it)."""
+    shutil.rmtree(f"{layout_path}/{FOLD_TMP}", ignore_errors=True)
+    for s in segs:
+        shutil.rmtree(
+            f"{layout_path}/staged_tmp/seg={s}", ignore_errors=True
+        )
+        shutil.rmtree(
+            f"{layout_path}/staged/seg={s}", ignore_errors=True
+        )
+    for d in (f"{layout_path}/staged", f"{layout_path}/staged_tmp"):
+        # os.rmdir, NOT listdir-then-rmtree (ADVICE r15): a concurrent
+        # micro-batch can rename its segment in between an emptiness
+        # check and a recursive delete, losing a committed (therefore
+        # never-replayed) segment.  rmdir is atomic — it fails with
+        # ENOTEMPTY if the install won the race.
+        try:
+            os.rmdir(d)
+        except OSError:
+            pass
+
+
+def _rmdir_stats_table(stats_dir: str) -> None:
+    """Clear writer markers (_SUCCESS etc. — recreated by any later
+    append), then take the directory down with an atomic rmdir, which
+    fails harmlessly with ENOTEMPTY if a concurrent append just landed
+    (its files are live and stay — same rationale as _gc_staged's
+    rmdir)."""
+    for f in os.listdir(stats_dir):
+        if f.startswith((".", "_")):
+            try:
+                os.remove(os.path.join(stats_dir, f))
+            except OSError:
+                pass
+    try:
+        os.rmdir(stats_dir)
+    except OSError:
+        pass
+
+
+def _gc_staged_stats(spark, layout_path: str) -> None:
+    """Bound the staged_stats table (ADVICE r15): ingest appends one
+    small parquet file per micro-batch and nothing ever removed rows
+    for folded segments, so the table — and every staged serving
+    read's dedup scan over it — grew without bound.  After a fold,
+    compact it down to rows whose segment is still installed.
+
+    File-level, never directory-level (ADVICE r16): the old
+    rmtree+rename swap could permanently destroy a stats row a
+    concurrent ingest appended between the snapshot and the swap — and
+    for postings the reader's derivation fallback cannot see
+    zero-token documents, so that segment's n_docs would undercount
+    forever.  Instead: snapshot the data FILES first, compact the live
+    rows FROM THAT SNAPSHOT into new files moved INTO the directory,
+    then delete only the snapshotted files.  A file appended after the
+    snapshot is never touched; ingest appends a segment's stats row
+    only AFTER installing its directory (so a row present in the
+    snapshot has its segment visible to the live listing taken after
+    it).  Readers dedupe by ``seg`` (:func:`_staged_counters`), so the
+    crash window between move-in and delete — duplicate rows per
+    segment — is read-transparent, and a re-run finishes the
+    cleanup."""
+    stats_dir = f"{layout_path}/staged_stats"
+    tmp = f"{layout_path}/staged_stats_tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        snapshot = [
+            f
+            for f in os.listdir(stats_dir)
+            if not f.startswith((".", "_"))
+        ]
+    except FileNotFoundError:
+        return  # no stats table (readers derive) — nothing to bound
+    if not snapshot:
+        _rmdir_stats_table(stats_dir)
+        return
+    # live listed AFTER the file snapshot: any row whose segment was
+    # installed later lives in a post-snapshot file we never delete
+    live = staged_segment_keys(layout_path)
+    paths = [os.path.join(stats_dir, f) for f in snapshot]
+    if live:
+        keep = (
+            spark.read.parquet(*paths)
+            .filter(F.col("seg").isin(list(live)))
+            .dropDuplicates(["seg"])
+        )
+        write_tiny_table(keep, tmp)
+        for f in os.listdir(tmp):
+            if f.endswith(".parquet"):
+                os.rename(
+                    os.path.join(tmp, f), os.path.join(stats_dir, f)
+                )
+    for p in paths:
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
+    shutil.rmtree(tmp, ignore_errors=True)
+    if not live:
+        _rmdir_stats_table(stats_dir)
+
+
+def _folded_segments_df(spark, layout_path: str, gen_root: str, live):
+    """Contents for the new generation's folded_segments table: the
+    keys folded by THIS fold, plus previously-folded keys whose segment
+    dirs a crashed cleanup left behind (their rows are already in the
+    base; the mask must outlive the directories)."""
+    prev = folded_segment_keys(gen_root)
+    keep = sorted(
+        set(str(s) for s in live)
+        | {s for s in staged_segment_keys(layout_path) if s in prev}
+    )
+    return spark.createDataFrame([(s,) for s in keep], "seg string")
+
+
+def _staged_stats(spark, layout_path, min_segments, extra_schema="", *aggs):
+    """Per-live-segment staged telemetry, shared by the ANN and objects
+    readouts: one row per LIVE staged segment with its row count (plus
+    ``aggs``), the live-segment total and the fold-due verdict.  One
+    scan per segment, because attribution is the point (serving reads
+    use :func:`_staged_rows` instead).  Cost: one aggregation over the
+    delta-sized segments; nothing staged -> empty report."""
+    root = read_current(layout_path)
+    live = _live_staged_segs(layout_path, root)
+    if not live:
+        return spark.createDataFrame(
+            [],
+            f"seg string, rows long, {extra_schema}"
+            "n_live_segments int, fold_due boolean",
+        )
+    staged = functools.reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            spark.read.parquet(f"{layout_path}/staged/seg={s}").withColumn(
+                "seg", F.lit(s)
+            )
+            for s in live
+        ],
+    )
+    return (
+        staged.groupBy("seg")
+        .agg(F.count(F.lit(1)).alias("rows"), *aggs)
+        .withColumn("n_live_segments", F.lit(len(live)))
+        .withColumn("fold_due", F.lit(len(live) >= min_segments))
+        .orderBy("seg")
+    )
+
+
+def _fold_if_due(spark, layout_path: str, min_segments: int, fold) -> int:
+    """Segment-count policy form shared by the ANN and objects layouts:
+    ``fold`` iff ``min_segments`` staged segments are live, else 0
+    without touching Spark or the layout."""
+    if not ann_fold_due(spark, layout_path, min_segments):
+        return 0
+    return fold(spark, layout_path)
+
+
+# --- BM25 postings -----------------------------------------------------------
+
+
+def streaming_postings_ingest(
+    new_documents_stream,
+    layout_path: str,
+    checkpoint: str,
+):
+    """Maintain the postings layout from a stream of NEW documents
+    through :func:`_stage_stream`: each micro-batch's segment is one
+    delta-linear ``build_postings`` pass in the layout's row order
+    (``retrieval.order_postings``, so the pushed ``term IN`` filter
+    row-group-skips inside it), and its (n_docs, total_len) counters
+    are the segment's stats row (re-derivable from the rows if the
+    append is the step a crash ate).
+
+    Serving reads through :func:`bm25_topk_with_staged`; fold segments
+    into the base with :func:`compact_staged_postings`.  Assumes the
+    stream carries genuinely new doc_ids (the batch append's contract —
+    updates go through a rebuild)."""
+    from pithos_spark.functions.retrieval import (
+        build_postings,
+        delta_postings_stats,
+        order_postings,
+    )
+
+    def write_segment(batch_df, _batch_id, tmp):
+        rows = order_postings(build_postings(batch_df))
+        rows.write.mode("overwrite").parquet(tmp)
+        return delta_postings_stats(batch_df)
+
+    return _stage_stream(
+        new_documents_stream, layout_path, checkpoint, write_segment
     )
 
 
@@ -332,197 +570,32 @@ def bm25_topk_with_staged(
     )
 
 
-def _gc_staged(layout_path: str, segs: list[str]) -> None:
-    """Remove folded staged segments (plus any leftover fold temp).
-    Pure garbage collection — every reader already masks these keys via
-    the live generation's folded_segments table, so a crash anywhere in
-    here changes nothing and a re-run finishes the job.  Temp cleanup
-    is scoped to the folded keys: a concurrently-ingesting micro-batch
-    may be mid-write under ``staged_tmp/seg=<other>`` (an abandoned
-    temp from a crashed ingest is harmless — its replay overwrites
-    it)."""
-    shutil.rmtree(f"{layout_path}/{FOLD_TMP}", ignore_errors=True)
-    for s in segs:
-        shutil.rmtree(
-            f"{layout_path}/staged_tmp/seg={s}", ignore_errors=True
-        )
-        shutil.rmtree(
-            f"{layout_path}/staged/seg={s}", ignore_errors=True
-        )
-    for d in (f"{layout_path}/staged", f"{layout_path}/staged_tmp"):
-        # os.rmdir, NOT listdir-then-rmtree (ADVICE r15): a concurrent
-        # micro-batch can rename its segment in between an emptiness
-        # check and a recursive delete, losing a committed (therefore
-        # never-replayed) segment.  rmdir is atomic — it fails with
-        # ENOTEMPTY if the install won the race.
-        try:
-            os.rmdir(d)
-        except OSError:
-            pass
-
-
-def _gc_staged_stats(spark, layout_path: str) -> None:
-    """Bound the staged_stats table (ADVICE r15): ingest appends one
-    small parquet file per micro-batch and nothing ever removed rows
-    for folded segments, so the table — and every staged serving
-    read's dedup scan over it — grew without bound.  After a fold,
-    compact it down to rows whose segment is still installed.
-
-    File-level, never directory-level (ADVICE r16): the old
-    rmtree+rename swap could permanently destroy a stats row a
-    concurrent ingest appended between the snapshot and the swap — and
-    for postings the reader's derivation fallback cannot see
-    zero-token documents, so that segment's n_docs would undercount
-    forever.  Instead: snapshot the data FILES first, compact the live
-    rows FROM THAT SNAPSHOT into new files moved INTO the directory,
-    then delete only the snapshotted files.  A file appended after the
-    snapshot is never touched; ingest appends a segment's stats row
-    only AFTER installing its directory (so a row present in the
-    snapshot has its segment visible to the live listing taken after
-    it).  Readers dedupe by ``seg`` (:func:`_staged_counters`), so the
-    crash window between move-in and delete — duplicate rows per
-    segment — is read-transparent, and a re-run finishes the
-    cleanup."""
-    stats_dir = f"{layout_path}/staged_stats"
-    tmp = f"{layout_path}/staged_stats_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        snapshot = [
-            f
-            for f in os.listdir(stats_dir)
-            if not f.startswith((".", "_"))
-        ]
-    except FileNotFoundError:
-        return  # no stats table (readers derive) — nothing to bound
-    if not snapshot:
-        # empty table: clear writer markers (_SUCCESS etc. — excluded
-        # from the data snapshot, recreated by any later append), then
-        # atomic rmdir (fails harmlessly with ENOTEMPTY if a
-        # concurrent append just landed — same rationale as
-        # _gc_staged's rmdir)
-        for f in os.listdir(stats_dir):
-            if f.startswith((".", "_")):
-                try:
-                    os.remove(os.path.join(stats_dir, f))
-                except OSError:
-                    pass
-        try:
-            os.rmdir(stats_dir)
-        except OSError:
-            pass
-        return
-    # live listed AFTER the file snapshot: any row whose segment was
-    # installed later lives in a post-snapshot file we never delete
-    live = staged_segment_keys(layout_path)
-    paths = [os.path.join(stats_dir, f) for f in snapshot]
-    if live:
-        keep = (
-            spark.read.parquet(*paths)
-            .filter(F.col("seg").isin(list(live)))
-            .dropDuplicates(["seg"])
-        )
-        write_tiny_table(keep, tmp)
-        for f in os.listdir(tmp):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(tmp, f), os.path.join(stats_dir, f)
-                )
-    for p in paths:
-        try:
-            os.remove(p)
-        except FileNotFoundError:
-            pass
-    shutil.rmtree(tmp, ignore_errors=True)
-    if not live:
-        # nothing kept: clear writer markers and take the directory
-        # down too (atomic rmdir — ENOTEMPTY if a concurrent append
-        # just landed, in which case its files are live and stay)
-        for f in os.listdir(stats_dir):
-            if f.startswith((".", "_")):
-                try:
-                    os.remove(os.path.join(stats_dir, f))
-                except OSError:
-                    pass
-        try:
-            os.rmdir(stats_dir)
-        except OSError:
-            pass
-
-
-def _folded_segments_df(spark, layout_path: str, gen_root: str, live):
-    """Contents for the new generation's folded_segments table: the
-    keys folded by THIS fold, plus previously-folded keys whose segment
-    dirs a crashed cleanup left behind (their rows are already in the
-    base; the mask must outlive the directories)."""
-    prev = folded_segment_keys(gen_root)
-    keep = sorted(
-        set(str(s) for s in live)
-        | {s for s in staged_segment_keys(layout_path) if s in prev}
-    )
-    return spark.createDataFrame([(s,) for s in keep], "seg string")
-
-
 def compact_staged_postings(spark, layout_path: str) -> int:
-    """Fold the staged segments into the layout — crash-idempotently
-    (VERDICT r14 task 1).  Writes a COMPLETE new generation
-    (re-clustered merged postings + refreshed stats + the folded
-    segment keys) under a temp dir, renames it to ``fold_gen_<k>``, and
-    atomically swaps the ``CURRENT`` pointer; staged cleanup afterwards
-    is pure GC because readers mask folded keys.  Killed at any point,
-    a re-run either redoes the fold from intact inputs (pointer still
-    on the old generation) or just finishes the cleanup (pointer
-    already swapped).  Returns the number of staged posting rows
-    folded.
+    """Fold the staged segments into the layout (:func:`_fold_rows`):
+    re-clustered merged postings plus the refreshed corpus counters
+    (base + staged, stats rows or row-derived).  Returns the number of
+    staged posting rows folded."""
+    from pithos_spark.functions.retrieval import (
+        order_postings,
+        write_postings_stats,
+    )
 
-    Cost model: the fold rewrites base+staged — O(layout), the classic
-    LSM major compaction — while the per-batch ingest stays
-    delta-linear; run it at the :data:`COMPACT_WHEN_AVG_SEGMENTS_X1000`
-    cadence, not per batch.  Superseded generations are reclaimed
-    in-engine after the swap (``gc_generations`` — VERDICT r15 task 5;
-    never read once CURRENT moves)."""
-    root = read_current(layout_path)
-    assert_not_torn(root)  # never bake a torn base into a generation
-    live = _live_staged_segs(layout_path, root)
-    if not live:
-        _gc_staged(
-            layout_path, sorted(folded_segment_keys(root))
+    def stats(root, live, tmp):
+        dn, dl_sum = _staged_postings_counters(spark, layout_path, live)
+        old = read_tiny_rows(f"{root}/stats")[0]
+        write_postings_stats(
+            spark,
+            f"{tmp}/stats",
+            int(old["n_docs"]) + dn,
+            int(old["total_len"]) + dl_sum,
         )
-        _gc_staged_stats(spark, layout_path)
-        gc_generations(layout_path)
-        return 0
-    staged = _staged_rows(spark, layout_path, live)
-    n = staged.count()
-    dn, dl_sum = _staged_postings_counters(spark, layout_path, live)
-    old = read_tiny_rows(f"{root}/stats")[0]
 
-    tmp = f"{layout_path}/{FOLD_TMP}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    base = spark.read.parquet(f"{root}/postings")
-    (
-        base.unionByName(staged)
-        .repartition("term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{tmp}/postings")
+    return _fold_rows(
+        spark, layout_path, "postings", order_postings, finish=stats
     )
-    write_tiny_table(
-        spark.createDataFrame(
-            [(int(old["n_docs"]) + dn, int(old["total_len"]) + dl_sum)],
-            "n_docs long, total_len long",
-        ),
-        f"{tmp}/stats",
-    )
-    write_tiny_table(
-        _folded_segments_df(spark, layout_path, root, live),
-        f"{tmp}/folded_segments",
-    )
-    gen = next_gen_rel(layout_path)
-    os.rename(tmp, f"{layout_path}/{gen}")
-    commit_current(layout_path, gen)  # THE commit point
-    _gc_staged(layout_path, live)
-    _gc_staged_stats(spark, layout_path)
-    gc_generations(layout_path)
-    return n
+
+
+# --- trigram gram layout -----------------------------------------------------
 
 
 def streaming_trigram_ingest(
@@ -534,87 +607,34 @@ def streaming_trigram_ingest(
     documents — the gram-table twin of :func:`streaming_postings_ingest`,
     and the continuous form of ``text.append_to_trigram_lm_layout``.
 
-    Each micro-batch derives its five gram count tables (delta-linear),
-    hashes them into the layout's FROZEN bucket count, and writes ALL
-    FIVE under one temp segment dir
-    (``{layout}/staged_tmp/seg=<key>/<cnt>/b=<bucket>``), then installs
-    the whole segment with one atomic rename to
-    ``{layout}/staged/seg=<key>`` — so a segment directory that exists
-    always holds five complete, mutually-consistent tables (the old
-    per-table staging could crash with two of five written).  Its
-    window count lands as a seg-tagged row under
-    ``{layout}/staged_stats`` (deduped at read; re-derivable from the
-    segment's c3 sums if the crash ate the append).  The batch readers'
-    LSM merge already sums arbitrary per-segment partial rows, so
-    serving needs no new math — just the staged union
-    (:func:`trigram_heldout_with_staged`); compaction
-    (:func:`compact_staged_trigram`) folds everything into a fully
-    merged new generation."""
-    from pithos_spark.functions.text import (
-        _TRIGRAM_COUNT_TABLES,
-        _trigram_counts,
-        _trigram_windows,
-    )
+    Each micro-batch derives its five gram count tables (delta-linear)
+    and writes ALL FIVE into its one segment through
+    ``text.write_gram_tables`` with the layout's FROZEN bucket count —
+    so an installed segment always holds five complete,
+    mutually-consistent tables (the old per-table staging could crash
+    with two of five written).  Its window count is the segment's
+    stats row (re-derivable from the c3 sums if a crash ate the
+    append).  The readers' LSM merge already sums arbitrary
+    per-segment partial rows, so serving needs no new math
+    (:func:`trigram_heldout_with_staged`); :func:`compact_staged_trigram`
+    folds everything into a fully merged new generation."""
+    from pithos_spark.functions.text import _trigram_windows, write_gram_tables
 
-    token = segment_token(checkpoint)
-
-    def _ingest(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def write_segment(batch_df, _batch_id, tmp):
         root = read_current(layout_path)
-        stats = read_tiny_rows(f"{root}/stats")[0]
-        n_buckets = int(stats["n_buckets"])
-        seg = f"{token}-{batch_id}"
-        tmp = f"{layout_path}/staged_tmp/seg={seg}"
+        n_buckets = int(read_tiny_rows(f"{root}/stats")[0]["n_buckets"])
         tri = _trigram_windows(batch_df).persist()
         try:
             d_total = tri.count()
-            # one exchange per table: partition id == pmod(murmur3(key),
-            # n) == b (see write_trigram_lm_layout); the five writes
-            # land in the TEMP segment dir and install atomically after
-            # all succeed, so overlapping them (guide §2.6) leaves the
-            # crash story unchanged — a partial tmp dir is discarded.
-            def _write_one(key, cnt):
-                (
-                    tri.repartition(n_buckets, F.col(key))
-                    .groupBy(key)
-                    .agg(F.count(F.lit(1)).alias(cnt))
-                    .withColumn(
-                        "b", F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
-                    )
-                    .sortWithinPartitions(key)
-                    .write.mode("overwrite")
-                    .partitionBy("b")
-                    .parquet(f"{tmp}/{cnt}")
-                )
-
-            from pithos_spark.plans.helpers import overlap_jobs
-
-            overlap_jobs(
-                *[
-                    (lambda key=key, cnt=cnt: _write_one(key, cnt))
-                    for key, cnt in _TRIGRAM_COUNT_TABLES
-                ]
-            )
-            install_staged_segment(tmp, f"{layout_path}/staged/seg={seg}")
-            (
-                spark.range(1)
-                .select(
-                    F.lit(int(d_total)).alias("n_total"),
-                    F.lit(seg).alias("seg"),
-                )
-                .write.mode("append")
-                .parquet(f"{layout_path}/staged_stats")
-            )
+            write_gram_tables(tri, n_buckets, tmp)
         finally:
             tri.unpersist()
+        return batch_df.sparkSession.range(1).select(
+            F.lit(int(d_total)).alias("n_total")
+        )
 
-    return (
-        new_lm_documents_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _stage_stream(
+        new_lm_documents_stream, layout_path, checkpoint, write_segment
     )
 
 
@@ -688,9 +708,7 @@ def trigram_heldout_with_staged(
 
     spark = documents.sparkSession
     # resolve the generation ONCE and thread it through both the base
-    # read and the staged mask — two resolutions race a concurrent
-    # fold (segments folded in between would be masked out while their
-    # rows exist only in the newer base; ADVICE r16)
+    # read and the staged mask (ADVICE r16, see _with_staged)
     root = read_current(layout_path)
     counts, n_total, _, n_segments = _load_trigram_layout(
         spark, layout_path, root
@@ -735,7 +753,7 @@ def trigram_segment_stats_with_staged(spark, layout_path: str):
     )
 
     # one resolution for base + staged mask (same race note as
-    # trigram_score_with_staged)
+    # trigram_heldout_with_staged)
     root = read_current(layout_path)
     counts, _, _, _ = _load_trigram_layout(spark, layout_path, root)
     counts = {cnt: df.drop("b") for cnt, df in counts.items()}
@@ -776,88 +794,60 @@ def compact_trigram_if_needed(
 
 
 def compact_staged_trigram(spark, layout_path: str) -> int:
-    """Fold staged gram segments into a fully-MERGED new generation —
-    the same pointer-committed protocol as
-    :func:`compact_staged_postings`, plus a real LSM payoff: the fold
-    groupBy-sums every gram's partial rows (base segments from batch
-    appends included), so the compacted layout is back to one row per
-    gram (``n_segments == 1``) and the readers' merge fast-path
-    re-engages.  Buckets stay frozen (recomputed from the same
-    murmur3 expression, so every gram lands back in its partition and
-    probe pruning is untouched).  Returns the number of staged gram
-    rows folded."""
+    """Fold staged gram segments into a fully-MERGED new generation
+    (:func:`_fold`), with a real LSM payoff: the fold sums every gram's
+    partial rows (base segments from batch appends included), so the
+    compacted layout is back to one row per gram (``n_segments == 1``)
+    and the readers' merge fast-path re-engages.  Buckets stay frozen
+    (``text.write_gram_tables`` recomputes the same murmur3 expression,
+    so every gram lands back in its partition and probe pruning is
+    untouched).  Returns the number of staged gram rows folded."""
     from pithos_spark.functions.text import (
-        _TRIGRAM_COUNT_TABLES,
         _load_trigram_layout,
+        write_gram_stats,
+        write_gram_tables,
     )
 
-    root = read_current(layout_path)
-    live = _live_staged_segs(layout_path, root)
-    if not live:
-        _gc_staged(
-            layout_path, sorted(folded_segment_keys(root))
+    def write_generation(root, live, tmp):
+        counts, n_total, n_buckets, _ = _load_trigram_layout(
+            spark, layout_path, root
         )
-        _gc_staged_stats(spark, layout_path)
-        gc_generations(layout_path)
-        return 0
-    counts, n_total, n_buckets, _ = _load_trigram_layout(
-        spark, layout_path, root
-    )
-    staged = _staged_trigram_tables(spark, layout_path, live)
-    folded = sum(df.count() for df in staged.values())
-    n_total += _staged_trigram_total(spark, layout_path, live)
-
-    tmp = f"{layout_path}/{FOLD_TMP}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # one exchange per table: partition id == pmod(murmur3(key), n)
-    # == b (see write_trigram_lm_layout); the five fold writes land in
-    # FOLD_TMP and commit via one pointer swap after all succeed, so
-    # overlapping them (guide §2.6) leaves crash recovery unchanged.
-    def _fold_one(key, cnt):
-        merged = (
-            counts[cnt]
-            .drop("b")
-            .unionByName(staged[cnt])
-            .repartition(n_buckets, F.col(key))
-            .groupBy(key)
-            .agg(F.sum(cnt).cast("long").alias(cnt))
+        staged = _staged_trigram_tables(spark, layout_path, live)
+        folded = sum(df.count() for df in staged.values())
+        n_total += _staged_trigram_total(spark, layout_path, live)
+        write_gram_tables(
+            {
+                cnt: df.drop("b").unionByName(staged[cnt])
+                for cnt, df in counts.items()
+            },
+            n_buckets,
+            tmp,
         )
-        (
-            merged.withColumn(
-                "b", F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
-            )
-            .sortWithinPartitions(key)
-            .write.mode("overwrite")
-            .partitionBy("b")
-            .parquet(f"{tmp}/{cnt}")
-        )
+        write_gram_stats(spark, f"{tmp}/stats", n_total, n_buckets, 1)
+        return folded
 
-    from pithos_spark.plans.helpers import overlap_jobs
+    return _fold(spark, layout_path, write_generation)
 
-    overlap_jobs(
-        *[
-            (lambda key=key, cnt=cnt: _fold_one(key, cnt))
-            for key, cnt in _TRIGRAM_COUNT_TABLES
-        ]
-    )
-    write_tiny_table(
-        spark.createDataFrame(
-            [(int(n_total), int(n_buckets), 1)],
-            "n_total long, n_buckets int, n_segments int",
-        ),
-        f"{tmp}/stats",
-    )
-    write_tiny_table(
-        _folded_segments_df(spark, layout_path, root, live),
-        f"{tmp}/folded_segments",
-    )
-    gen = next_gen_rel(layout_path)
-    os.rename(tmp, f"{layout_path}/{gen}")
-    commit_current(layout_path, gen)  # THE commit point
-    _gc_staged(layout_path, live)
-    _gc_staged_stats(spark, layout_path)
-    gc_generations(layout_path)
-    return folded
+
+# --- ANN layouts: PQ, residual IVFADC, plain IVF -----------------------------
+
+
+def _frozen_segment(layout_path: str, encode, order):
+    """Segment writer for the ANN layouts: ``encode(spark, batch_df,
+    root)`` assigns / encodes the batch against the live generation's
+    FROZEN artifacts (row-local — the exact delta the batch append
+    writes), written in the layout's row ``order``.  ``cluster`` rides
+    as a plain column in a segment (directory partitioning is the
+    FOLD's job); no stats row — these indexes carry no additive corpus
+    counters, so the segment rows ARE the whole delta."""
+
+    def write_segment(batch_df, _batch_id, tmp):
+        root = read_current(layout_path)
+        assert_not_torn(root)
+        rows = encode(batch_df.sparkSession, batch_df, root)
+        order(rows).write.mode("overwrite").parquet(tmp)
+
+    return write_segment
 
 
 def streaming_pq_index_ingest(
@@ -866,67 +856,37 @@ def streaming_pq_index_ingest(
     checkpoint: str,
 ):
     """Maintain the persisted PQ index from a stream of newly-ingested
-    vectors — the vector twin of :func:`streaming_postings_ingest`,
-    and the replay-safe form of ``similarity.append_to_pq_index``
+    vectors — the replay-safe form of ``similarity.append_to_pq_index``
     (whose bare batch append doubles the delta if an at-least-once
     source retries it — the flaw ``streaming_pq_encode``'s plain sink
-    append documents).
-
-    Each micro-batch encodes its vectors against the index's FROZEN
-    codebooks (an M × K collect per batch — constant-size, the same
-    read the batch append pays), writes the (vec_id, m, code, label)
-    rows COMPLETELY under ``{layout}/staged_tmp/seg=<key>``, and
-    installs them at ``{layout}/staged/seg=<key>`` with one atomic
-    rename — idempotent under replay, no half-visible segment.  No
-    stats row is needed: unlike the lexical layouts the PQ index
-    carries no additive corpus counters (meta is frozen build
-    parameters), so the segment rows ARE the whole delta.
+    append documents).  Each micro-batch is encoded against the
+    index's FROZEN codebooks (``similarity.pq_encode_delta`` — an
+    M × K driver-side read per batch, no Spark job) into one staged
+    segment (:func:`_frozen_segment`).
 
     Serving reads through :func:`pq_topk_with_staged`; fold segments
     into a new generation with :func:`compact_staged_pq`.  Assumes the
     stream carries genuinely new vec_ids (updates go through a
     rebuild) and that codebook drift is handled by periodic retrain,
     as for any frozen production quantizer."""
-    from pithos_spark.functions.similarity import pq_encode
+    from pithos_spark.functions.similarity import order_pq_codes, pq_encode_delta
 
-    token = segment_token(checkpoint)
-
-    def _ingest(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        # frozen codebooks + meta are KB-sized: read driver-side (one
-        # generation resolution, no per-batch Spark jobs — r17)
-        root = read_current(layout_path)
-        assert_not_torn(root)
-        meta = read_tiny_rows(f"{root}/meta")[0]
-        codebooks = {
-            (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{root}/codebooks")
-        }
-        seg = f"{token}-{batch_id}"
-        tmp = f"{layout_path}/staged_tmp/seg={seg}"
-        codes = pq_encode(
-            batch_df,
-            codebooks,
-            int(meta["m_sub"]),
-            int(meta["scale"]),
-            int(meta["dim"]),
-            extra=["label"],  # rides row-locally; re-attach join removed
-        )
-        (
-            codes.repartitionByRange("vec_id", "m")
-            .sortWithinPartitions("vec_id", "m")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        install_staged_segment(tmp, f"{layout_path}/staged/seg={seg}")
-
-    return (
-        new_embeddings_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _stage_stream(
+        new_embeddings_stream,
+        layout_path,
+        checkpoint,
+        _frozen_segment(layout_path, pq_encode_delta, order_pq_codes),
     )
+
+
+def _pq_index_with_staged(spark, layout_path: str):
+    """(base ∪ staged codes, codebooks, meta) under one generation
+    resolution (:func:`_with_staged`)."""
+    from pithos_spark.functions.similarity import load_pq_index
+
+    root = read_current(layout_path)
+    codes, codebooks, meta = load_pq_index(spark, layout_path, root)
+    return _with_staged(spark, layout_path, root, codes), codebooks, meta
 
 
 def pq_topk_with_staged(
@@ -945,21 +905,11 @@ def pq_topk_with_staged(
     arithmetic, unlike the gram layout).  Scale: the staged union adds
     delta-sized scans below the same broadcast LUT join; everything
     else is the serving plan the plain read produces."""
-    from pithos_spark.functions.similarity import (
-        load_pq_index,
-        pq_serve_topk,
-    )
+    from pithos_spark.functions.similarity import pq_serve_topk
 
-    spark = embeddings.sparkSession
-    # one resolution for base + staged mask: resolving CURRENT twice
-    # races a concurrent fold — segments folded between the reads
-    # would be masked while their rows live only in the newer base
-    # (ADVICE r16; bm25_topk_with_staged has always threaded root)
-    root = read_current(layout_path)
-    codes, codebooks, meta = load_pq_index(spark, layout_path, root)
-    live = _live_staged_segs(layout_path, root)
-    if live:
-        codes = codes.unionByName(_staged_rows(spark, layout_path, live))
+    codes, codebooks, meta = _pq_index_with_staged(
+        embeddings.sparkSession, layout_path
+    )
     return pq_serve_topk(
         embeddings,
         codes,
@@ -985,71 +935,31 @@ def pq_batch_topk_with_staged(
     codes) serving a layout with un-folded streamed deltas: the staged
     rows union under the same |Q|-keyed broadcast-LUT plan
     (``similarity._pq_batch_serve``), so each query's rows stay
-    bit-identical to the single-query staged serve.  Same
-    one-generation-resolution contract as :func:`pq_topk_with_staged`."""
-    from pithos_spark.functions.similarity import (
-        _pq_batch_serve,
-        load_pq_index,
-    )
+    bit-identical to the single-query staged serve."""
+    from pithos_spark.functions.similarity import _pq_batch_serve
 
-    spark = embeddings.sparkSession
-    root = read_current(layout_path)
-    codes, codebooks, meta = load_pq_index(spark, layout_path, root)
-    live = _live_staged_segs(layout_path, root)
-    if live:
-        codes = codes.unionByName(_staged_rows(spark, layout_path, live))
+    codes, codebooks, meta = _pq_index_with_staged(
+        embeddings.sparkSession, layout_path
+    )
     return _pq_batch_serve(
         embeddings, codes, codebooks, meta, query_ids, k, rerank
     )
 
 
 def compact_staged_pq(spark, layout_path: str) -> int:
-    """Fold staged code segments into the PQ layout — the same
-    pointer-committed, crash-idempotent protocol as
-    :func:`compact_staged_postings`: a COMPLETE new generation
-    (re-clustered merged codes + copied codebooks/meta + the folded
-    segment keys) under a temp dir, one rename, one atomic CURRENT
-    swap, then pure GC (staged dirs, staged stats, superseded
-    generations).  Code rows are disjoint across segments (new
-    vec_ids), so the fold is file hygiene — restoring the vec_id-range
-    clustering the rerank probe's row-group skipping wants — not a
-    merge.  Returns the number of staged code rows folded."""
-    root = read_current(layout_path)
-    assert_not_torn(root)  # never bake a torn base into a generation
-    live = _live_staged_segs(layout_path, root)
-    if not live:
-        _gc_staged(
-            layout_path, sorted(folded_segment_keys(root))
-        )
-        _gc_staged_stats(spark, layout_path)
-        gc_generations(layout_path)
-        return 0
-    staged = _staged_rows(spark, layout_path, live)
-    n = staged.count()
-    base = spark.read.parquet(f"{root}/codes")
+    """Fold staged code segments into the PQ layout
+    (:func:`_fold_rows`): merged codes in ``order_pq_codes``, codebooks
+    and meta carried forward.  Code rows are disjoint across segments
+    (new vec_ids), so the fold is file hygiene — restoring the
+    vec_id-range clustering the rerank probe's row-group skipping
+    wants — not a merge.  Returns the number of staged code rows
+    folded."""
+    from pithos_spark.functions.similarity import order_pq_codes
 
-    tmp = f"{layout_path}/{FOLD_TMP}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        base.unionByName(staged)
-        .repartitionByRange("vec_id", "m")
-        .sortWithinPartitions("vec_id", "m")
-        .write.mode("overwrite")
-        .parquet(f"{tmp}/codes")
+    return _fold_rows(
+        spark, layout_path, "codes", order_pq_codes,
+        carry=("codebooks", "meta"),
     )
-    write_tiny_table(spark.read.parquet(f"{root}/codebooks"), f"{tmp}/codebooks")
-    write_tiny_table(spark.read.parquet(f"{root}/meta"), f"{tmp}/meta")
-    write_tiny_table(
-        _folded_segments_df(spark, layout_path, root, live),
-        f"{tmp}/folded_segments",
-    )
-    gen = next_gen_rel(layout_path)
-    os.rename(tmp, f"{layout_path}/{gen}")
-    commit_current(layout_path, gen)  # THE commit point
-    _gc_staged(layout_path, live)
-    _gc_staged_stats(spark, layout_path)
-    gc_generations(layout_path)
-    return n
 
 
 def streaming_ivfpq_residual_ingest(
@@ -1058,50 +968,46 @@ def streaming_ivfpq_residual_ingest(
     checkpoint: str,
 ):
     """Maintain the canonical residual-IVFADC serving index from a
-    stream of newly-ingested vectors — the
-    :func:`streaming_pq_index_ingest` twin for the index deployments
-    actually serve, and the replay-safe form of
-    ``similarity.append_to_ivfpq_residual_index``.
-
-    Each micro-batch assigns its vectors to the FROZEN coarse
-    centroids and encodes the residuals against the FROZEN codebooks
-    (``similarity.ivfpq_residual_encode_delta`` — the exact delta
-    encode the batch append uses), writes the (vec_id, m, code,
-    cluster, label) rows COMPLETELY under a temp segment dir, and
-    installs them with one atomic rename.  ``cluster`` rides as a
-    plain column inside the segment (partitioning into directories is
-    the FOLD's job); the staged rows are delta-sized, so serving
-    filters them by row where the base prunes by partition — the same
-    asymmetry as the lexical layouts' staged unions.  No stats row:
-    the index carries no additive corpus counters."""
+    stream of newly-ingested vectors — the replay-safe form of
+    ``similarity.append_to_ivfpq_residual_index``.  Each micro-batch
+    is assigned to the FROZEN coarse centroids and its residuals
+    encoded against the FROZEN codebooks
+    (``similarity.ivfpq_residual_encode_delta``, the batch append's
+    exact encode) into one staged segment (:func:`_frozen_segment`).
+    The staged rows are delta-sized, so serving filters them by row
+    where the base prunes by partition — the same asymmetry as the
+    lexical layouts' staged unions, which the fold deletes."""
     from pithos_spark.functions.similarity import (
         ivfpq_residual_encode_delta,
+        order_residual_codes,
     )
 
-    token = segment_token(checkpoint)
+    return _stage_stream(
+        new_embeddings_stream,
+        layout_path,
+        checkpoint,
+        _frozen_segment(
+            layout_path, ivfpq_residual_encode_delta, order_residual_codes
+        ),
+    )
 
-    def _ingest(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        root = read_current(layout_path)
-        assert_not_torn(root)
-        seg = f"{token}-{batch_id}"
-        tmp = f"{layout_path}/staged_tmp/seg={seg}"
-        codes = ivfpq_residual_encode_delta(spark, batch_df, root)
-        (
-            codes.repartition("cluster")
-            .sortWithinPartitions("vec_id", "m")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        install_staged_segment(tmp, f"{layout_path}/staged/seg={seg}")
 
+def _residual_index_with_staged(spark, layout_path: str):
+    """(base ∪ staged codes, centers, codebooks, meta) of the residual
+    index under one generation resolution (:func:`_with_staged`); the
+    frozen artifacts are driver-side reads."""
+    from pithos_spark.functions.similarity import read_centers, read_codebooks
+
+    root = read_current(layout_path)
+    assert_not_torn(root)
+    codes = _with_staged(
+        spark, layout_path, root, spark.read.parquet(f"{root}/codes")
+    )
     return (
-        new_embeddings_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        codes,
+        read_centers(root),
+        read_codebooks(root),
+        read_tiny_rows(f"{root}/meta")[0],
     )
 
 
@@ -1126,16 +1032,9 @@ def ivfpq_residual_topk_with_staged(
         _quantized,
     )
 
-    spark = embeddings.sparkSession
-    root = read_current(layout_path)
-    assert_not_torn(root)
-    meta = read_tiny_rows(f"{root}/meta")[0]
-    codes = spark.read.parquet(f"{root}/codes")
-    # reuse the root resolved above — a second resolution races a
-    # concurrent fold (ADVICE r16, see pq_topk_with_staged)
-    live = _live_staged_segs(layout_path, root)
-    if live:
-        codes = codes.unionByName(_staged_rows(spark, layout_path, live))
+    codes, centers, codebooks, meta = _residual_index_with_staged(
+        embeddings.sparkSession, layout_path
+    )
     qv = embeddings.select(
         "vec_id",
         "label",
@@ -1144,14 +1043,8 @@ def ivfpq_residual_topk_with_staged(
     return _ivfpq_residual_serve(
         qv,
         codes,
-        {
-            int(r["cluster"]): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{root}/centers")
-        },
-        {
-            (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{root}/codebooks")
-        },
+        centers,
+        codebooks,
         query_vec_id,
         k,
         n_probe,
@@ -1161,52 +1054,46 @@ def ivfpq_residual_topk_with_staged(
     )
 
 
-def compact_staged_ivfpq_residual(spark, layout_path: str) -> int:
-    """Fold staged residual-code segments into a new generation — the
-    :func:`compact_staged_pq` protocol with the cluster partitioning
-    restored on the way through (the fold's payoff here: staged rows
-    served by row filter go back to directory-pruned reads).  Returns
-    the number of staged code rows folded."""
-    root = read_current(layout_path)
-    assert_not_torn(root)
-    live = _live_staged_segs(layout_path, root)
-    if not live:
-        _gc_staged(
-            layout_path, sorted(folded_segment_keys(root))
-        )
-        _gc_staged_stats(spark, layout_path)
-        gc_generations(layout_path)
-        return 0
-    staged = _staged_rows(spark, layout_path, live)
-    n = staged.count()
-    base = spark.read.parquet(f"{root}/codes")
+def ivfpq_residual_batch_with_staged(
+    embeddings,
+    layout_path: str,
+    query_ids: list,
+    k: int = 10,
+    n_probe: int = 2,
+    rerank: int = 4,
+):
+    """Batched residual-IVFADC over base + staged code segments — the
+    canonical index's query-stream shape with un-folded streamed
+    deltas: staged rows (cluster as a column) union under the same
+    per-query probe / |Q|-keyed residual-LUT / exact-rerank plan
+    (``similarity._ivfpq_residual_batch_serve``).  The probe join
+    filters staged rows by value where the base prunes by partition —
+    the usual delta-sized asymmetry the fold deletes."""
+    from pithos_spark.functions.similarity import (
+        _ivfpq_residual_batch_serve,
+    )
 
-    tmp = f"{layout_path}/{FOLD_TMP}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        base.unionByName(staged)
-        .repartition("cluster")
-        .sortWithinPartitions("vec_id", "m")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(f"{tmp}/codes")
+    codes, centers, codebooks, meta = _residual_index_with_staged(
+        embeddings.sparkSession, layout_path
     )
-    write_tiny_table(spark.read.parquet(f"{root}/centers"), f"{tmp}/centers")
-    write_tiny_table(
-        spark.read.parquet(f"{root}/codebooks"), f"{tmp}/codebooks"
+    return _ivfpq_residual_batch_serve(
+        embeddings, codes, centers, codebooks, meta, query_ids, k, n_probe,
+        rerank,
     )
-    write_tiny_table(spark.read.parquet(f"{root}/meta"), f"{tmp}/meta")
-    write_tiny_table(
-        _folded_segments_df(spark, layout_path, root, live),
-        f"{tmp}/folded_segments",
+
+
+def compact_staged_ivfpq_residual(spark, layout_path: str) -> int:
+    """Fold staged residual-code segments into a new generation
+    (:func:`_fold_rows`) with the cluster partitioning restored on the
+    way through (the fold's payoff here: staged rows served by row
+    filter go back to directory-pruned reads).  Returns the number of
+    staged code rows folded."""
+    from pithos_spark.functions.similarity import order_residual_codes
+
+    return _fold_rows(
+        spark, layout_path, "codes", order_residual_codes,
+        partition_by="cluster", carry=("centers", "codebooks", "meta"),
     )
-    gen = next_gen_rel(layout_path)
-    os.rename(tmp, f"{layout_path}/{gen}")
-    commit_current(layout_path, gen)  # THE commit point
-    _gc_staged(layout_path, live)
-    _gc_staged_stats(spark, layout_path)
-    gc_generations(layout_path)
-    return n
 
 
 def streaming_ivf_ingest(
@@ -1216,70 +1103,42 @@ def streaming_ivf_ingest(
 ):
     """Maintain the persisted plain-IVF index (full embedding rows
     partitioned by trained cluster — the SemDeDup sweep's input) from
-    a stream of newly-ingested vectors: the last persisted ANN layout
-    to get the staged lifecycle (VERDICT r16 task 4 — PQ and
-    residual-IVFADC got theirs in r16), and the replay-safe form of
+    a stream of newly-ingested vectors: the replay-safe form of
     ``similarity.append_to_ivf_index`` (whose bare batch append
-    doubles the delta if an at-least-once source retries it).
-
-    Each micro-batch assigns its vectors to the live generation's
-    FROZEN centers (``similarity.ivf_assign_delta`` — row-local, the
-    exact assignment the batch append writes), writes the (vec_id,
-    label, embedding, cluster) rows COMPLETELY under a temp segment
-    dir, and installs them with one atomic rename.  ``cluster`` rides
-    as a plain column inside the segment (directory partitioning is
-    the FOLD's job); no stats row — the index carries no additive
-    corpus counters.  Serving reads through
+    doubles the delta if an at-least-once source retries it; VERDICT
+    r16 task 4).  Each micro-batch is assigned to the live
+    generation's FROZEN centers (``similarity.ivf_assign_delta``, the
+    batch append's exact assignment) into one staged segment
+    (:func:`_frozen_segment`).  Serving reads through
     :func:`ivf_assigned_with_staged` /
     :func:`semantic_dedup_pairs_with_staged`; fold with
     :func:`compact_staged_ivf`."""
-    from pithos_spark.functions.similarity import ivf_assign_delta
+    from pithos_spark.functions.similarity import (
+        ivf_assign_delta,
+        order_ivf_assigned,
+    )
 
-    token = segment_token(checkpoint)
-
-    def _ingest(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        root = read_current(layout_path)
-        assert_not_torn(root)
-        seg = f"{token}-{batch_id}"
-        tmp = f"{layout_path}/staged_tmp/seg={seg}"
-        assigned = ivf_assign_delta(spark, batch_df, root)
-        (
-            assigned.repartition("cluster")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        install_staged_segment(tmp, f"{layout_path}/staged/seg={seg}")
-
-    return (
-        new_embeddings_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _stage_stream(
+        new_embeddings_stream,
+        layout_path,
+        checkpoint,
+        _frozen_segment(layout_path, ivf_assign_delta, order_ivf_assigned),
     )
 
 
 def ivf_assigned_with_staged(spark, layout_path: str):
     """THE staged-aware plain-IVF reader: (assigned base ∪ live staged
-    segments, centers) — one generation resolution threaded through
-    both the base read and the staged mask (the
-    fold-between-two-resolutions race, ADVICE r16).  Every plain-IVF
-    consumer (probe, SemDeDup sweep) takes the assigned table + the
-    centers, so this pair IS the staged serving surface; staged rows
-    are filtered by row where the base prunes by cluster partition —
-    the same delta-sized asymmetry as the other staged unions, which
-    the fold deletes."""
+    segments, centers) under one generation resolution
+    (:func:`_with_staged`).  Every plain-IVF consumer (probe, SemDeDup
+    sweep) takes the assigned table + the centers, so this pair IS the
+    staged serving surface; staged rows are filtered by row where the
+    base prunes by cluster partition — the delta-sized asymmetry the
+    fold deletes."""
     from pithos_spark.functions.similarity import load_ivf_index
 
     root = read_current(layout_path)
     assigned, centers = load_ivf_index(spark, layout_path, root)
-    live = _live_staged_segs(layout_path, root)
-    if live:
-        assigned = assigned.unionByName(_staged_rows(spark, layout_path, live))
-    return assigned, centers
+    return _with_staged(spark, layout_path, root, assigned), centers
 
 
 def ivf_topk_with_staged(
@@ -1328,49 +1187,16 @@ def semantic_dedup_pairs_with_staged(
     return _semantic_pairs_from_assigned(assigned, threshold_q, max_cluster)
 
 
-def ivfpq_residual_batch_with_staged(
-    embeddings,
-    layout_path: str,
-    query_ids: list,
-    k: int = 10,
-    n_probe: int = 2,
-    rerank: int = 4,
-):
-    """Batched residual-IVFADC over base + staged code segments — the
-    canonical index's query-stream shape with un-folded streamed
-    deltas: staged rows (cluster as a column) union under the same
-    per-query probe / |Q|-keyed residual-LUT / exact-rerank plan
-    (``similarity._ivfpq_residual_batch_serve``).  The probe join
-    filters staged rows by value where the base prunes by partition —
-    the usual delta-sized asymmetry the fold deletes."""
-    from pithos_spark.functions.similarity import (
-        _ivfpq_residual_batch_serve,
-    )
+def compact_staged_ivf(spark, layout_path: str) -> int:
+    """Fold staged assignment segments into a new plain-IVF generation
+    (:func:`_fold_rows`), restoring the cluster directory partitioning
+    so probe reads go back to partition pruning.  Returns the number
+    of staged assignment rows folded."""
+    from pithos_spark.functions.similarity import order_ivf_assigned
 
-    spark = embeddings.sparkSession
-    root = read_current(layout_path)
-    assert_not_torn(root)
-    meta = read_tiny_rows(f"{root}/meta")[0]
-    codes = spark.read.parquet(f"{root}/codes")
-    live = _live_staged_segs(layout_path, root)
-    if live:
-        codes = codes.unionByName(_staged_rows(spark, layout_path, live))
-    return _ivfpq_residual_batch_serve(
-        embeddings,
-        codes,
-        {
-            int(r["cluster"]): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{root}/centers")
-        },
-        {
-            (int(r["m"]), int(r["code"])): [int(v) for v in r["centroid_q"]]
-            for r in read_tiny_rows(f"{root}/codebooks")
-        },
-        meta,
-        query_ids,
-        k,
-        n_probe,
-        rerank,
+    return _fold_rows(
+        spark, layout_path, "assigned", order_ivf_assigned,
+        partition_by="cluster", carry=("centers", "meta"),
     )
 
 
@@ -1386,29 +1212,12 @@ COMPACT_ANN_WHEN_SEGMENTS = 4
 def ann_staged_stats(spark, layout_path: str):
     """Staged-state telemetry for an ANN layout — the readout the
     :data:`COMPACT_ANN_WHEN_SEGMENTS` policy acts on, playing the role
-    ``trigram_segment_stats_with_staged`` plays for the gram layout
-    (every other blocking/layout strategy ships its sizing report;
-    until r17 the ANN staged state had only the policy bool).  One row
-    per LIVE staged segment with its row count, plus the segment total
-    and the fold-due verdict; layout-agnostic (PQ code rows, residual
-    code rows, or plain-IVF assignment rows alike).  Cost: one
-    aggregation over the delta-sized segments; empty layout -> empty
-    report."""
-    root = read_current(layout_path)
-    live = _live_staged_segs(layout_path, root)
-    schema = "seg string, rows long, n_live_segments int, fold_due boolean"
-    if not live:
-        return spark.createDataFrame([], schema)
-    staged = _staged_segments_attributed(spark, layout_path, live)
-    return (
-        staged.groupBy("seg")
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .withColumn("n_live_segments", F.lit(len(live)))
-        .withColumn(
-            "fold_due", F.lit(len(live) >= COMPACT_ANN_WHEN_SEGMENTS)
-        )
-        .orderBy("seg")
-    )
+    ``trigram_segment_stats_with_staged`` plays for the gram layout.
+    One row per LIVE staged segment with its row count, plus the
+    segment total and the fold-due verdict (:func:`_staged_stats`);
+    layout-agnostic (PQ code rows, residual code rows, or plain-IVF
+    assignment rows alike)."""
+    return _staged_stats(spark, layout_path, COMPACT_ANN_WHEN_SEGMENTS)
 
 
 def ann_fold_due(
@@ -1432,9 +1241,7 @@ def compact_staged_pq_if_needed(
     """The SCALE_r17 ANN compaction policy as code, PQ form: fold iff
     ``min_segments`` staged segments are live.  Returns rows folded
     (0 = below threshold)."""
-    if not ann_fold_due(spark, layout_path, min_segments):
-        return 0
-    return compact_staged_pq(spark, layout_path)
+    return _fold_if_due(spark, layout_path, min_segments, compact_staged_pq)
 
 
 def compact_staged_ivfpq_residual_if_needed(
@@ -1444,9 +1251,9 @@ def compact_staged_ivfpq_residual_if_needed(
 ) -> int:
     """:func:`compact_staged_pq_if_needed` for the canonical residual
     index."""
-    if not ann_fold_due(spark, layout_path, min_segments):
-        return 0
-    return compact_staged_ivfpq_residual(spark, layout_path)
+    return _fold_if_due(
+        spark, layout_path, min_segments, compact_staged_ivfpq_residual
+    )
 
 
 def compact_staged_ivf_if_needed(
@@ -1455,56 +1262,7 @@ def compact_staged_ivf_if_needed(
     min_segments: int = COMPACT_ANN_WHEN_SEGMENTS,
 ) -> int:
     """:func:`compact_staged_pq_if_needed` for the plain-IVF index."""
-    if not ann_fold_due(spark, layout_path, min_segments):
-        return 0
-    return compact_staged_ivf(spark, layout_path)
-
-
-def compact_staged_ivf(spark, layout_path: str) -> int:
-    """Fold staged assignment segments into a new plain-IVF generation
-    — the :func:`compact_staged_ivfpq_residual` protocol verbatim
-    (complete generation under a temp dir, one rename, one atomic
-    CURRENT swap, pure GC), restoring the cluster directory
-    partitioning on the way through so probe reads go back to
-    partition pruning.  Returns the number of staged assignment rows
-    folded."""
-    root = read_current(layout_path)
-    assert_not_torn(root)
-    live = _live_staged_segs(layout_path, root)
-    if not live:
-        _gc_staged(
-            layout_path, sorted(folded_segment_keys(root))
-        )
-        _gc_staged_stats(spark, layout_path)
-        gc_generations(layout_path)
-        return 0
-    staged = _staged_rows(spark, layout_path, live)
-    n = staged.count()
-    base = spark.read.parquet(f"{root}/assigned")
-
-    tmp = f"{layout_path}/{FOLD_TMP}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        base.unionByName(staged)
-        .repartition("cluster")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(f"{tmp}/assigned")
-    )
-    write_tiny_table(spark.read.parquet(f"{root}/centers"), f"{tmp}/centers")
-    write_tiny_table(spark.read.parquet(f"{root}/meta"), f"{tmp}/meta")
-    write_tiny_table(
-        _folded_segments_df(spark, layout_path, root, live),
-        f"{tmp}/folded_segments",
-    )
-    gen = next_gen_rel(layout_path)
-    os.rename(tmp, f"{layout_path}/{gen}")
-    commit_current(layout_path, gen)  # THE commit point
-    _gc_staged(layout_path, live)
-    _gc_staged_stats(spark, layout_path)
-    gc_generations(layout_path)
-    return n
+    return _fold_if_due(spark, layout_path, min_segments, compact_staged_ivf)
 
 
 # --- LSM lifecycle for the OBJECTS listing layout (r17) ---------------------
@@ -1552,19 +1310,14 @@ def streaming_objects_ingest(
     ``_tombstone`` column (True = delete this (bucket, object)).  Each
     micro-batch stamps its rows with ``_seq`` = batch id (precedence,
     valid for the checkpoint's lifetime) and installs them as one
-    idempotent staged segment — at-least-once replays find the segment
-    already installed, so a retried PUT/DELETE batch can never
-    double-apply.  A key must appear at most once per batch (the S3
-    API's per-request atomicity unit).  Serving reads through
-    :func:`objects_with_staged` / :func:`list_objects_with_staged`;
-    fold with :func:`compact_staged_objects`."""
-    token = segment_token(checkpoint)
+    idempotent staged segment (:func:`_stage_stream`) — so a retried
+    PUT/DELETE batch can never double-apply.  A key must appear at
+    most once per batch (the S3 API's per-request atomicity unit).
+    Serving reads through :func:`objects_with_staged` /
+    :func:`list_objects_with_staged`; fold with
+    :func:`compact_staged_objects`."""
 
-    def _ingest(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        seg = f"{token}-{batch_id}"
-        tmp = f"{layout_path}/staged_tmp/seg={seg}"
+    def write_segment(batch_df, batch_id, tmp):
         (
             batch_df.withColumn(
                 OBJECTS_SEQ, F.lit(int(batch_id)).cast("long")
@@ -1574,51 +1327,48 @@ def streaming_objects_ingest(
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        install_staged_segment(tmp, f"{layout_path}/staged/seg={seg}")
 
+    return _stage_stream(mutation_stream, layout_path, checkpoint, write_segment)
+
+
+def _objects_merge(base, staged):
+    """THE last-write-wins merge of base ∪ staged mutation rows, shared
+    by serving and the fold: per (bucket, object) the highest ``_seq``
+    wins (the base reads as seq -1), and tombstones are dropped after
+    the merge so a delete shadows every older version.
+
+    Scale: the window partitions by (bucket, object), and a listing's
+    bucket/key-range predicates push below it (bucket is a window
+    partition key), so a single listing merges one bucket's key range
+    — base rows arrive partition-pruned and row-group-skipped exactly
+    as in the plain read, staged rows are delta-sized."""
+    from pyspark.sql import Window
+
+    base = base.withColumn(OBJECTS_TOMBSTONE, F.lit(False)).withColumn(
+        OBJECTS_SEQ, F.lit(-1).cast("long")
+    )
+    w = Window.partitionBy("bucket", "object").orderBy(
+        F.col(OBJECTS_SEQ).desc()
+    )
     return (
-        mutation_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        base.unionByName(staged.select(*base.columns))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") == 1) & (~F.col(OBJECTS_TOMBSTONE)))
+        .drop("_rn", OBJECTS_SEQ, OBJECTS_TOMBSTONE)
     )
 
 
 def objects_with_staged(spark, layout_path: str):
-    """The merged LSM view of the objects layout: base ∪ live staged
-    segments, last-write-wins per (bucket, object) (``_seq`` desc; the
-    base reads as seq -1), tombstones dropped after the merge so a
-    delete shadows every older version.  With no staged segments this
-    IS the base read — zero merge tax on a folded layout.
-
-    Scale: the merge window partitions by (bucket, object), and a
-    listing's bucket/key-range predicates push below the window
-    (bucket is a window partition key), so a single listing merges one
-    bucket's key range — base rows arrive partition-pruned and
-    row-group-skipped exactly as in the plain read, staged rows are
-    delta-sized."""
-    from pyspark.sql import Window
-
+    """The merged LSM view of the objects layout (:func:`_objects_merge`
+    over base ∪ live staged segments).  With no staged segments this
+    IS the base read — zero merge tax on a folded layout."""
     root = read_current(layout_path)
     assert_not_torn(root)
     base = spark.read.parquet(f"{root}/objects")
     live = _live_staged_segs(layout_path, root)
     if not live:
         return base
-    base = base.withColumn(OBJECTS_TOMBSTONE, F.lit(False)).withColumn(
-        OBJECTS_SEQ, F.lit(-1).cast("long")
-    )
-    merged = base.unionByName(
-        _staged_rows(spark, layout_path, live).select(*base.columns)
-    )
-    w = Window.partitionBy("bucket", "object").orderBy(
-        F.col(OBJECTS_SEQ).desc()
-    )
-    return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (~F.col(OBJECTS_TOMBSTONE)))
-        .drop("_rn", OBJECTS_SEQ, OBJECTS_TOMBSTONE)
-    )
+    return _objects_merge(base, _staged_rows(spark, layout_path, live))
 
 
 def list_objects_with_staged(
@@ -1646,57 +1396,22 @@ def list_objects_with_staged(
 
 
 def compact_staged_objects(spark, layout_path: str) -> int:
-    """Fold the staged mutation segments into a new generation: the
-    merged last-write-wins state (tombstones physically dropped —
-    the LSM major compaction reclaiming deleted keys) rewritten in the
-    base's bucket-partitioned, key-range-sorted listing shape, behind
-    the usual pointer commit + GC.  Returns the number of staged
-    mutation rows folded."""
-    from pyspark.sql import Window
-
+    """Fold the staged mutation segments into a new generation
+    (:func:`_fold`): the merged last-write-wins state (tombstones
+    physically dropped — the LSM major compaction reclaiming deleted
+    keys) rewritten in the base's bucket-partitioned, key-range-sorted
+    listing shape.  Returns the number of staged mutation rows
+    folded."""
     from pithos_spark.sources.store import write_objects_layout
 
-    root = read_current(layout_path)
-    assert_not_torn(root)
-    live = _live_staged_segs(layout_path, root)
-    if not live:
-        _gc_staged(
-            layout_path, sorted(folded_segment_keys(root))
-        )
-        _gc_staged_stats(spark, layout_path)
-        gc_generations(layout_path)
-        return 0
-    staged = _staged_rows(spark, layout_path, live)
-    n = staged.count()
-    base = (
-        spark.read.parquet(f"{root}/objects")
-        .withColumn(OBJECTS_TOMBSTONE, F.lit(False))
-        .withColumn(OBJECTS_SEQ, F.lit(-1).cast("long"))
-    )
-    w = Window.partitionBy("bucket", "object").orderBy(
-        F.col(OBJECTS_SEQ).desc()
-    )
-    merged = (
-        base.unionByName(staged.select(*base.columns))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (~F.col(OBJECTS_TOMBSTONE)))
-        .drop("_rn", OBJECTS_SEQ, OBJECTS_TOMBSTONE)
-    )
+    def write_generation(root, live, tmp):
+        staged = _staged_rows(spark, layout_path, live)
+        n = staged.count()
+        base = spark.read.parquet(f"{root}/objects")
+        write_objects_layout(_objects_merge(base, staged), f"{tmp}/objects")
+        return n
 
-    tmp = f"{layout_path}/{FOLD_TMP}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_objects_layout(merged, f"{tmp}/objects")
-    write_tiny_table(
-        _folded_segments_df(spark, layout_path, root, live),
-        f"{tmp}/folded_segments",
-    )
-    gen = next_gen_rel(layout_path)
-    os.rename(tmp, f"{layout_path}/{gen}")
-    commit_current(layout_path, gen)  # THE commit point
-    _gc_staged(layout_path, live)
-    _gc_staged_stats(spark, layout_path)
-    gc_generations(layout_path)
-    return n
+    return _fold(spark, layout_path, write_generation)
 
 
 # The objects fold trigger shares the ANN rationale — since the
@@ -1712,34 +1427,15 @@ COMPACT_OBJECTS_WHEN_SEGMENTS = 4
 
 def objects_staged_stats(spark, layout_path: str):
     """Staged-state telemetry for the objects LSM layout —
-    :func:`ann_staged_stats`'s role for the listing lifecycle.  One
-    row per LIVE staged mutation segment: its mutation row count, how
-    many of those are tombstones (the reclaim debt the next fold
-    pays), plus the live-segment total and the fold-due verdict.
-    Cost: one aggregation over the delta-sized segments."""
-    root = read_current(layout_path)
-    live = _live_staged_segs(layout_path, root)
-    schema = (
-        "seg string, rows long, tombstones long, "
-        "n_live_segments int, fold_due boolean"
-    )
-    if not live:
-        return spark.createDataFrame([], schema)
-    staged = _staged_segments_attributed(spark, layout_path, live)
-    return (
-        staged.groupBy("seg")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col(OBJECTS_TOMBSTONE).cast("long")).alias(
-                "tombstones"
-            ),
-        )
-        .withColumn("n_live_segments", F.lit(len(live)))
-        .withColumn(
-            "fold_due",
-            F.lit(len(live) >= COMPACT_OBJECTS_WHEN_SEGMENTS),
-        )
-        .orderBy("seg")
+    :func:`ann_staged_stats`'s role for the listing lifecycle, plus
+    each segment's tombstone count (the reclaim debt the next fold
+    pays)."""
+    return _staged_stats(
+        spark,
+        layout_path,
+        COMPACT_OBJECTS_WHEN_SEGMENTS,
+        "tombstones long, ",
+        F.sum(F.col(OBJECTS_TOMBSTONE).cast("long")).alias("tombstones"),
     )
 
 
@@ -1763,6 +1459,6 @@ def compact_staged_objects_if_needed(
     """The objects-LSM compaction policy as code: fold iff
     ``min_segments`` staged mutation segments are live.  Returns
     mutation rows folded (0 = below threshold)."""
-    if not objects_fold_due(spark, layout_path, min_segments):
-        return 0
-    return compact_staged_objects(spark, layout_path)
+    return _fold_if_due(
+        spark, layout_path, min_segments, compact_staged_objects
+    )
