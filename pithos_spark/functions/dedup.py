@@ -1493,21 +1493,6 @@ def _image_dhash_wide(documents: DataFrame) -> DataFrame:
     )
 
 
-def image_dhash_fingerprints_assets(assets: DataFrame) -> DataFrame:
-    """dHash bands over the multimodal asset table with a REAL pixel
-    source: image assets flow through
-    :func:`~pithos_spark.sources.multimodal.sampled_pixel_grid` — PIL
-    (or the stdlib PNG pixel decoder) nearest-neighbor-downsamples
-    decodable payloads to the 8x9 grayscale grid (``decoded=true``),
-    undecodable payloads take the deterministic ASCII stand-in,
-    value-identical to :func:`image_dhash_fingerprints` (which stays
-    the oracle-checkable twin: on a corpus with no decodable media the
-    two produce THE SAME fingerprints, tested).  Everything downstream
-    of the pixel source is the shared :func:`_grad_band_cols` /
-    :func:`_banded_hamming_pairs` machinery — VERDICT r10 task 2."""
-    return _wide_to_long(_image_dhash_assets_wide(assets), _DHASH_ROWS)
-
-
 def _image_dhash_assets_wide(assets: DataFrame) -> DataFrame:
     """Wide (doc_id, b0..b7) dHash over the REAL decoded grid: the
     decoder emits one array<long> row per asset, the band packing is a
@@ -1909,16 +1894,6 @@ def _afp_wide_stub(documents: DataFrame) -> DataFrame:
         (F.col("doc_id") % 3 == 1) & (F.length("text") > 0)
     ).select("doc_id", "text", F.length("text").alias("n_px"))
     return clips.select("doc_id", *_afp_band_cols(_stub_px_cols(grid)))
-
-
-def audio_fingerprints_assets(assets: DataFrame) -> DataFrame:
-    """Haitsma-Kalker bands over the multimodal asset table with a REAL
-    sample source: audio assets flow through ``sampled_pixel_grid`` —
-    decodable 16-bit PCM WAV payloads yield |amplitude| samples
-    (``decoded=true``), everything else the ASCII stand-in identical to
-    :func:`audio_fingerprints` (the oracle twin).  Downstream framing /
-    energy / difference bits are the shared :func:`_afp_band_cols`."""
-    return _wide_to_long(_afp_assets_wide(assets), _AFP_BANDS)
 
 
 def _afp_assets_wide(assets: DataFrame) -> DataFrame:

@@ -53,8 +53,8 @@ FOLD_GEN_PREFIX = "fold_gen_"
 
 
 def write_tiny_table(df, path: str, mode: str = "overwrite") -> None:
-    """Write a driver-built tiny table (1-row stats, K-row codebooks,
-    folded-batch lists) as a single file.
+    """Write a driver-built tiny table (1-row stats, K-row codebooks)
+    as a single file.
 
     ALWAYS use this instead of spelling the write out:
     ``coalesce(1)`` on a ``createDataFrame`` local relation collapses
@@ -83,6 +83,23 @@ def read_tiny_rows(path: str) -> list[dict]:
     import pyarrow.parquet as papq
 
     return papq.read_table(path).to_pylist()
+
+
+def parquet_rows(dirs) -> int:
+    """Rows in every parquet file under ``dirs`` (recursively), summed
+    from the file footers on the driver: a staged segment's or a fold's
+    row count without a Spark job.  Underscore- and dot-prefixed files
+    (``_SUCCESS``, checksums) are skipped, as Spark skips them."""
+    import pyarrow.parquet as papq
+
+    n = 0
+    for d in dirs:
+        for root, _dirs, files in os.walk(d):
+            for f in files:
+                if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                    meta = papq.ParquetFile(os.path.join(root, f)).metadata
+                    n += meta.num_rows
+    return n
 
 
 def read_current(layout_path: str) -> str:
@@ -211,6 +228,21 @@ def folded_segment_keys(gen_root: str) -> set[str]:
     if not os.path.isdir(d):
         return set()
     return {str(r["seg"]) for r in read_tiny_rows(d)}
+
+
+def write_folded_segments(gen_dir: str, keys) -> None:
+    """Write a generation's ``folded_segments`` mask on the driver
+    (pyarrow, one file, no Spark job) — the form
+    :func:`folded_segment_keys` reads it in."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    d = os.path.join(gen_dir, "folded_segments")
+    os.makedirs(d, exist_ok=True)
+    papq.write_table(
+        pa.table({"seg": pa.array(sorted(keys), pa.string())}),
+        os.path.join(d, "part-00000.parquet"),
+    )
 
 
 def gc_generations(layout_path: str) -> int:

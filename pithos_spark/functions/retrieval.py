@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 IDF_SCALE = 10_000
 NORM_SCALE = 1_000
@@ -150,13 +151,28 @@ def build_postings(documents: DataFrame) -> DataFrame:
     )
 
 
+# The postings table's physical format, declared once (base, staged
+# segment and fold are read with it, so no read infers it), and its
+# sort key.
+POSTINGS_SCHEMA = StructType(
+    [
+        StructField("term", StringType()),
+        StructField("doc_id", LongType()),
+        StructField("dl", LongType()),
+        StructField("tf", LongType()),
+    ]
+)
+POSTINGS_KEY = ("term", "doc_id")
+
+
 def order_postings(postings: DataFrame) -> DataFrame:
-    """Row order of the postings table — build, batch append, staged
-    segment and fold: hash-clustered on term, sorted by (term, doc_id)
-    within files, so a pushed ``term IN (...)`` filter skips row
-    groups inside every file (see write_postings_layout's r14 note on
-    why hash, not range)."""
-    return postings.repartition("term").sortWithinPartitions("term", "doc_id")
+    """Row order of the postings table — build, batch append and fold:
+    hash-clustered on term, sorted by :data:`POSTINGS_KEY` within
+    files, so a pushed ``term IN (...)`` filter skips row groups inside
+    every file (see write_postings_layout's r14 note on why hash, not
+    range).  A delta-sized staged segment only sorts within its own
+    partitions."""
+    return postings.repartition("term").sortWithinPartitions(*POSTINGS_KEY)
 
 
 def write_postings_stats(spark, path: str, n_docs: int, total_len: int) -> None:
@@ -302,8 +318,10 @@ def bm25_topk_from_postings(
 
     root = read_current(path)
     assert_not_torn(root)
-    post = spark.read.parquet(f"{root}/postings").filter(
-        F.col("term").isin(list(terms))
+    post = (
+        spark.read.schema(POSTINGS_SCHEMA)
+        .parquet(f"{root}/postings")
+        .filter(F.col("term").isin(list(terms)))
     )
     stats = spark.read.parquet(f"{root}/stats")
     df_per_term = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

@@ -23,6 +23,14 @@ from __future__ import annotations
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from pithos_spark.functions.dedup import portable_hash60, portable_hash60_sql
 from pithos_spark.functions.layoutcommit import (
@@ -960,11 +968,27 @@ def read_codebooks(root: str) -> dict[tuple[int, int], list[int]]:
     }
 
 
+# The plain-IVF assignment rows as a staged segment and a fold write
+# them (the Lloyd build's column order; cluster is the fold's partition
+# column, so it comes last), and their within-file sort key.
+IVF_ASSIGNED_SCHEMA = StructType(
+    [
+        StructField("vec_id", LongType()),
+        StructField("label", IntegerType()),
+        StructField("embedding", ArrayType(FloatType())),
+        StructField("cluster", IntegerType()),
+    ]
+)
+IVF_ASSIGNED_KEY = ("vec_id",)
+
+
 def order_ivf_assigned(assigned: DataFrame) -> DataFrame:
-    """Row order of the plain-IVF assignment rows in a staged segment
-    and a fold (the fold adds the cluster directory partitioning):
-    clustered on cluster, sorted by vec_id within files."""
-    return assigned.repartition("cluster").sortWithinPartitions("vec_id")
+    """Row order of the plain-IVF assignment rows in a fold (the fold
+    adds the cluster directory partitioning): clustered on cluster,
+    sorted by :data:`IVF_ASSIGNED_KEY` within files."""
+    return assigned.repartition("cluster").sortWithinPartitions(
+        *IVF_ASSIGNED_KEY
+    )
 
 
 def save_ivf_index(
@@ -1123,15 +1147,6 @@ def load_ivf_index(
 
 
 # --- deterministic Lloyd IVF (engine-exact trained quantizer) --------------
-
-
-def _lloyd_l2(q: F.Column, center: list[int]) -> F.Column:
-    lit_c = F.array(*[F.lit(int(v)).cast("long") for v in center])
-    return F.aggregate(
-        F.zip_with(q, lit_c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
 
 
 def _lloyd_assign(qv: DataFrame, centers: dict[int, list[int]]) -> F.Column:
@@ -1949,13 +1964,29 @@ def pq_serve_topk(
     )
 
 
+# The PQ code table's physical format, declared once: every read of a
+# base, staged segment or fold passes this schema, so no read runs a
+# schema-inference job; PQ_CODES_KEY is its sort key.
+PQ_CODES_SCHEMA = StructType(
+    [
+        StructField("vec_id", LongType()),
+        StructField("label", IntegerType()),
+        StructField("m", IntegerType()),
+        StructField("code", IntegerType()),
+    ]
+)
+PQ_CODES_KEY = ("vec_id", "m")
+
+
 def order_pq_codes(codes: DataFrame) -> DataFrame:
-    """Row order of the PQ code table — build, batch append, staged
-    segment and fold: range-partitioned and sorted on (vec_id, m), so
-    the rerank probe's ``vec_id IN (...)`` and the anti-query filter
-    skip row groups and a vector's M rows sit together."""
-    return codes.repartitionByRange("vec_id", "m").sortWithinPartitions(
-        "vec_id", "m"
+    """Row order of the PQ code table — build, batch append and fold:
+    range-partitioned and sorted on :data:`PQ_CODES_KEY`, so the rerank
+    probe's ``vec_id IN (...)`` and the anti-query filter skip row
+    groups and a vector's M rows sit together.  A delta-sized staged
+    segment sorts on the key within its own partitions only (no range
+    sample, no shuffle); the fold restores the range clustering."""
+    return codes.repartitionByRange(*PQ_CODES_KEY).sortWithinPartitions(
+        *PQ_CODES_KEY
     )
 
 
@@ -2053,7 +2084,7 @@ def load_pq_index(spark, path: str, root: str | None = None):
     # the driver, so a distributed codebook scan per serve bought
     # nothing but a job).  Same parquet bytes, same values.
     return (
-        spark.read.parquet(f"{root}/codes"),
+        spark.read.schema(PQ_CODES_SCHEMA).parquet(f"{root}/codes"),
         read_codebooks(root),
         read_tiny_rows(f"{root}/meta")[0],
     )
@@ -2883,13 +2914,21 @@ def _ivfpq_residual_serve(
     )
 
 
+# The residual-IVFADC code table: PQ's columns plus the coarse
+# ``cluster``, last because the base and fold partition by it (a
+# staged segment writes it as a plain column in the same place).
+RESIDUAL_CODES_SCHEMA = StructType(
+    PQ_CODES_SCHEMA.fields + [StructField("cluster", IntegerType())]
+)
+
+
 def order_residual_codes(codes: DataFrame) -> DataFrame:
     """Row order of the residual-IVFADC code table — build, batch
-    append, staged segment and fold: clustered on the coarse cluster,
-    sorted by (vec_id, m) within files.  The base tables add the
+    append and fold: clustered on the coarse cluster, sorted by
+    :data:`PQ_CODES_KEY` within files.  The base tables add the
     cluster directory partitioning on top; a staged segment keeps
-    cluster as a plain column."""
-    return codes.repartition("cluster").sortWithinPartitions("vec_id", "m")
+    cluster as a plain column and only sorts within its partitions."""
+    return codes.repartition("cluster").sortWithinPartitions(*PQ_CODES_KEY)
 
 
 def save_ivfpq_residual_index(
@@ -3098,7 +3137,7 @@ def ivfpq_residual_topk_from_layout(
     # meta-read precedent): read driver-side, no scan jobs per serve
     return _ivfpq_residual_serve(
         qv,
-        spark.read.parquet(f"{path}/codes"),
+        spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{path}/codes"),
         read_centers(path),
         read_codebooks(path),
         query_vec_id,
@@ -3141,7 +3180,7 @@ def ivfpq_residual_batch_topk_from_layout(
     path = read_current(path)  # live generation (compaction-aware)
     assert_not_torn(path)
     meta = read_tiny_rows(f"{path}/meta")[0]
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{path}/codes")
     # centers/codebooks are KB-sized driver artifacts (r18)
     return _ivfpq_residual_batch_serve(
         embeddings, codes, read_centers(path), read_codebooks(path), meta,
@@ -3265,7 +3304,7 @@ def ivfpq_residual_filtered_topk_from_layout(
         _quantized(F.col("embedding"), int(meta["scale"])).alias("q"),
     )
     codes = (
-        spark.read.parquet(f"{path}/codes")
+        spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{path}/codes")
         .filter(F.col("label") == label)
         .drop("label")
     )

@@ -59,14 +59,6 @@ def fetch_objects_page(
     return df.orderBy("object").limit(max_keys)
 
 
-def get_object(objects: DataFrame, bucket: str, object_key: str) -> DataFrame:
-    """S4: point lookup of one object row."""
-    return (
-        objects.filter((F.col("bucket") == bucket) & (F.col("object") == object_key))
-        .limit(1)
-    )
-
-
 def list_upload_parts(parts: DataFrame, upload: str) -> DataFrame:
     """S8: all parts of one upload in partno order (clustering order in the
     reference, explicit orderBy here)."""

@@ -229,14 +229,6 @@ def list_multipart_uploads(bucket: str, prefix: str, uploads: list[dict]) -> str
     return _render(root)
 
 
-def multipart_upload_part_copy(etag: str, atime: str) -> str:
-    """PUT part?copy response (xml.clj:235-240)."""
-    root = ET.Element("CopyPartResult")
-    _el(root, "ETag", f'"{etag}"')
-    _el(root, "LastModified", atime)
-    return _render(root)
-
-
 def complete_multipart_upload(bucket: str, object_key: str, etag: str) -> str:
     """POST ?uploadId response (xml.clj:242-250)."""
     root = ET.Element("CompleteMultipartUploadResult", xmlns=S3_NS)
@@ -247,27 +239,11 @@ def complete_multipart_upload(bucket: str, object_key: str, etag: str) -> str:
     return _render(root)
 
 
-def bucket_location(location: str) -> str:
-    """GET ?location response (xml.clj:252-256)."""
-    root = ET.Element("LocationConstraint", xmlns=S3_NS)
-    root.text = location
-    return _render(root)
-
-
 def copy_object(etag: str, atime: str) -> str:
     """PUT x-amz-copy-source response (xml.clj:263-269)."""
     root = ET.Element("CopyObjectResult", xmlns=S3_NS)
     _el(root, "LastModified", atime)
     _el(root, "ETag", f'"{etag}"')
-    return _render(root)
-
-
-def delete_objects(keys: list[str]) -> str:
-    """POST /?delete response (xml.clj:271-277)."""
-    root = ET.Element("DeleteResult", xmlns=S3_NS)
-    for k in keys:
-        d = _el(root, "Deleted")
-        _el(d, "Key", k)
     return _render(root)
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
@@ -98,6 +99,26 @@ def chunk_ingest(
     )
 
 
+# The objects layout's physical format as Spark reads it back: the
+# object columns, then the ``bucket`` partition column last.  Readers
+# pass it so a listing never runs a schema-inference job;
+# OBJECTS_KEY is the layout's sort key.
+OBJECTS_LAYOUT_SCHEMA = StructType(
+    [
+        StructField("object", StringType()),
+        StructField("inode", StringType()),
+        StructField("size", LongType()),
+        StructField("atime", StringType()),
+        StructField("checksum", StringType()),
+        StructField("acl", StringType()),
+        StructField("storageclass", StringType()),
+        StructField("owner", StringType()),
+        StructField("bucket", StringType()),
+    ]
+)
+OBJECTS_KEY = ("bucket", "object")
+
+
 def write_objects_layout(
     objects: DataFrame, path: str, n_files: int | None = None
 ) -> None:
@@ -114,12 +135,12 @@ def write_objects_layout(
     The range sampler handles skew adaptively; this is the skew story
     for reingest, not just the fixture."""
     part = (
-        objects.repartitionByRange(n_files, "bucket", "object")
+        objects.repartitionByRange(n_files, *OBJECTS_KEY)
         if n_files
-        else objects.repartitionByRange("bucket", "object")
+        else objects.repartitionByRange(*OBJECTS_KEY)
     )
     (
-        part.sortWithinPartitions("bucket", "object")
+        part.sortWithinPartitions(*OBJECTS_KEY)
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)

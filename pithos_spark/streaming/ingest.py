@@ -47,6 +47,40 @@ order declared by the module that owns the layout (``order_postings``,
 ``text.write_gram_tables``, ``store.write_objects_layout``), so every
 write of one physical format calls one definition.
 
+Job budget.  The ops are delta-sized (tens to hundreds of rows), so
+their cost is Spark's per-job overhead, and every job has a named
+reason:
+
+- staging one segment is ONE job, the segment write.  An empty batch
+  is found from the temp segment's parquet footers on the driver
+  (:func:`layoutcommit.parquet_rows`), and a segment is sorted on the
+  layout's key inside the batch's own partitions
+  (:func:`_write_segment_rows`) — no range sample, no shuffle; the
+  fold restores the clustering;
+- defining a staged read runs NO job.  Base tables and segments are
+  read with the schema their owning module declares
+  (``store.OBJECTS_LAYOUT_SCHEMA``, ``similarity.PQ_CODES_SCHEMA`` /
+  ``RESIDUAL_CODES_SCHEMA`` / ``IVF_ASSIGNED_SCHEMA``,
+  ``retrieval.POSTINGS_SCHEMA``), so no read infers one, and the tiny
+  tables (``CURRENT``, ``folded_segments``, codebooks, centers, meta)
+  are driver-side reads.  The action then runs its plan's own jobs:
+  one per shuffle map stage AQE schedules (the objects merge window,
+  the listing's grouping, the PQ estimate's group-by and rank cut),
+  one per broadcast build, one for the result, plus the PQ serve's
+  query-vector collect;
+- a fold runs only the writes of its merged tables: for the
+  range-clustered layouts the range sample, the shuffle map stage
+  and the write (plus the merge window's shuffle for objects).  The
+  rows folded are counted from the live segments' footers, the frozen
+  tiny tables are copied as bytes, and the ``folded_segments`` mask is
+  written on the driver.  (The postings and trigram folds also refresh
+  their counter tables, which still takes Spark jobs.)
+
+Measured per perfbench ``ingest`` op (4 segments per op, seed 1):
+stage 4 jobs, listing 3, PQ read 7 (one is the benchmark's own
+embeddings read), objects fold 4, PQ fold 4 (the range partitioner
+re-samples a skewed partition with a second job).
+
 When to compact: fold when ``trigram_segment_stats``'s
 ``avg_segments_x1000`` crosses :data:`COMPACT_WHEN_AVG_SEGMENTS_X1000`
 (derivation in SCALE_r15).  The ANN and objects layouts key on live
@@ -68,10 +102,12 @@ on the ingest path.
 from __future__ import annotations
 
 import functools
+import logging
 import os
 import shutil
 
 import pyspark.sql.functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from pithos_spark.functions.layoutcommit import (
     FOLD_TMP,
@@ -82,12 +118,17 @@ from pithos_spark.functions.layoutcommit import (
     gc_generations,
     install_staged_segment,
     next_gen_rel,
+    parquet_rows,
     read_current,
     read_tiny_rows,
     segment_token,
     staged_segment_keys,
+    write_folded_segments,
     write_tiny_table,
 )
+from pithos_spark.sources.store import OBJECTS_KEY, OBJECTS_LAYOUT_SCHEMA
+
+_log = logging.getLogger("pithos_spark")
 
 # Fold when the staged-aware segment report's MAX avg_segments_x1000
 # (trigram_segment_stats_with_staged; in practice its cw3 row — the
@@ -106,24 +147,32 @@ COMPACT_WHEN_AVG_SEGMENTS_X1000 = 2000
 
 
 def _stage_stream(stream, layout_path: str, checkpoint: str, write_segment):
-    """THE staged ingest, shared by every layout: for each non-empty
-    micro-batch, ``write_segment(batch_df, batch_id, tmp)`` writes the
-    segment's tables COMPLETELY under ``{layout}/staged_tmp/seg=<key>``,
-    which then installs at ``{layout}/staged/seg=<key>`` with one
-    atomic rename.  A layout with additive corpus counters returns a
-    1-row stats DataFrame; it is appended seg-tagged under
-    ``{layout}/staged_stats`` only AFTER the install — the order
-    :func:`_gc_staged_stats` relies on (a row in its snapshot always
-    has its segment visible).  Runs the stream to completion of the
-    data available now (``availableNow``)."""
+    """THE staged ingest, shared by every layout: for each micro-batch,
+    ``write_segment(batch_df, batch_id, tmp)`` writes the segment's
+    tables COMPLETELY under ``{layout}/staged_tmp/seg=<key>``, which
+    then installs at ``{layout}/staged/seg=<key>`` with one atomic
+    rename.  An empty batch is found AFTER its write, from the temp
+    segment's parquet footers (driver-side, so it costs no job), and
+    its temp segment is deleted instead of installed.  A layout with
+    additive corpus counters returns a 1-row stats DataFrame; it is
+    appended seg-tagged under ``{layout}/staged_stats`` only AFTER the
+    install — the order :func:`_gc_staged_stats` relies on (a row in
+    its snapshot always has its segment visible).  Runs the stream to
+    completion of the data available now (``availableNow``)."""
     token = segment_token(checkpoint)
 
     def _ingest(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
         seg = f"{token}-{batch_id}"
         tmp = f"{layout_path}/staged_tmp/seg={seg}"
         stats = write_segment(batch_df, batch_id, tmp)
+        if parquet_rows([tmp]) == 0:
+            shutil.rmtree(tmp, ignore_errors=True)
+            _log.info(
+                "stage %s: batch %s is empty, no segment installed",
+                layout_path,
+                batch_id,
+            )
+            return
         install_staged_segment(tmp, f"{layout_path}/staged/seg={seg}")
         if stats is not None:
             (
@@ -145,9 +194,11 @@ def _fold(spark, layout_path: str, write_generation) -> int:
     resolve the live generation once and refuse a torn base (never
     bake one into a generation).  If segments are live,
     ``write_generation(root, live, tmp)`` writes the COMPLETE merged
-    tables under ``FOLD_TMP`` and returns the rows folded; the folded
-    keys join them, the dir is renamed to the next ``fold_gen_<k>``
-    and ``CURRENT`` swaps atomically.  Everything after the swap is
+    tables under ``FOLD_TMP``; the folded keys join them (written on
+    the driver), the dir is renamed to the next ``fold_gen_<k>`` and
+    ``CURRENT`` swaps atomically.  The rows folded are counted from the
+    live segments' parquet footers, so the only Spark jobs in a fold
+    are the writes of its merged tables.  Everything after the swap is
     pure GC (readers mask folded keys): staged dirs, staged stats,
     superseded generations (VERDICT r15 task 5; never read once
     CURRENT moves).  With nothing live the GC still runs, over the
@@ -167,11 +218,9 @@ def _fold(spark, layout_path: str, write_generation) -> int:
     else:
         tmp = f"{layout_path}/{FOLD_TMP}"
         shutil.rmtree(tmp, ignore_errors=True)
-        n = write_generation(root, live, tmp)
-        write_tiny_table(
-            _folded_segments_df(spark, layout_path, root, live),
-            f"{tmp}/folded_segments",
-        )
+        n = parquet_rows(f"{layout_path}/staged/seg={s}" for s in live)
+        write_generation(root, live, tmp)
+        write_folded_segments(tmp, _folded_keys(layout_path, root, live))
         gen = next_gen_rel(layout_path)
         os.rename(tmp, f"{layout_path}/{gen}")
         commit_current(layout_path, gen)  # THE commit point
@@ -182,29 +231,36 @@ def _fold(spark, layout_path: str, write_generation) -> int:
 
 
 def _fold_rows(
-    spark, layout_path, table, order, partition_by=None, carry=(), finish=None
+    spark,
+    layout_path,
+    table,
+    schema,
+    order,
+    partition_by=None,
+    carry=(),
+    finish=None,
 ) -> int:
     """:func:`_fold` for the layouts whose staged rows are DISJOINT
     from the base (new doc_ids / vec_ids by the ingest contract), so
-    the fold is a union, not a merge: restore the layout's row
-    ``order`` (and cluster directory ``partition_by``) over base ∪
-    staged, copy the frozen tiny tables in ``carry`` forward, and let
-    ``finish(root, live, tmp)`` write anything else the generation
-    needs (the postings counters).  Returns the staged rows folded."""
+    the fold is a union, not a merge: read base and staged rows with
+    the layout's declared ``schema``, restore its row ``order`` (and
+    cluster directory ``partition_by``) over base ∪ staged, copy the
+    frozen tiny tables in ``carry`` forward as bytes (they never
+    change between generations), and let ``finish(root, live, tmp)``
+    write anything else the generation needs (the postings counters).
+    Returns the staged rows folded."""
 
     def write_generation(root, live, tmp):
-        staged = _staged_rows(spark, layout_path, live)
-        n = staged.count()
-        base = spark.read.parquet(f"{root}/{table}")
+        base = spark.read.schema(schema).parquet(f"{root}/{table}")
+        staged = _staged_rows(spark, layout_path, live, schema)
         w = order(base.unionByName(staged)).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(partition_by)
         w.parquet(f"{tmp}/{table}")
         for t in carry:
-            write_tiny_table(spark.read.parquet(f"{root}/{t}"), f"{tmp}/{t}")
+            shutil.copytree(f"{root}/{t}", f"{tmp}/{t}")
         if finish:
             finish(root, live, tmp)
-        return n
 
     return _fold(spark, layout_path, write_generation)
 
@@ -218,8 +274,9 @@ def _live_staged_segs(layout_path: str, gen_root: str) -> list[str]:
     return [s for s in staged_segment_keys(layout_path) if s not in folded]
 
 
-def _staged_rows(spark, layout_path: str, live: list[str]):
-    """All live staged segments' rows in ONE multi-path scan — the
+def _staged_rows(spark, layout_path: str, live: list[str], schema):
+    """All live staged segments' rows in ONE multi-path scan, read with
+    the layout's declared ``schema`` (no inference job) — the
     serving fast path for the flat segment shape (postings / ANN codes
     / assignments / object mutations), whose consumers drop
     per-segment attribution anyway.  One scan node with N paths
@@ -230,21 +287,37 @@ def _staged_rows(spark, layout_path: str, live: list[str]):
     trigram layout's per-segment reads never applies.  Reads by
     explicit per-segment path: a segment dir exists iff its tables are
     complete (single-rename install)."""
-    return spark.read.parquet(
+    return spark.read.schema(schema).parquet(
         *[f"{layout_path}/staged/seg={s}" for s in live]
     )
 
 
 def _with_staged(spark, layout_path: str, root: str, base):
-    """``base`` ∪ the live staged rows, masked against the generation
-    at ``root`` — resolved ONCE by the caller and threaded through both
-    the base read and the mask: two resolutions race a concurrent
-    fold (segments folded in between would be masked while their rows
-    live only in the newer base; ADVICE r16)."""
+    """``base`` ∪ the live staged rows (read with ``base``'s schema),
+    masked against the generation at ``root`` — resolved ONCE by the
+    caller and threaded through both the base read and the mask: two
+    resolutions race a concurrent fold (segments folded in between
+    would be masked while their rows live only in the newer base;
+    ADVICE r16)."""
     live = _live_staged_segs(layout_path, root)
     if not live:
         return base
-    return base.unionByName(_staged_rows(spark, layout_path, live))
+    return base.unionByName(
+        _staged_rows(spark, layout_path, live, base.schema)
+    )
+
+
+def _write_segment_rows(rows, schema, key, tmp: str) -> None:
+    """Write a staged segment's rows in the layout's declared column
+    order, sorted on its ``key`` within the batch's own partitions: a
+    delta-sized segment needs no range sample or shuffle (one job);
+    the fold restores the layout's clustering."""
+    (
+        rows.select(*schema.fieldNames())
+        .sortWithinPartitions(*key)
+        .write.mode("overwrite")
+        .parquet(tmp)
+    )
 
 
 def _staged_counters(
@@ -390,17 +463,15 @@ def _gc_staged_stats(spark, layout_path: str) -> None:
         _rmdir_stats_table(stats_dir)
 
 
-def _folded_segments_df(spark, layout_path: str, gen_root: str, live):
+def _folded_keys(layout_path: str, gen_root: str, live) -> set[str]:
     """Contents for the new generation's folded_segments table: the
     keys folded by THIS fold, plus previously-folded keys whose segment
     dirs a crashed cleanup left behind (their rows are already in the
     base; the mask must outlive the directories)."""
     prev = folded_segment_keys(gen_root)
-    keep = sorted(
-        set(str(s) for s in live)
-        | {s for s in staged_segment_keys(layout_path) if s in prev}
-    )
-    return spark.createDataFrame([(s,) for s in keep], "seg string")
+    return set(str(s) for s in live) | {
+        s for s in staged_segment_keys(layout_path) if s in prev
+    }
 
 
 def _staged_stats(spark, layout_path, min_segments, extra_schema="", *aggs):
@@ -439,10 +510,18 @@ def _staged_stats(spark, layout_path, min_segments, extra_schema="", *aggs):
 def _fold_if_due(spark, layout_path: str, min_segments: int, fold) -> int:
     """Segment-count policy form shared by the ANN and objects layouts:
     ``fold`` iff ``min_segments`` staged segments are live, else 0
-    without touching Spark or the layout."""
-    if not ann_fold_due(spark, layout_path, min_segments):
-        return 0
-    return fold(spark, layout_path)
+    without touching Spark or the layout.  Logs the decision."""
+    live = len(_live_staged_segs(layout_path, read_current(layout_path)))
+    due = live >= min_segments
+    n = fold(spark, layout_path) if due else 0
+    _log.info(
+        "fold policy %s: %d live segments, threshold %d: %s",
+        layout_path,
+        live,
+        min_segments,
+        f"folded {n} rows" if due else "skipped",
+    )
+    return n
 
 
 # --- BM25 postings -----------------------------------------------------------
@@ -466,14 +545,16 @@ def streaming_postings_ingest(
     stream carries genuinely new doc_ids (the batch append's contract —
     updates go through a rebuild)."""
     from pithos_spark.functions.retrieval import (
+        POSTINGS_KEY,
+        POSTINGS_SCHEMA,
         build_postings,
         delta_postings_stats,
-        order_postings,
     )
 
     def write_segment(batch_df, _batch_id, tmp):
-        rows = order_postings(build_postings(batch_df))
-        rows.write.mode("overwrite").parquet(tmp)
+        _write_segment_rows(
+            build_postings(batch_df), POSTINGS_SCHEMA, POSTINGS_KEY, tmp
+        )
         return delta_postings_stats(batch_df)
 
     return _stage_stream(
@@ -489,10 +570,11 @@ def _staged_postings_counters(
     (doc_id, dl) pairs over exactly those segments' rows (read by
     path), so a document with zero tokens — which has no posting rows
     and affects no score — is the one thing it can't see."""
+    from pithos_spark.functions.retrieval import POSTINGS_SCHEMA
 
     def derive(missing):
         return (
-            _staged_rows(spark, layout_path, missing)
+            _staged_rows(spark, layout_path, missing, POSTINGS_SCHEMA)
             .select("doc_id", "dl")
             .distinct()
             .agg(
@@ -528,17 +610,20 @@ def bm25_topk_with_staged(
         DEFAULT_TERMS,
         IDF_SCALE,
         NORM_SCALE,
+        POSTINGS_SCHEMA,
     )
 
     terms = terms or DEFAULT_TERMS
     root = read_current(layout_path)
     assert_not_torn(root)
-    post = spark.read.parquet(f"{root}/postings")
+    post = spark.read.schema(POSTINGS_SCHEMA).parquet(f"{root}/postings")
     stats = spark.read.parquet(f"{root}/stats")
     live = _live_staged_segs(layout_path, root)
     if live:
         dn, dl_sum = _staged_postings_counters(spark, layout_path, live)
-        post = post.unionByName(_staged_rows(spark, layout_path, live))
+        post = post.unionByName(
+            _staged_rows(spark, layout_path, live, POSTINGS_SCHEMA)
+        )
         stats = stats.select(
             (F.col("n_docs") + F.lit(dn)).alias("n_docs"),
             (F.col("total_len") + F.lit(dl_sum)).alias("total_len"),
@@ -576,6 +661,7 @@ def compact_staged_postings(spark, layout_path: str) -> int:
     (base + staged, stats rows or row-derived).  Returns the number of
     staged posting rows folded."""
     from pithos_spark.functions.retrieval import (
+        POSTINGS_SCHEMA,
         order_postings,
         write_postings_stats,
     )
@@ -591,7 +677,12 @@ def compact_staged_postings(spark, layout_path: str) -> int:
         )
 
     return _fold_rows(
-        spark, layout_path, "postings", order_postings, finish=stats
+        spark,
+        layout_path,
+        "postings",
+        POSTINGS_SCHEMA,
+        order_postings,
+        finish=stats,
     )
 
 
@@ -801,7 +892,8 @@ def compact_staged_trigram(spark, layout_path: str) -> int:
     and the readers' merge fast-path re-engages.  Buckets stay frozen
     (``text.write_gram_tables`` recomputes the same murmur3 expression,
     so every gram lands back in its partition and probe pruning is
-    untouched).  Returns the number of staged gram rows folded."""
+    untouched).  Returns the number of staged gram rows folded (all
+    five tables' rows, counted by :func:`_fold` from the footers)."""
     from pithos_spark.functions.text import (
         _load_trigram_layout,
         write_gram_stats,
@@ -813,7 +905,6 @@ def compact_staged_trigram(spark, layout_path: str) -> int:
             spark, layout_path, root
         )
         staged = _staged_trigram_tables(spark, layout_path, live)
-        folded = sum(df.count() for df in staged.values())
         n_total += _staged_trigram_total(spark, layout_path, live)
         write_gram_tables(
             {
@@ -824,7 +915,6 @@ def compact_staged_trigram(spark, layout_path: str) -> int:
             tmp,
         )
         write_gram_stats(spark, f"{tmp}/stats", n_total, n_buckets, 1)
-        return folded
 
     return _fold(spark, layout_path, write_generation)
 
@@ -832,20 +922,21 @@ def compact_staged_trigram(spark, layout_path: str) -> int:
 # --- ANN layouts: PQ, residual IVFADC, plain IVF -----------------------------
 
 
-def _frozen_segment(layout_path: str, encode, order):
+def _frozen_segment(layout_path: str, encode, schema, key):
     """Segment writer for the ANN layouts: ``encode(spark, batch_df,
     root)`` assigns / encodes the batch against the live generation's
     FROZEN artifacts (row-local — the exact delta the batch append
-    writes), written in the layout's row ``order``.  ``cluster`` rides
-    as a plain column in a segment (directory partitioning is the
-    FOLD's job); no stats row — these indexes carry no additive corpus
+    writes), written in the layout's declared ``schema`` and sorted on
+    its ``key`` (:func:`_write_segment_rows`).  ``cluster`` rides as a
+    plain column in a segment (directory partitioning is the FOLD's
+    job); no stats row — these indexes carry no additive corpus
     counters, so the segment rows ARE the whole delta."""
 
     def write_segment(batch_df, _batch_id, tmp):
         root = read_current(layout_path)
         assert_not_torn(root)
         rows = encode(batch_df.sparkSession, batch_df, root)
-        order(rows).write.mode("overwrite").parquet(tmp)
+        _write_segment_rows(rows, schema, key, tmp)
 
     return write_segment
 
@@ -869,13 +960,19 @@ def streaming_pq_index_ingest(
     stream carries genuinely new vec_ids (updates go through a
     rebuild) and that codebook drift is handled by periodic retrain,
     as for any frozen production quantizer."""
-    from pithos_spark.functions.similarity import order_pq_codes, pq_encode_delta
+    from pithos_spark.functions.similarity import (
+        PQ_CODES_KEY,
+        PQ_CODES_SCHEMA,
+        pq_encode_delta,
+    )
 
     return _stage_stream(
         new_embeddings_stream,
         layout_path,
         checkpoint,
-        _frozen_segment(layout_path, pq_encode_delta, order_pq_codes),
+        _frozen_segment(
+            layout_path, pq_encode_delta, PQ_CODES_SCHEMA, PQ_CODES_KEY
+        ),
     )
 
 
@@ -954,10 +1051,13 @@ def compact_staged_pq(spark, layout_path: str) -> int:
     vec_id-range clustering the rerank probe's row-group skipping
     wants — not a merge.  Returns the number of staged code rows
     folded."""
-    from pithos_spark.functions.similarity import order_pq_codes
+    from pithos_spark.functions.similarity import (
+        PQ_CODES_SCHEMA,
+        order_pq_codes,
+    )
 
     return _fold_rows(
-        spark, layout_path, "codes", order_pq_codes,
+        spark, layout_path, "codes", PQ_CODES_SCHEMA, order_pq_codes,
         carry=("codebooks", "meta"),
     )
 
@@ -978,8 +1078,9 @@ def streaming_ivfpq_residual_ingest(
     where the base prunes by partition — the same asymmetry as the
     lexical layouts' staged unions, which the fold deletes."""
     from pithos_spark.functions.similarity import (
+        PQ_CODES_KEY,
+        RESIDUAL_CODES_SCHEMA,
         ivfpq_residual_encode_delta,
-        order_residual_codes,
     )
 
     return _stage_stream(
@@ -987,7 +1088,10 @@ def streaming_ivfpq_residual_ingest(
         layout_path,
         checkpoint,
         _frozen_segment(
-            layout_path, ivfpq_residual_encode_delta, order_residual_codes
+            layout_path,
+            ivfpq_residual_encode_delta,
+            RESIDUAL_CODES_SCHEMA,
+            PQ_CODES_KEY,
         ),
     )
 
@@ -996,12 +1100,19 @@ def _residual_index_with_staged(spark, layout_path: str):
     """(base ∪ staged codes, centers, codebooks, meta) of the residual
     index under one generation resolution (:func:`_with_staged`); the
     frozen artifacts are driver-side reads."""
-    from pithos_spark.functions.similarity import read_centers, read_codebooks
+    from pithos_spark.functions.similarity import (
+        RESIDUAL_CODES_SCHEMA,
+        read_centers,
+        read_codebooks,
+    )
 
     root = read_current(layout_path)
     assert_not_torn(root)
     codes = _with_staged(
-        spark, layout_path, root, spark.read.parquet(f"{root}/codes")
+        spark,
+        layout_path,
+        root,
+        spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{root}/codes"),
     )
     return (
         codes,
@@ -1088,11 +1199,15 @@ def compact_staged_ivfpq_residual(spark, layout_path: str) -> int:
     way through (the fold's payoff here: staged rows served by row
     filter go back to directory-pruned reads).  Returns the number of
     staged code rows folded."""
-    from pithos_spark.functions.similarity import order_residual_codes
+    from pithos_spark.functions.similarity import (
+        RESIDUAL_CODES_SCHEMA,
+        order_residual_codes,
+    )
 
     return _fold_rows(
-        spark, layout_path, "codes", order_residual_codes,
-        partition_by="cluster", carry=("centers", "codebooks", "meta"),
+        spark, layout_path, "codes", RESIDUAL_CODES_SCHEMA,
+        order_residual_codes, partition_by="cluster",
+        carry=("centers", "codebooks", "meta"),
     )
 
 
@@ -1114,15 +1229,19 @@ def streaming_ivf_ingest(
     :func:`semantic_dedup_pairs_with_staged`; fold with
     :func:`compact_staged_ivf`."""
     from pithos_spark.functions.similarity import (
+        IVF_ASSIGNED_KEY,
+        IVF_ASSIGNED_SCHEMA,
         ivf_assign_delta,
-        order_ivf_assigned,
     )
 
     return _stage_stream(
         new_embeddings_stream,
         layout_path,
         checkpoint,
-        _frozen_segment(layout_path, ivf_assign_delta, order_ivf_assigned),
+        _frozen_segment(
+            layout_path, ivf_assign_delta, IVF_ASSIGNED_SCHEMA,
+            IVF_ASSIGNED_KEY,
+        ),
     )
 
 
@@ -1192,11 +1311,15 @@ def compact_staged_ivf(spark, layout_path: str) -> int:
     (:func:`_fold_rows`), restoring the cluster directory partitioning
     so probe reads go back to partition pruning.  Returns the number
     of staged assignment rows folded."""
-    from pithos_spark.functions.similarity import order_ivf_assigned
+    from pithos_spark.functions.similarity import (
+        IVF_ASSIGNED_SCHEMA,
+        order_ivf_assigned,
+    )
 
     return _fold_rows(
-        spark, layout_path, "assigned", order_ivf_assigned,
-        partition_by="cluster", carry=("centers", "meta"),
+        spark, layout_path, "assigned", IVF_ASSIGNED_SCHEMA,
+        order_ivf_assigned, partition_by="cluster",
+        carry=("centers", "meta"),
     )
 
 
@@ -1286,6 +1409,17 @@ def compact_staged_ivf_if_needed(
 OBJECTS_TOMBSTONE = "_tombstone"
 OBJECTS_SEQ = "_seq"
 
+# A mutation segment's physical format: the objects layout's columns
+# (``bucket`` a plain column here) plus the tombstone flag and the
+# precedence stamp.
+OBJECTS_SEGMENT_SCHEMA = StructType(
+    OBJECTS_LAYOUT_SCHEMA.fields
+    + [
+        StructField(OBJECTS_TOMBSTONE, BooleanType()),
+        StructField(OBJECTS_SEQ, LongType()),
+    ]
+)
+
 
 def save_objects_layout(objects, layout_path: str) -> None:
     """Versioned root for the LSM objects layout: the bucket-partitioned
@@ -1318,14 +1452,13 @@ def streaming_objects_ingest(
     :func:`compact_staged_objects`."""
 
     def write_segment(batch_df, batch_id, tmp):
-        (
+        _write_segment_rows(
             batch_df.withColumn(
                 OBJECTS_SEQ, F.lit(int(batch_id)).cast("long")
-            )
-            .repartition("bucket")
-            .sortWithinPartitions("bucket", "object")
-            .write.mode("overwrite")
-            .parquet(tmp)
+            ),
+            OBJECTS_SEGMENT_SCHEMA,
+            OBJECTS_KEY,
+            tmp,
         )
 
     return _stage_stream(mutation_stream, layout_path, checkpoint, write_segment)
@@ -1360,15 +1493,18 @@ def _objects_merge(base, staged):
 
 def objects_with_staged(spark, layout_path: str):
     """The merged LSM view of the objects layout (:func:`_objects_merge`
-    over base ∪ live staged segments).  With no staged segments this
-    IS the base read — zero merge tax on a folded layout."""
+    over base ∪ live staged segments, each read with its declared
+    schema).  With no staged segments this IS the base read — zero
+    merge tax on a folded layout."""
     root = read_current(layout_path)
     assert_not_torn(root)
-    base = spark.read.parquet(f"{root}/objects")
+    base = spark.read.schema(OBJECTS_LAYOUT_SCHEMA).parquet(f"{root}/objects")
     live = _live_staged_segs(layout_path, root)
     if not live:
         return base
-    return _objects_merge(base, _staged_rows(spark, layout_path, live))
+    return _objects_merge(
+        base, _staged_rows(spark, layout_path, live, OBJECTS_SEGMENT_SCHEMA)
+    )
 
 
 def list_objects_with_staged(
@@ -1405,11 +1541,11 @@ def compact_staged_objects(spark, layout_path: str) -> int:
     from pithos_spark.sources.store import write_objects_layout
 
     def write_generation(root, live, tmp):
-        staged = _staged_rows(spark, layout_path, live)
-        n = staged.count()
-        base = spark.read.parquet(f"{root}/objects")
+        base = spark.read.schema(OBJECTS_LAYOUT_SCHEMA).parquet(
+            f"{root}/objects"
+        )
+        staged = _staged_rows(spark, layout_path, live, OBJECTS_SEGMENT_SCHEMA)
         write_objects_layout(_objects_merge(base, staged), f"{tmp}/objects")
-        return n
 
     return _fold(spark, layout_path, write_generation)
 

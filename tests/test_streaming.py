@@ -2753,3 +2753,219 @@ def test_compact_staged_objects_crash_recovery(spark, tmp_path):
             f"recovered base after {crash_fn}"
         )
         assert ing.compact_staged_objects(spark, layout) == 0
+
+
+def _jobs_run(spark, call) -> int:
+    """Spark jobs started while ``call()`` runs, the streaming query's
+    own micro-batch jobs included (a job-id range, read after the
+    listener bus drains — the perfbench Recorder's count)."""
+    sc = spark.sparkContext._jsc.sc()
+    first = sc.dagScheduler().numTotalJobs()
+    call()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.dagScheduler().numTotalJobs() - first
+
+
+def _run_stream(spark, fn, src, schema, layout, ckpt):
+    """Run ``fn`` (a staged ingest) over the parquet files in ``src``,
+    one file per micro-batch, to completion."""
+    q = fn(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        layout,
+        ckpt,
+    )
+    q.awaitTermination(120)
+    q.stop()
+
+
+def test_staged_layout_job_counts(spark, tmp_path, caplog):
+    """The staged lifecycle's job budget for the objects and PQ layouts:
+    staging a segment is ONE job (its write — no ``isEmpty`` probe, no
+    range sample or shuffle); defining a staged read runs NO job (base
+    and segments are read with the declared schemas, so nothing infers
+    one); a staged read's action runs only its plan's jobs; and a fold
+    runs only the writes of its merged table (the rows folded come from
+    the segment footers, the tiny tables are copied as bytes and the
+    fold mask is written on the driver)."""
+    import logging
+
+    import pyspark.sql.functions as F
+
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.functions.layoutcommit import staged_segment_keys
+
+    t = T.load_tables(spark, SF_SMOKE)
+    # -- objects -------------------------------------------------------
+    base = T.objects_df(t)
+    batch1, _ = _object_mutations(base)
+    layout = str(tmp_path / "objects")
+    ing.save_objects_layout(base, layout)
+    n_mut = batch1.count()
+    src = str(tmp_path / "obj_src")
+    batch1.repartition(2).write.parquet(src)
+    stage = _jobs_run(spark, lambda: _run_stream(
+        spark, ing.streaming_objects_ingest, src, batch1.schema, layout,
+        str(tmp_path / "obj_ckpt"),
+    ))
+    assert len(staged_segment_keys(layout)) == 2
+    listing = {}
+    define = _jobs_run(spark, lambda: listing.setdefault(
+        "df", ing.list_objects_with_staged(spark, layout, "NATION_2", "", "/")
+    ))
+    read = _jobs_run(spark, lambda: listing["df"].collect())
+    with caplog.at_level(logging.INFO, logger="pithos_spark"):
+        assert ing.compact_staged_objects_if_needed(spark, layout) == 0
+        folded = {}
+        fold = _jobs_run(spark, lambda: folded.setdefault(
+            "n", ing.compact_staged_objects_if_needed(spark, layout, 2)
+        ))
+    assert folded["n"] == n_mut
+    assert (stage, define, read, fold) == (2, 0, 3, 4)
+    decisions = [r.getMessage() for r in caplog.records]
+    assert (
+        f"fold policy {layout}: 2 live segments, threshold "
+        f"{ing.COMPACT_OBJECTS_WHEN_SEGMENTS}: skipped"
+    ) in decisions
+    assert (
+        f"fold policy {layout}: 2 live segments, threshold 2: "
+        f"folded {n_mut} rows"
+    ) in decisions
+
+    # -- PQ ------------------------------------------------------------
+    emb = t["embeddings"]
+    layout = str(tmp_path / "pq")
+    sim.save_pq_index(emb.filter(F.col("vec_id") % 4 != 3), layout)
+    delta = emb.filter(F.col("vec_id") % 4 == 3)
+    src = str(tmp_path / "pq_src")
+    delta.repartition(2).write.parquet(src)
+    stage = _jobs_run(spark, lambda: _run_stream(
+        spark, ing.streaming_pq_index_ingest, src, emb.schema, layout,
+        str(tmp_path / "pq_ckpt"),
+    ))
+    served = {}
+    define = _jobs_run(
+        spark, lambda: served.setdefault(
+            "index", ing._pq_index_with_staged(spark, layout)
+        )
+    )
+    # the serving tail: the query-vector collect, then the plan's jobs
+    read = _jobs_run(spark, lambda: ing.pq_topk_with_staged(
+        emb, layout, 0, 10
+    ).collect())
+    folded = {}
+    fold = _jobs_run(spark, lambda: folded.setdefault(
+        "n", ing.compact_staged_pq_if_needed(spark, layout, 2)
+    ))
+    assert folded["n"] == delta.count() * 8  # M = 8 code rows per vector
+    assert (stage, define, read, fold) == (2, 0, 6, 3)
+
+
+def test_declared_layout_schemas_match_disk(spark, tmp_path):
+    """Each layout's declared schema is exactly the schema Spark infers
+    from the files on disk — names, order (a partition column such as
+    ``bucket`` or ``cluster`` last), types and nullability — on the
+    built base, on a staged segment and on the folded generation, so
+    reading with the declaration changes no plan and no answer."""
+    import pyspark.sql.functions as F
+
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import retrieval
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.functions.layoutcommit import (
+        read_current,
+        staged_segment_keys,
+    )
+    from pithos_spark.sources.store import OBJECTS_LAYOUT_SCHEMA
+
+    t = T.load_tables(spark, SF_SMOKE)
+    emb, docs = t["embeddings"], t["documents"]
+    e_base = emb.filter(F.col("vec_id") % 4 != 3)
+    e_delta = emb.filter(F.col("vec_id") % 4 == 3)
+    objects = T.objects_df(t)
+
+    def ivf_build(rows, path):
+        sim.save_ivf_index(*sim.build_ivf_lloyd_index(rows, 4, 1), path)
+
+    cases = [
+        # (name, build, ingest, fold, base rows, delta rows, table,
+        #  declared base schema, declared segment schema)
+        ("objects", ing.save_objects_layout, ing.streaming_objects_ingest,
+         ing.compact_staged_objects, objects,
+         _object_mutations(objects)[0], "objects", OBJECTS_LAYOUT_SCHEMA,
+         ing.OBJECTS_SEGMENT_SCHEMA),
+        ("pq", sim.save_pq_index, ing.streaming_pq_index_ingest,
+         ing.compact_staged_pq, e_base, e_delta, "codes",
+         sim.PQ_CODES_SCHEMA, sim.PQ_CODES_SCHEMA),
+        ("residual", sim.save_ivfpq_residual_index,
+         ing.streaming_ivfpq_residual_ingest,
+         ing.compact_staged_ivfpq_residual, e_base, e_delta, "codes",
+         sim.RESIDUAL_CODES_SCHEMA, sim.RESIDUAL_CODES_SCHEMA),
+        ("ivf", ivf_build, ing.streaming_ivf_ingest, ing.compact_staged_ivf,
+         e_base, e_delta, "assigned", sim.IVF_ASSIGNED_SCHEMA,
+         sim.IVF_ASSIGNED_SCHEMA),
+        ("postings", retrieval.write_postings_layout,
+         ing.streaming_postings_ingest, ing.compact_staged_postings,
+         docs.filter("doc_id % 4 != 3"), docs.filter("doc_id % 4 = 3"),
+         "postings", retrieval.POSTINGS_SCHEMA, retrieval.POSTINGS_SCHEMA),
+    ]
+    for (name, build, ingest, fold, rows, delta, table, declared,
+         segment) in cases:
+        layout = str(tmp_path / name)
+        build(rows, layout)
+        assert spark.read.parquet(f"{layout}/{table}").schema == declared, name
+        src = str(tmp_path / f"{name}_src")
+        delta.write.parquet(src)
+        _run_stream(spark, ingest, src, delta.schema, layout,
+                    str(tmp_path / f"{name}_ckpt"))
+        for seg in staged_segment_keys(layout):
+            got = spark.read.parquet(f"{layout}/staged/seg={seg}").schema
+            assert got == segment, name
+        assert fold(spark, layout) > 0
+        got = spark.read.parquet(f"{read_current(layout)}/{table}").schema
+        assert got == declared, name
+
+
+@pytest.mark.parametrize("kind", ["objects", "pq"])
+def test_empty_batch_installs_no_segment(spark, tmp_path, caplog, kind):
+    """A zero-row source file is an empty micro-batch: its segment is
+    written, found empty from its footers and deleted — no installed
+    segment, no ``staged_tmp/seg=*`` left behind, a decision log line,
+    and the next fold has nothing to fold."""
+    import glob
+    import logging
+
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.functions.layoutcommit import staged_segment_keys
+
+    t = T.load_tables(spark, SF_SMOKE)
+    layout = str(tmp_path / kind)
+    if kind == "objects":
+        base = T.objects_df(t)
+        ing.save_objects_layout(base, layout)
+        empty = _object_mutations(base)[0].limit(0)
+        ingest, fold = ing.streaming_objects_ingest, ing.compact_staged_objects
+    else:
+        ing_rows = t["embeddings"]
+        sim.save_pq_index(ing_rows, layout)
+        empty = ing_rows.limit(0)
+        ingest, fold = ing.streaming_pq_index_ingest, ing.compact_staged_pq
+    src = str(tmp_path / "src")
+    empty.repartition(1).write.parquet(src)
+    with caplog.at_level(logging.INFO, logger="pithos_spark"):
+        _run_stream(spark, ingest, src, empty.schema, layout,
+                    str(tmp_path / "ckpt"))
+    assert glob.glob(f"{src}/*.parquet")  # the source holds one empty file
+    assert staged_segment_keys(layout) == []
+    assert glob.glob(f"{layout}/staged_tmp/seg=*") == []
+    assert any(
+        r.getMessage().startswith(f"stage {layout}: batch 0 is empty")
+        for r in caplog.records
+    )
+    assert fold(spark, layout) == 0
