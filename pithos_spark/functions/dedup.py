@@ -1834,31 +1834,6 @@ _AFP_SAMPLES = 4  # sample points averaged per frame
 _AFP_BANDS = 4  # 4 bands x 8 bits
 
 
-def audio_fingerprints(documents: DataFrame) -> DataFrame:
-    """Per audio asset, a Haitsma-Kalker-shaped fingerprint: the clip
-    is split into ``_AFP_FRAMES`` fixed frames, each frame's "energy"
-    is the sum of ``_AFP_SAMPLES`` evenly-sampled amplitude values, and
-    one bit per adjacent-frame energy DIFFERENCE (E[f] < E[f+1]) —
-    the temporal-difference family every audio-dedup fingerprint uses,
-    packed as 4 bands of 8 bits (the banding IS the LSH layout, the
-    same contract as the image dHash and SimHash tiers).
-
-    The DECODE is the stubbed stand-in the multimodal pipeline uses
-    (sources/multimodal.py): audio assets are the ``doc_id % 3 == 1``
-    slice of ``assets_from_documents``, payload bytes are the utf-8
-    text, and "amplitude" is the ASCII code of the sampled character —
-    deterministic and engine-portable; a real PCM decode slots in at
-    exactly that expression.  Everything AFTER the sample source —
-    framing, energy sums, difference bits, band packing, LSH, Hamming
-    verify — is the real algorithm.
-
-    Scale shape: ONE shuffle-free projection per clip row — the
-    constant 33x4 sample grid, frame energies and difference bits are
-    row-local expressions (:func:`_afp_band_cols`); no explode,
-    aggregation or window anywhere in the fingerprint (guide §2.4)."""
-    return _wide_to_long(_afp_wide_stub(documents), _AFP_BANDS)
-
-
 def _afp_band_cols(px: list[F.Column]) -> list[F.Column]:
     """Haitsma-Kalker band packing as row-local expressions over the
     sampled amplitude columns: frame energies E[f] = sum of that

@@ -1628,17 +1628,6 @@ def _pq_subvectors_from_q(qdf: DataFrame, m_sub: int, dim: int):
     )
 
 
-def _pq_subvectors(embeddings: DataFrame, m_sub: int, dim: int, scale: int):
-    """(vec_id, m, subq) straight from the float embedding column."""
-    return _pq_subvectors_from_q(
-        embeddings.select(
-            "vec_id", _quantized(F.col("embedding"), scale).alias("q")
-        ),
-        m_sub,
-        dim,
-    )
-
-
 def build_pq_codebooks(
     embeddings: DataFrame,
     m_sub: int = 8,
@@ -1843,7 +1832,6 @@ def pq_topk(
     this query shape reads ~1/32nd of the raw embedding bytes.  Output
     (vec_id, label, est_dot, dot_q) — estimate and exact, both integer.
     """
-    spark = embeddings.sparkSession
     codebooks = build_pq_codebooks(
         embeddings, m_sub, k_codes, n_iter, scale, dim
     )
@@ -1894,6 +1882,119 @@ def _pq_lut_rows(
     ]
 
 
+def _adc_topk(
+    embeddings: DataFrame,
+    codes: DataFrame,
+    codebooks: dict,
+    qvs: dict[int, list[int]],
+    meta,
+    k: int,
+    rerank: int,
+    probes: dict[int, list[tuple[int, int]]] | None = None,
+) -> DataFrame:
+    """THE ADC serving tail of every PQ-family ANN read — plain PQ,
+    residual IVFADC and the train-in-query IVF-PQ, one query or many,
+    base or base ∪ staged codes: broadcast (query_id, m, code) LUT ->
+    one groupBy(query_id, vec_id) estimate sum over the code table ->
+    ``rerank * k`` cut -> exact quantized-dot rerank -> top ``k``.
+    Output (query_id, vec_id, label, est_dot, dot_q).
+
+    ``qvs`` maps each query id to its quantized vector
+    (:func:`_collect_query_qvs`); ``meta`` carries the ``m_sub``,
+    ``scale`` and ``dim`` ints.  The LUT and the query rows are
+    computed driver-side in exact integer math and emitted as
+    LocalRelations, so their broadcasts launch no job (r18).
+
+    ``probes`` maps each query id to its coarse lists ``(cluster,
+    cterm)`` — :func:`_residual_probe_rows` for residual IVFADC, cterm
+    0 for the non-residual IVF-PQ — over a code table that carries
+    ``cluster``: the probed ids are literals that statically prune the
+    cluster-partitioned scan, and a vector's estimate adds its cell's
+    centroid dot term.  Plain PQ passes none: one cell at the origin,
+    no cluster filter and a cterm of 0.
+
+    One shape difference, decided by the input alone: with at most one
+    query both cuts are global (a window and ``orderBy().limit(k)``;
+    a per-query window costs one more job here), with more both are
+    ``partitionBy(query_id)`` windows.  A query whose vector is NULL
+    or empty yields no rows in every shape."""
+    from pyspark.sql import Window
+
+    spark = embeddings.sparkSession
+    m_sub, scale, dim = (int(meta[c]) for c in ("m_sub", "scale", "dim"))
+    queries = sorted((qid, qq) for qid, qq in qvs.items() if qq)
+    lut = spark.createDataFrame(
+        [
+            (qid, m, c, pdot)
+            for qid, qq in queries
+            for m, c, pdot in _pq_lut_rows(codebooks, qq, m_sub, dim)
+        ],
+        "query_id long, m int, code int, pdot long",
+    )
+    per_query = Window.partitionBy("query_id") if len(queries) > 1 else Window
+    if len(queries) == 1:
+        # a literal anti-query predicate pushes into the code scan
+        codes = codes.filter(F.col("vec_id") != queries[0][0])
+    keys, est_dot = ["m", "code"], F.sum("pdot")
+    if probes is not None:
+        rows = [(qid, c, ct) for qid, _ in queries for c, ct in probes[qid]]
+        codes = codes.filter(
+            F.col("cluster").isin(sorted({c for _, c, _ in rows}))
+        ).join(
+            F.broadcast(
+                spark.createDataFrame(
+                    rows, "query_id long, cluster int, cterm long"
+                )
+            ),
+            "cluster",
+        )
+        keys, est_dot = ["query_id", *keys], est_dot + F.min("cterm")
+    est = (
+        codes.join(F.broadcast(lut), keys)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(est_dot.alias("est_dot"))
+    )
+    cand = (
+        est.withColumn(
+            "_rk",
+            F.row_number().over(
+                per_query.orderBy(F.col("est_dot").desc(), F.col("vec_id"))
+            ),
+        )
+        .filter(F.col("_rk") <= rerank * k)
+        .drop("_rk")
+    )
+    qv = embeddings.select(
+        "vec_id", "label", _quantized(F.col("embedding"), scale).alias("q")
+    )
+    qrows = spark.createDataFrame(queries, "query_id long, qq array<bigint>")
+    ranked = (
+        cand.join(qv, "vec_id")
+        .join(F.broadcast(qrows), "query_id")
+        .select(
+            "query_id",
+            "vec_id",
+            "label",
+            "est_dot",
+            _bigint_dot(F.col("q"), F.col("qq")).alias("dot_q"),
+        )
+    )
+    if len(queries) <= 1:
+        return ranked.orderBy(F.col("dot_q").desc(), "vec_id").limit(k)
+    return (
+        ranked.withColumn(
+            "_rn",
+            F.row_number().over(
+                per_query.orderBy(F.col("dot_q").desc(), F.col("vec_id"))
+            ),
+        )
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+        .orderBy("query_id", F.col("dot_q").desc(), "vec_id")
+    )
+
+
 def pq_serve_topk(
     embeddings: DataFrame,
     codes: DataFrame,
@@ -1905,63 +2006,17 @@ def pq_serve_topk(
     scale: int = 1000,
     dim: int = 64,
 ) -> DataFrame:
-    """The PQ serving tail over an ALREADY-BUILT index — shared by the
-    train-in-query gate (:func:`pq_topk`) and the persisted layout
-    (:func:`pq_topk_from_layout`), so both produce the identical plan:
-    broadcast M x K ADC LUT -> one groupBy(vec_id) sum over the code
-    table -> rank-cut (TakeOrderedAndProject + WindowGroupLimit,
-    audited PLANS.md r11) -> exact quantized-dot rerank of the
-    ``rerank * k`` survivors.
-
-    r18 (guide §1, VERDICT r17 task 3): the query-side artifacts —
-    the quantized query vector and the LUT — are computed ONCE
-    driver-side from a single pushed-filter collect and emitted as
-    LocalRelations, so their broadcasts launch no jobs: the serve runs
-    3 fewer scheduling round trips per request (the old plan scanned
-    `embeddings` twice and `codebooks` once per serve just to rebuild
-    KB-sized query state).  Values are bit-identical: the quantized
-    vector is Spark's own `_quantized` output, and the LUT dot is
-    exact integer arithmetic in both engines."""
-    from pyspark.sql import Window
-
-    spark = embeddings.sparkSession
-    qq = _collect_query_qvs(embeddings, [query_vec_id], scale).get(
-        int(query_vec_id)
-    )
-    lut = spark.createDataFrame(
-        _pq_lut_rows(codebooks, qq, m_sub, dim) if qq is not None else [],
-        "m int, code int, pdot long",
-    )
-    qrow = spark.createDataFrame(
-        [(qq,)] if qq is not None else [], "qq array<bigint>"
-    )
-    est = (
-        codes.filter(F.col("vec_id") != query_vec_id)
-        .join(F.broadcast(lut), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("pdot").alias("est_dot"))
-    )
-    cand = est.withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.orderBy(F.col("est_dot").desc(), F.col("vec_id"))
-        ),
-    ).filter(F.col("_rk") <= rerank * k)
-    qv = embeddings.select(
-        "vec_id", "label", _quantized(F.col("embedding"), scale).alias("q")
-    )
-    return (
-        cand.join(qv, "vec_id")
-        .join(F.broadcast(qrow))
-        .select(
-            "vec_id",
-            "label",
-            "est_dot",
-            _bigint_dot(F.col("q"), F.col("qq")).alias("dot_q"),
-        )
-        .orderBy(F.col("dot_q").desc(), "vec_id")
-        .limit(k)
-    )
+    """The plain-PQ single-query serve over an ALREADY-BUILT index —
+    the entry of the train-in-query gate (:func:`pq_topk`), the
+    persisted layout (:func:`pq_topk_from_layout`) and its filtered
+    and staged reads: one pushed-filter collect of the quantized query
+    (:func:`_collect_query_qvs`), then the :func:`_adc_topk` tail with
+    no probes.  Output (vec_id, label, est_dot, dot_q)."""
+    qvs = _collect_query_qvs(embeddings, [query_vec_id], scale)
+    meta = {"m_sub": m_sub, "scale": scale, "dim": dim}
+    return _adc_topk(
+        embeddings, codes, codebooks, qvs, meta, k, rerank
+    ).drop("query_id")
 
 
 # The PQ code table's physical format, declared once: every read of a
@@ -2184,86 +2239,9 @@ def pq_batch_topk_from_layout(
 
     Output (query_id, vec_id, label, est_dot, dot_q), top-k per query,
     ordered by (query_id, dot_q desc, vec_id)."""
-    spark = embeddings.sparkSession
-    codes, codebooks, meta = load_pq_index(spark, path)
-    return _pq_batch_serve(
-        embeddings, codes, codebooks, meta, query_ids, k, rerank
-    )
-
-
-def _pq_batch_serve(
-    embeddings: DataFrame,
-    codes: DataFrame,
-    codebooks: dict,
-    meta,
-    query_ids: list[int],
-    k: int,
-    rerank: int,
-) -> DataFrame:
-    """The batched-PQ serving plan over an already-resolved code table
-    — split out (r17) so the staged-union twin
-    (``streaming/ingest.pq_batch_topk_with_staged``) reuses the exact
-    plan over base ∪ staged codes.
-
-    r18: the |Q| quantized query vectors are collected once and the
-    |Q| x M x K LUT is computed driver-side (exact integer dots, the
-    pq_serve_topk note) — the query-side broadcasts are LocalRelations
-    and launch no jobs."""
-    from pyspark.sql import Window
-
-    spark = embeddings.sparkSession
-    m_sub, scale, dim = (
-        int(meta["m_sub"]), int(meta["scale"]), int(meta["dim"])
-    )
-    qvs = _collect_query_qvs(embeddings, query_ids, scale)
-    lut = spark.createDataFrame(
-        [
-            (qid, m, c, pdot)
-            for qid, qq in sorted(qvs.items())
-            for (m, c, pdot) in _pq_lut_rows(codebooks, qq, m_sub, dim)
-        ],
-        "query_id long, m int, code int, pdot long",
-    )
-    qrows = spark.createDataFrame(
-        sorted(qvs.items()), "query_id long, qq array<bigint>"
-    )
-    est = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("pdot").alias("est_dot"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("est_dot").desc(), F.col("vec_id")
-    )
-    cand = (
-        est.withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= rerank * k)
-        .drop("_rk")
-    )
-    qv = embeddings.select(
-        "vec_id", "label", _quantized(F.col("embedding"), scale).alias("q")
-    )
-    ranked = (
-        cand.join(qv, "vec_id")
-        .join(F.broadcast(qrows), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "label",
-            "est_dot",
-            _bigint_dot(F.col("q"), F.col("qq")).alias("dot_q"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("vec_id")
-    )
-    return (
-        ranked.withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.col("dot_q").desc(), "vec_id")
-    )
+    codes, codebooks, meta = load_pq_index(embeddings.sparkSession, path)
+    qvs = _collect_query_qvs(embeddings, query_ids, int(meta["scale"]))
+    return _adc_topk(embeddings, codes, codebooks, qvs, meta, k, rerank)
 
 
 def pq_recall_report(
@@ -2662,80 +2640,32 @@ def ivfpq_topk(
     looser estimate, so deployments should build the residual index;
     this form exists to gate the composition itself and to measure how
     much the residual step buys."""
-    from pyspark.sql import Window
-
-    spark = embeddings.sparkSession
     assigned, centers = build_ivf_lloyd_index(
         embeddings, n_clusters, n_iter, scale
     )
     codebooks = build_pq_codebooks(
         embeddings, m_sub, k_codes, pq_iter, scale, dim
     )
-    codes = pq_encode(embeddings, codebooks, m_sub, scale, dim)
-    qv = embeddings.select(
-        "vec_id", "label", _quantized(F.col("embedding"), scale).alias("q")
-    )
-    qrow = qv.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("q").alias("qq")
-    )
-    cd = F.aggregate(
-        F.zip_with(
-            F.col("centroid_q"), F.col("qq"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    probes = (
-        centers.join(F.broadcast(qrow))
-        .select("cluster", cd.alias("cd"))
-        .withColumn(
-            "_rn",
-            F.row_number().over(Window.orderBy(F.col("cd"), F.col("cluster"))),
-        )
-        .filter(F.col("_rn") <= n_probe)
-        .select("cluster")
-    )
-    cand_ids = (
-        assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id")
-    )
-    cb_df = spark.createDataFrame(
-        [(m, c, v) for (m, c), v in sorted(codebooks.items())],
-        "m int, code int, centroid_q array<bigint>",
-    )
-    qsub = _pq_subvectors(
-        embeddings.filter(F.col("vec_id") == query_vec_id), m_sub, dim, scale
-    ).select("m", F.col("subq").alias("qsub"))
-    lut = cb_df.join(F.broadcast(qsub), "m").select(
-        "m",
-        "code",
-        _bigint_dot(F.col("centroid_q"), F.col("qsub")).alias("pdot"),
-    )
-    est = (
-        codes.join(cand_ids, "vec_id", "left_semi")
-        .join(F.broadcast(lut), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("pdot").alias("est_dot"))
-    )
-    cand = est.withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.orderBy(F.col("est_dot").desc(), F.col("vec_id"))
-        ),
-    ).filter(F.col("_rk") <= rerank * k)
-    return (
-        cand.join(qv, "vec_id")
-        .join(F.broadcast(qrow))
-        .select(
-            "vec_id",
-            "label",
-            "est_dot",
-            _bigint_dot(F.col("q"), F.col("qq")).alias("dot_q"),
-        )
-        .orderBy(F.col("dot_q").desc(), "vec_id")
-        .limit(k)
-    )
+    # the codes carry their vector's assigned cluster row-locally, so
+    # the probe is the shared tail's cluster filter; a non-residual
+    # estimate has no centroid term (cterm 0)
+    codes = pq_encode(assigned, codebooks, m_sub, scale, dim, ["cluster"])
+    centers_dict = {
+        int(r["cluster"]): [int(v) for v in r["centroid_q"]]
+        for r in centers.collect()  # a LocalRelation: no job
+    }
+    qvs = _collect_query_qvs(embeddings, [query_vec_id], scale)
+    probes = {
+        qid: [
+            (c, 0)
+            for c, _ in _residual_probe_rows(centers_dict, qq, n_probe)
+        ]
+        for qid, qq in qvs.items()
+    }
+    meta = {"m_sub": m_sub, "scale": scale, "dim": dim}
+    return _adc_topk(
+        embeddings, codes, codebooks, qvs, meta, k, rerank, probes
+    ).drop("query_id")
 
 
 def ivfpq_residual_topk(
@@ -2767,12 +2697,8 @@ def ivfpq_residual_topk(
     query-subvector LUT.  Serving cost is identical to plain IVF-PQ;
     only training adds the one centroid-subtraction pass.
     Output (vec_id, label, est_dot, dot_q)."""
-    spark = embeddings.sparkSession
     assigned, centers = build_ivf_lloyd_index(
         embeddings, n_clusters, n_iter, scale
-    )
-    qv = embeddings.select(
-        "vec_id", "label", _quantized(F.col("embedding"), scale).alias("q")
     )
     # residuals straight off the assigned rows — same join-free shape
     # as save_ivfpq_residual_index (the former corpus-wide vec_id
@@ -2808,10 +2734,11 @@ def ivfpq_residual_topk(
         int(r["cluster"]): [int(v) for v in r["centroid_q"]]
         for r in centers.collect()
     }
-    return _ivfpq_residual_serve(
-        qv, codes_assigned, centers_dict, codebooks, query_vec_id,
-        k, n_probe, rerank, dim, m_sub,
-    )
+    meta = {"m_sub": m_sub, "scale": scale, "dim": dim}
+    return _residual_topk(
+        embeddings, codes_assigned, centers_dict, codebooks, meta,
+        [query_vec_id], k, n_probe, rerank,
+    ).drop("query_id")
 
 
 def _residual_probe_rows(
@@ -2836,81 +2763,30 @@ def _residual_probe_rows(
     return [(c, cterm) for _cd, c, cterm in scored[:n_probe]]
 
 
-def _ivfpq_residual_serve(
-    qv: DataFrame,
-    codes_assigned: DataFrame,
+def _residual_topk(
+    embeddings: DataFrame,
+    codes: DataFrame,
     centers: dict,
     codebooks: dict,
-    query_vec_id: int,
-    k: int = 10,
-    n_probe: int = 2,
-    rerank: int = 4,
-    dim: int = 64,
-    m_sub: int = 8,
+    meta,
+    query_ids: list[int],
+    k: int,
+    n_probe: int,
+    rerank: int,
 ) -> DataFrame:
-    """The residual-IVFADC serving tail over an ALREADY-BUILT index —
-    shared by the train-in-query gate (:func:`ivfpq_residual_topk`) and
-    the persisted layout (:func:`ivfpq_residual_topk_from_layout`):
-    rank coarse centroids for the query, keep ``n_probe`` lists, sum
-    the broadcast residual-LUT hits plus the per-cluster centroid dot
-    term, exact-rerank the top ``rerank * k``.  ``codes_assigned`` is
-    (vec_id, cluster, m, code); ``qv`` is (vec_id, label, q).
-
-    r18 (guide §1, VERDICT r17 task 3): ``centers`` and ``codebooks``
-    are the KB-sized driver artifacts (K rows / M x K rows); the
-    quantized query is collected once and the probe list + residual
-    LUT are computed driver-side in exact integer math, so the three
-    query-side broadcasts are LocalRelations (no build jobs) and the
-    probed clusters statically prune the partitioned code scan."""
-    from pyspark.sql import Window
-
-    spark = qv.sparkSession
-    qq_rows = (
-        qv.filter(F.col("vec_id") == query_vec_id).select("q").collect()
-    )
-    qq = (
-        [int(v) for v in qq_rows[0]["q"]]
-        if qq_rows and qq_rows[0]["q"] is not None
-        else None
-    )
-    probe_rows = _residual_probe_rows(centers, qq, n_probe) if qq else []
-    probes = spark.createDataFrame(probe_rows, "cluster int, cterm long")
-    lut = spark.createDataFrame(
-        _pq_lut_rows(codebooks, qq, m_sub, dim) if qq else [],
-        "m int, code int, pdot long",
-    )
-    qrow = spark.createDataFrame(
-        [(qq,)] if qq else [], "qq array<bigint>"
-    )
-    est = (
-        codes_assigned.filter(F.col("vec_id") != query_vec_id)
-        # the probe ids are literals: a static isin prunes the
-        # cluster-partitioned scan at planning time; the broadcast
-        # join then only attaches cterm (result-identical — the join
-        # already restricted to exactly these clusters)
-        .filter(F.col("cluster").isin([c for c, _ in probe_rows]))
-        .join(F.broadcast(probes), "cluster")
-        .join(F.broadcast(lut), ["m", "code"])
-        .groupBy("vec_id")
-        .agg((F.sum("pdot") + F.min("cterm")).alias("est_dot"))
-    )
-    cand = est.withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.orderBy(F.col("est_dot").desc(), F.col("vec_id"))
-        ),
-    ).filter(F.col("_rk") <= rerank * k)
-    return (
-        cand.join(qv, "vec_id")
-        .join(F.broadcast(qrow))
-        .select(
-            "vec_id",
-            "label",
-            "est_dot",
-            _bigint_dot(F.col("q"), F.col("qq")).alias("dot_q"),
-        )
-        .orderBy(F.col("dot_q").desc(), "vec_id")
-        .limit(k)
+    """Residual IVFADC over an ALREADY-BUILT index — train-in-query,
+    persisted, filtered or staged, one query or a batch: one collect of
+    the quantized queries, each query's own ``n_probe`` coarse lists
+    (:func:`_residual_probe_rows`), then the :func:`_adc_topk` tail.
+    ``codes`` is (vec_id, cluster, m, code[, label]); ``centers`` and
+    ``codebooks`` are the KB-sized driver-side dicts."""
+    qvs = _collect_query_qvs(embeddings, query_ids, int(meta["scale"]))
+    probes = {
+        qid: _residual_probe_rows(centers, qq, n_probe)
+        for qid, qq in qvs.items()
+    }
+    return _adc_topk(
+        embeddings, codes, codebooks, qvs, meta, k, rerank, probes
     )
 
 
@@ -3111,6 +2987,25 @@ def ivfpq_residual_encode_delta(
     )
 
 
+def load_ivfpq_residual_index(spark, path: str, root: str | None = None):
+    """Load a persisted residual-IVFADC index: (codes df, centers dict,
+    codebooks dict, meta row) of the layout's LIVE generation — the
+    :func:`load_pq_index` contract (refuses a torn layout; ``root``
+    lets a staged-aware caller read ONE resolved generation).  The
+    code table keeps its cluster partitioning, so the probed clusters
+    prune directories; centers, codebooks and meta are KB-sized
+    driver-side reads (no Spark job, r18)."""
+    if root is None:
+        root = read_current(path)
+    assert_not_torn(root)
+    return (
+        spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{root}/codes"),
+        read_centers(root),
+        read_codebooks(root),
+        read_tiny_rows(f"{root}/meta")[0],
+    )
+
+
 def ivfpq_residual_topk_from_layout(
     embeddings: DataFrame,
     path: str,
@@ -3121,32 +3016,12 @@ def ivfpq_residual_topk_from_layout(
 ) -> DataFrame:
     """Residual IVFADC served from the persisted layout — bit-identical
     to :func:`ivfpq_residual_topk` with the same build parameters (both
-    run :func:`_ivfpq_residual_serve` over value-identical tables); the
-    query pays only the probe-pruned code read plus the tiny exact
-    rerank."""
-    spark = embeddings.sparkSession
-    path = read_current(path)  # live generation (compaction-aware)
-    assert_not_torn(path)
-    meta = read_tiny_rows(f"{path}/meta")[0]
-    qv = embeddings.select(
-        "vec_id",
-        "label",
-        _quantized(F.col("embedding"), int(meta["scale"])).alias("q"),
-    )
-    # centers/codebooks are KB-sized driver artifacts (r18, the r17
-    # meta-read precedent): read driver-side, no scan jobs per serve
-    return _ivfpq_residual_serve(
-        qv,
-        spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{path}/codes"),
-        read_centers(path),
-        read_codebooks(path),
-        query_vec_id,
-        k,
-        n_probe,
-        rerank,
-        int(meta["dim"]),
-        int(meta["m_sub"]),
-    )
+    run :func:`_residual_topk` over value-identical tables); the query
+    pays only the probe-pruned code read plus the tiny exact rerank."""
+    index = load_ivfpq_residual_index(embeddings.sparkSession, path)
+    return _residual_topk(
+        embeddings, *index, [query_vec_id], k, n_probe, rerank
+    ).drop("query_id")
 
 
 def ivfpq_residual_batch_topk_from_layout(
@@ -3170,111 +3045,15 @@ def ivfpq_residual_batch_topk_from_layout(
     :func:`ivfpq_residual_topk_from_layout` (tested).
 
     Scale: the code scan reads only the UNION of all queries' probed
-    cluster partitions (the broadcast probe join drives dynamic
-    partition pruning); the LUT grows to |Q| x M x K rows — still
+    cluster partitions (the probed ids are literals: static partition
+    pruning); the LUT grows to |Q| x M x K rows — still
     broadcast-tiny; estimates key by (query_id, vec_id) so queries
     parallelize across the cluster.  Output (query_id, vec_id, label,
     est_dot, dot_q), top-k per query, ordered by (query_id, dot_q desc,
     vec_id)."""
-    spark = embeddings.sparkSession
-    path = read_current(path)  # live generation (compaction-aware)
-    assert_not_torn(path)
-    meta = read_tiny_rows(f"{path}/meta")[0]
-    codes = spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{path}/codes")
-    # centers/codebooks are KB-sized driver artifacts (r18)
-    return _ivfpq_residual_batch_serve(
-        embeddings, codes, read_centers(path), read_codebooks(path), meta,
-        query_ids, k, n_probe, rerank,
-    )
-
-
-def _ivfpq_residual_batch_serve(
-    embeddings: DataFrame,
-    codes: DataFrame,
-    centers: dict,
-    codebooks: dict,
-    meta,
-    query_ids: list[int],
-    k: int,
-    n_probe: int,
-    rerank: int,
-) -> DataFrame:
-    """The batched residual-IVFADC serving plan over already-resolved
-    index tables — split out (r17) so the staged-union twin
-    (``streaming/ingest.ivfpq_residual_batch_with_staged``) reuses the
-    exact plan over base ∪ staged codes.
-
-    r18: per-query probe lists and residual LUTs computed driver-side
-    from one |Q|-row collect (exact integer math, the
-    _ivfpq_residual_serve note); query-side broadcasts are
-    LocalRelations (no build jobs) and the union of probed clusters
-    statically prunes the partitioned code scan."""
-    from pyspark.sql import Window
-
-    spark = embeddings.sparkSession
-    m_sub, scale, dim = (
-        int(meta["m_sub"]), int(meta["scale"]), int(meta["dim"])
-    )
-    qv = embeddings.select(
-        "vec_id", "label", _quantized(F.col("embedding"), scale).alias("q")
-    )
-    qvs = _collect_query_qvs(embeddings, query_ids, scale)
-    qrows = spark.createDataFrame(
-        sorted(qvs.items()), "query_id long, qq array<bigint>"
-    )
-    probe_rows = [
-        (qid, c, cterm)
-        for qid, qq in sorted(qvs.items())
-        for c, cterm in _residual_probe_rows(centers, qq, n_probe)
-    ]
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cluster int, cterm long"
-    )
-    lut = spark.createDataFrame(
-        [
-            (qid, m, c, pdot)
-            for qid, qq in sorted(qvs.items())
-            for (m, c, pdot) in _pq_lut_rows(codebooks, qq, m_sub, dim)
-        ],
-        "query_id long, m int, code int, pdot long",
-    )
-    est = (
-        codes.filter(
-            F.col("cluster").isin(sorted({c for _, c, _ in probe_rows}))
-        )
-        .join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg((F.sum("pdot") + F.min("cterm")).alias("est_dot"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("est_dot").desc(), F.col("vec_id")
-    )
-    cand = (
-        est.withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= rerank * k)
-        .drop("_rk")
-    )
-    ranked = (
-        cand.join(qv, "vec_id")
-        .join(F.broadcast(qrows), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "label",
-            "est_dot",
-            _bigint_dot(F.col("q"), F.col("qq")).alias("dot_q"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("vec_id")
-    )
-    return (
-        ranked.withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.col("dot_q").desc(), "vec_id")
+    index = load_ivfpq_residual_index(embeddings.sparkSession, path)
+    return _residual_topk(
+        embeddings, *index, query_ids, k, n_probe, rerank
     )
 
 
@@ -3292,34 +3071,18 @@ def ivfpq_residual_filtered_topk_from_layout(
     label rides in the table, as for PQ), composing both prunings —
     coarse probe selection prunes partitions, the label filter prunes
     row groups within them — before any estimate arithmetic.  Same
-    :func:`_ivfpq_residual_serve` tail, so engine-exact against the
+    :func:`_residual_topk` tail, so engine-exact against the
     label-extended oracle."""
-    spark = embeddings.sparkSession
-    path = read_current(path)  # live generation (compaction-aware)
-    assert_not_torn(path)
-    meta = read_tiny_rows(f"{path}/meta")[0]
-    qv = embeddings.select(
-        "vec_id",
-        "label",
-        _quantized(F.col("embedding"), int(meta["scale"])).alias("q"),
-    )
-    codes = (
-        spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{path}/codes")
-        .filter(F.col("label") == label)
-        .drop("label")
-    )
-    return _ivfpq_residual_serve(
-        qv,
-        codes,
-        read_centers(path),
-        read_codebooks(path),
-        query_vec_id,
+    codes, *index = load_ivfpq_residual_index(embeddings.sparkSession, path)
+    return _residual_topk(
+        embeddings,
+        codes.filter(F.col("label") == label).drop("label"),
+        *index,
+        [query_vec_id],
         k,
         n_probe,
         rerank,
-        int(meta["dim"]),
-        int(meta["m_sub"]),
-    )
+    ).drop("query_id")
 
 
 def ivfpq_residual_topk_oracle(

@@ -1003,7 +1003,7 @@ QUERIES["ann_ivfpq_residual_topk"] = _emb_query(
 # residual IVFADC from the PERSISTED layout (r12): coarse centroids +
 # residual codebooks + cluster-partitioned code table built once per
 # (session, sf_dir); serving is the probe-pruned read through the same
-# _ivfpq_residual_serve tail, so bit-identical — same oracle.
+# _residual_topk tail, so bit-identical — same oracle.
 _IVFPQ_INDEX_CACHE: dict = {}
 
 

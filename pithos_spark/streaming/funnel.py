@@ -408,7 +408,7 @@ def streaming_ivfpq_residual_serve(
     of incoming query ids are answered against the frozen persisted
     residual-IVFADC layout — each batch is one
     functions/similarity.ivfpq_residual_batch_topk_from_layout pass
-    (per-query probe lists, dynamic-pruned read of the union of probed
+    (per-query probe lists, a probe-pruned read of the union of probed
     cluster partitions, |batch| x M x K broadcast residual LUT) and the
     per-query top-k rows append under ``sink_path``.
 

@@ -307,6 +307,18 @@ def _with_staged(spark, layout_path: str, root: str, base):
     )
 
 
+def _index_with_staged(spark, layout_path: str, load):
+    """An ANN index of the layout's live generation with its first
+    table (the codes, or the IVF assigned rows) unioned with the live
+    staged segments: ``load(spark, layout_path, root)`` is the layout's
+    loader (``similarity.load_pq_index``, ``load_ivfpq_residual_index``
+    or ``load_ivf_index``), and ``root`` is resolved ONCE for both the
+    base read and the staged mask (:func:`_with_staged`)."""
+    root = read_current(layout_path)
+    base, *rest = load(spark, layout_path, root)
+    return (_with_staged(spark, layout_path, root, base), *rest)
+
+
 def _write_segment_rows(rows, schema, key, tmp: str) -> None:
     """Write a staged segment's rows in the layout's declared column
     order, sorted on its ``key`` within the batch's own partitions: a
@@ -976,16 +988,6 @@ def streaming_pq_index_ingest(
     )
 
 
-def _pq_index_with_staged(spark, layout_path: str):
-    """(base ∪ staged codes, codebooks, meta) under one generation
-    resolution (:func:`_with_staged`)."""
-    from pithos_spark.functions.similarity import load_pq_index
-
-    root = read_current(layout_path)
-    codes, codebooks, meta = load_pq_index(spark, layout_path, root)
-    return _with_staged(spark, layout_path, root, codes), codebooks, meta
-
-
 def pq_topk_with_staged(
     embeddings,
     layout_path: str,
@@ -1002,10 +1004,13 @@ def pq_topk_with_staged(
     arithmetic, unlike the gram layout).  Scale: the staged union adds
     delta-sized scans below the same broadcast LUT join; everything
     else is the serving plan the plain read produces."""
-    from pithos_spark.functions.similarity import pq_serve_topk
+    from pithos_spark.functions.similarity import (
+        load_pq_index,
+        pq_serve_topk,
+    )
 
-    codes, codebooks, meta = _pq_index_with_staged(
-        embeddings.sparkSession, layout_path
+    codes, codebooks, meta = _index_with_staged(
+        embeddings.sparkSession, layout_path, load_pq_index
     )
     return pq_serve_topk(
         embeddings,
@@ -1030,17 +1035,20 @@ def pq_batch_topk_with_staged(
     """Batched PQ ANN over base + staged code segments — the
     production query-stream shape (many queries, ONE pass over the
     codes) serving a layout with un-folded streamed deltas: the staged
-    rows union under the same |Q|-keyed broadcast-LUT plan
-    (``similarity._pq_batch_serve``), so each query's rows stay
-    bit-identical to the single-query staged serve."""
-    from pithos_spark.functions.similarity import _pq_batch_serve
+    rows union under the same ADC tail (``similarity._adc_topk``), so
+    each query's rows stay bit-identical to the single-query staged
+    serve."""
+    from pithos_spark.functions.similarity import (
+        _adc_topk,
+        _collect_query_qvs,
+        load_pq_index,
+    )
 
-    codes, codebooks, meta = _pq_index_with_staged(
-        embeddings.sparkSession, layout_path
+    codes, codebooks, meta = _index_with_staged(
+        embeddings.sparkSession, layout_path, load_pq_index
     )
-    return _pq_batch_serve(
-        embeddings, codes, codebooks, meta, query_ids, k, rerank
-    )
+    qvs = _collect_query_qvs(embeddings, query_ids, int(meta["scale"]))
+    return _adc_topk(embeddings, codes, codebooks, qvs, meta, k, rerank)
 
 
 def compact_staged_pq(spark, layout_path: str) -> int:
@@ -1096,32 +1104,6 @@ def streaming_ivfpq_residual_ingest(
     )
 
 
-def _residual_index_with_staged(spark, layout_path: str):
-    """(base ∪ staged codes, centers, codebooks, meta) of the residual
-    index under one generation resolution (:func:`_with_staged`); the
-    frozen artifacts are driver-side reads."""
-    from pithos_spark.functions.similarity import (
-        RESIDUAL_CODES_SCHEMA,
-        read_centers,
-        read_codebooks,
-    )
-
-    root = read_current(layout_path)
-    assert_not_torn(root)
-    codes = _with_staged(
-        spark,
-        layout_path,
-        root,
-        spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{root}/codes"),
-    )
-    return (
-        codes,
-        read_centers(root),
-        read_codebooks(root),
-        read_tiny_rows(f"{root}/meta")[0],
-    )
-
-
 def ivfpq_residual_topk_with_staged(
     embeddings,
     layout_path: str,
@@ -1133,36 +1115,22 @@ def ivfpq_residual_topk_with_staged(
     """Residual IVFADC over base + staged code segments: the staged
     rows (cluster carried as a column) union under the same
     probe-rank / residual-LUT / exact-rerank tail
-    (``_ivfpq_residual_serve``), so a vector streamed in is searchable
-    before any fold.  Bit-identical to a layout whose codes were all
-    encoded in one pass with the same frozen centers+codebooks
+    (``similarity._residual_topk``), so a vector streamed in is
+    searchable before any fold.  Bit-identical to a layout whose codes
+    were all encoded in one pass with the same frozen centers+codebooks
     (assignment and encoding are row-local; staged vec_ids are
     disjoint from the base's by the ingest contract)."""
     from pithos_spark.functions.similarity import (
-        _ivfpq_residual_serve,
-        _quantized,
+        _residual_topk,
+        load_ivfpq_residual_index,
     )
 
-    codes, centers, codebooks, meta = _residual_index_with_staged(
-        embeddings.sparkSession, layout_path
+    index = _index_with_staged(
+        embeddings.sparkSession, layout_path, load_ivfpq_residual_index
     )
-    qv = embeddings.select(
-        "vec_id",
-        "label",
-        _quantized(F.col("embedding"), int(meta["scale"])).alias("q"),
-    )
-    return _ivfpq_residual_serve(
-        qv,
-        codes,
-        centers,
-        codebooks,
-        query_vec_id,
-        k,
-        n_probe,
-        rerank,
-        int(meta["dim"]),
-        int(meta["m_sub"]),
-    )
+    return _residual_topk(
+        embeddings, *index, [query_vec_id], k, n_probe, rerank
+    ).drop("query_id")
 
 
 def ivfpq_residual_batch_with_staged(
@@ -1177,20 +1145,18 @@ def ivfpq_residual_batch_with_staged(
     canonical index's query-stream shape with un-folded streamed
     deltas: staged rows (cluster as a column) union under the same
     per-query probe / |Q|-keyed residual-LUT / exact-rerank plan
-    (``similarity._ivfpq_residual_batch_serve``).  The probe join
-    filters staged rows by value where the base prunes by partition —
-    the usual delta-sized asymmetry the fold deletes."""
+    (``similarity._residual_topk``).  The probe filters staged rows by
+    value where the base prunes by partition — the usual delta-sized
+    asymmetry the fold deletes."""
     from pithos_spark.functions.similarity import (
-        _ivfpq_residual_batch_serve,
+        _residual_topk,
+        load_ivfpq_residual_index,
     )
 
-    codes, centers, codebooks, meta = _residual_index_with_staged(
-        embeddings.sparkSession, layout_path
+    index = _index_with_staged(
+        embeddings.sparkSession, layout_path, load_ivfpq_residual_index
     )
-    return _ivfpq_residual_batch_serve(
-        embeddings, codes, centers, codebooks, meta, query_ids, k, n_probe,
-        rerank,
-    )
+    return _residual_topk(embeddings, *index, query_ids, k, n_probe, rerank)
 
 
 def compact_staged_ivfpq_residual(spark, layout_path: str) -> int:
@@ -1255,9 +1221,7 @@ def ivf_assigned_with_staged(spark, layout_path: str):
     fold deletes."""
     from pithos_spark.functions.similarity import load_ivf_index
 
-    root = read_current(layout_path)
-    assigned, centers = load_ivf_index(spark, layout_path, root)
-    return _with_staged(spark, layout_path, root, assigned), centers
+    return _index_with_staged(spark, layout_path, load_ivf_index)
 
 
 def ivf_topk_with_staged(

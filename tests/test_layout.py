@@ -186,6 +186,18 @@ def test_ivfpq_residual_index_roundtrip_and_pruning(spark, layout_dir):
     assert got == want and len(got) == 10
 
 
+def _with_edge_queries(spark, emb):
+    """``emb`` plus one query row whose embedding is empty and one whose
+    embedding is NULL (ids past the corpus, so not in any index): an
+    ANN read answers neither, in any shape."""
+    edge_ids = (10**6, 10**6 + 1)
+    edge = spark.createDataFrame(
+        [(edge_ids[0], [], 0), (edge_ids[1], None, 0)],
+        emb.select("vec_id", "embedding", "label").schema,
+    )
+    return emb.unionByName(edge), edge_ids
+
+
 @pytest.mark.slow
 def test_pq_batch_from_layout_matches_single_query(spark, layout_dir):
     """Each query's rows in the one-pass batched PQ serve equal the
@@ -197,7 +209,8 @@ def test_pq_batch_from_layout_matches_single_query(spark, layout_dir):
     emb = T.load_tables(spark, SF_ORACLE)["embeddings"]
     path = f"{layout_dir}/pq_index_batch"
     similarity.save_pq_index(emb, path)
-    ids = [0, 7, 42]
+    emb, edge_ids = _with_edge_queries(spark, emb)
+    ids = [0, 7, 42, *edge_ids]
     batch = similarity.pq_batch_topk_from_layout(emb, path, ids, 10).collect()
     by_q = {}
     for r in batch:
@@ -209,6 +222,9 @@ def test_pq_batch_from_layout_matches_single_query(spark, layout_dir):
             tuple(r)
             for r in similarity.pq_topk_from_layout(emb, path, qid, 10).collect()
         ]
+        if qid in edge_ids:
+            assert single == [] and qid not in by_q
+            continue
         assert by_q[qid] == single and len(single) == 10
 
 
@@ -283,11 +299,11 @@ def test_ivfpq_residual_incremental_append_equals_one_pass(spark, layout_dir):
     from pithos_spark import tables as T
     from pithos_spark.functions import similarity
     from pithos_spark.functions.similarity import (
-        _ivfpq_residual_serve,
         _lloyd_assign,
         _pq_assign,
         _pq_subvectors_from_q,
         _quantized,
+        _residual_topk,
     )
 
     emb = T.load_tables(spark, SF_ORACLE)["embeddings"]
@@ -347,10 +363,10 @@ def test_ivfpq_residual_incremental_append_equals_one_pass(spark, layout_dir):
     ).join(rqv.select("vec_id", "cluster"), "vec_id")
     want = [
         tuple(r)
-        for r in _ivfpq_residual_serve(
+        for r in _residual_topk(
             # centers/codebooks are driver-side dicts since r18
-            qv, codes_full, centers, codebooks, 0, 10, 2, 4, dim, m_sub
-        ).collect()
+            emb, codes_full, centers, codebooks, meta, [0], 10, 2, 4
+        ).drop("query_id").collect()
     ]
     assert got == want and len(got) == 10
 
@@ -367,7 +383,8 @@ def test_ivfpq_residual_batch_matches_single_query(spark, layout_dir):
     emb = T.load_tables(spark, SF_ORACLE)["embeddings"]
     path = f"{layout_dir}/ivfpq_residual_batch"
     similarity.save_ivfpq_residual_index(emb, path)
-    ids = [0, 7, 42, 99, 123]
+    emb, edge_ids = _with_edge_queries(spark, emb)
+    ids = [0, 7, 42, 99, 123, *edge_ids]
     batch = similarity.ivfpq_residual_batch_topk_from_layout(
         emb, path, ids, 10
     ).collect()
@@ -383,6 +400,9 @@ def test_ivfpq_residual_batch_matches_single_query(spark, layout_dir):
                 emb, path, qid, 10
             ).collect()
         ]
+        if qid in edge_ids:
+            assert single == [] and qid not in by_q
+            continue
         assert by_q[qid] == single and len(single) == 10
 
 

@@ -2849,7 +2849,8 @@ def test_staged_layout_job_counts(spark, tmp_path, caplog):
     served = {}
     define = _jobs_run(
         spark, lambda: served.setdefault(
-            "index", ing._pq_index_with_staged(spark, layout)
+            "index",
+            ing._index_with_staged(spark, layout, sim.load_pq_index),
         )
     )
     # the serving tail: the query-vector collect, then the plan's jobs
@@ -2862,6 +2863,61 @@ def test_staged_layout_job_counts(spark, tmp_path, caplog):
     ))
     assert folded["n"] == delta.count() * 8  # M = 8 code rows per vector
     assert (stage, define, read, fold) == (2, 0, 6, 3)
+
+
+# (single-query serve, batch serve) jobs over base ∪ 2 staged segments,
+# then over the folded generation
+_ANN_SERVE_JOBS = {"pq": ((6, 9), (6, 9)), "residual": ((7, 10), (7, 10))}
+
+
+@pytest.mark.parametrize("kind", sorted(_ANN_SERVE_JOBS))
+def test_staged_ann_serve_job_counts(spark, tmp_path, kind):
+    """The Spark jobs of the PQ-family serve shapes — plain PQ and
+    residual IVFADC, one query and a batch of three — over a base plus
+    two staged segments, and again after the fold: the query-vector
+    collect, then the serving plan's jobs.  All four shapes run one ADC
+    tail, so a change to it moves these counts."""
+    import pyspark.sql.functions as F
+
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.functions.layoutcommit import staged_segment_keys
+
+    save, ingest, single, batch, fold = {
+        "pq": (
+            sim.save_pq_index, ing.streaming_pq_index_ingest,
+            ing.pq_topk_with_staged, ing.pq_batch_topk_with_staged,
+            ing.compact_staged_pq,
+        ),
+        "residual": (
+            sim.save_ivfpq_residual_index,
+            ing.streaming_ivfpq_residual_ingest,
+            ing.ivfpq_residual_topk_with_staged,
+            ing.ivfpq_residual_batch_with_staged,
+            ing.compact_staged_ivfpq_residual,
+        ),
+    }[kind]
+    emb = T.load_tables(spark, SF_SMOKE)["embeddings"]
+    layout = str(tmp_path / kind)
+    save(emb.filter(F.col("vec_id") % 4 != 3), layout)
+    src = str(tmp_path / "src")
+    emb.filter(F.col("vec_id") % 4 == 3).repartition(2).write.parquet(src)
+    _run_stream(spark, ingest, src, emb.schema, layout, str(tmp_path / "ckpt"))
+    assert len(staged_segment_keys(layout)) == 2
+
+    def serve_jobs():
+        # query 7 is a staged vector
+        return (
+            _jobs_run(spark, lambda: single(emb, layout, 7, 10).collect()),
+            _jobs_run(
+                spark, lambda: batch(emb, layout, [0, 7, 42], 10).collect()
+            ),
+        )
+
+    staged = serve_jobs()
+    assert fold(spark, layout) > 0
+    assert (staged, serve_jobs()) == _ANN_SERVE_JOBS[kind]
 
 
 def test_declared_layout_schemas_match_disk(spark, tmp_path):
