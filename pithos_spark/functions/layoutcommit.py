@@ -29,6 +29,20 @@ GENERATIONS:
   pointer swap and the staged rmtree harmless, and a re-run of
   compaction a pure cleanup.
 
+A generation is FULL (its tables are complete: generation 0, or a
+major fold's output) or THIN (a minor fold's output).  A thin
+generation holds three things: a ``BASE`` file naming the full
+generation whose base tables it serves (``""`` = generation 0), one
+``run`` table (the delta folded so far, one file in the layout's
+segment schema, sorted on its key) and ``folded_segments``.  The base
+tables are referenced, never copied, so a minor fold writes O(delta)
+bytes.  Thin generations never chain: a minor fold over a thin
+generation names the same full generation.  :func:`tables_root` is the
+one resolver from a generation to its base tables' root — every base
+read, append, torn-marker check and frozen-artifact read of a layout
+with minor folds goes through it — and :func:`run_path` names the run,
+which readers scan together with the live staged segments.
+
 Nothing here is reachable from an executor: these are driver-side
 metadata operations on a handful of tiny files, same tier as the
 layouts' 1-row stats reads.  The ``os``-level calls bind this to a
@@ -50,6 +64,8 @@ import shutil
 CURRENT = "CURRENT"
 FOLD_TMP = "_fold_tmp"
 FOLD_GEN_PREFIX = "fold_gen_"
+BASE = "BASE"
+RUN = "run"
 
 
 def write_tiny_table(df, path: str, mode: str = "overwrite") -> None:
@@ -112,6 +128,42 @@ def read_current(layout_path: str) -> str:
     except FileNotFoundError:
         return layout_path
     return os.path.join(layout_path, rel) if rel else layout_path
+
+
+def tables_root(gen_root: str) -> str:
+    """THE resolver from a generation to the root of its base tables:
+    ``gen_root`` itself for a full generation; for a thin one, the
+    full generation its ``BASE`` file names (a sibling directory, or
+    the layout root for generation 0).  One tiny file read."""
+    try:
+        with open(os.path.join(gen_root, BASE)) as f:
+            rel = f.read().strip()
+    except FileNotFoundError:
+        return gen_root
+    layout_path = os.path.dirname(os.path.normpath(gen_root))
+    return os.path.join(layout_path, rel) if rel else layout_path
+
+
+def run_path(gen_root: str) -> str | None:
+    """The run table of a thin generation, or None for a full one."""
+    p = os.path.join(gen_root, RUN)
+    return p if os.path.isdir(p) else None
+
+
+def write_base_pointer(gen_dir: str, layout_path: str, base_root: str) -> None:
+    """Make the generation being written under ``gen_dir`` thin: its
+    ``BASE`` file names the full generation at ``base_root`` (written
+    before the directory is renamed into place, so an installed thin
+    generation always has it)."""
+    rel = (
+        ""
+        if os.path.abspath(base_root) == os.path.abspath(layout_path)
+        else os.path.basename(os.path.normpath(base_root))
+    )
+    with open(os.path.join(gen_dir, BASE), "w") as f:
+        f.write(rel)
+        f.flush()
+        os.fsync(f.fileno())
 
 
 def commit_current(layout_path: str, gen_rel: str) -> None:
@@ -249,9 +301,10 @@ def gc_generations(layout_path: str) -> int:
     """Reclaim superseded generations (VERDICT r15 task 5 — the
     'garbage for an external janitor' caveat, now in-engine): delete
     every ``fold_gen_<k>`` directory the CURRENT pointer does not
-    name, plus any leftover fold scratch dir.  Each fold writes a
-    COMPLETE copy of the layout, so without this a daily-compacted
-    layout doubles its footprint per fold forever.
+    name — except the full generation a thin CURRENT serves its base
+    tables from — plus any leftover fold scratch dir.  A major fold
+    writes a COMPLETE copy of the layout and a minor fold a new run, so
+    without this a compacted layout grows by a copy per fold forever.
 
     Correctness: readers resolve CURRENT exactly once per read and
     never hold a path into a non-CURRENT generation, so these
@@ -273,16 +326,18 @@ def gc_generations(layout_path: str) -> int:
     directories removed; a crash mid-GC leaves skippable orphans a
     re-run finishes.
 
-    When a fold generation is live, generation 0's leftovers under the
-    layout root (its table directories and any stale torn marker) are
-    reclaimed too — post-fold disk holds exactly ONE generation.  The
+    When a fold generation's tables are live, generation 0's leftovers
+    under the layout root (its table directories and any stale torn
+    marker) are reclaimed too — post-fold disk holds exactly ONE full
+    generation (plus the thin one serving from it, if any).  The
     staging namespace (``staged*``) is never touched here: that is
     ``_gc_staged``'s job, scoped to folded keys so concurrent ingest
     survives."""
     cur = os.path.abspath(read_current(layout_path))
-    if not os.path.isdir(cur):  # broken pointer: refuse to GC anything
-        return 0
-    gen0_live = cur == os.path.abspath(layout_path)
+    base = os.path.abspath(tables_root(cur))
+    if not (os.path.isdir(cur) and os.path.isdir(base)):
+        return 0  # broken pointer: refuse to GC anything
+    gen0_live = base == os.path.abspath(layout_path)
     keep = {
         CURRENT,
         "staged",
@@ -293,7 +348,7 @@ def gc_generations(layout_path: str) -> int:
     n = 0
     for name in os.listdir(layout_path):
         full = os.path.join(layout_path, name)
-        if name in keep or os.path.abspath(full) == cur:
+        if name in keep or os.path.abspath(full) in (cur, base):
             continue
         if name.startswith(FOLD_GEN_PREFIX) or name == FOLD_TMP:
             shutil.rmtree(full, ignore_errors=True)
@@ -327,11 +382,11 @@ def finalize_rebuild(layout_path: str) -> None:
     2. delete CURRENT — the atomic cutover (absent pointer resolves to
        generation 0);
     3. garbage-collect everything the rebuild supersedes: old
-       ``fold_gen_*`` generations (their torn markers go with them),
-       the fold scratch dir, and the staging area — including the
-       ``*_tmp`` halves, so half-written segment dirs from a crashed
-       ingest don't outlive the rebuild as permanent garbage (ADVICE
-       r16).
+       ``fold_gen_*`` generations, full and thin (their torn markers
+       go with them), the fold scratch dir, and the staging area —
+       including the ``*_tmp`` halves, so half-written segment dirs
+       from a crashed ingest don't outlive the rebuild as permanent
+       garbage (ADVICE r16).
 
     A crash between 1 and 2 leaves the old generation live (and still
     refusing if torn) with the rebuild invisible — re-run the rebuild.

@@ -39,8 +39,23 @@ from pithos_spark.functions.layoutcommit import (
     end_append,
     read_current,
     read_tiny_rows,
+    run_path,
+    tables_root,
     write_tiny_table,
 )
+
+
+def _gen_table(spark, root: str, table: str, schema=None) -> DataFrame:
+    """``table`` of the generation at ``root``: the base table under
+    ``layoutcommit.tables_root(root)``, unioned with the run when the
+    generation is thin (a minor fold's merged delta, read with the base
+    table's schema).  With a full generation this is the base read."""
+    reader = spark.read.schema(schema) if schema else spark.read
+    df = reader.parquet(f"{tables_root(root)}/{table}")
+    run = run_path(root)
+    if run:
+        df = df.unionByName(spark.read.schema(df.schema).parquet(run))
+    return df
 
 
 def _quantized(col: F.Column, scale: int = 1000) -> F.Column:
@@ -1053,7 +1068,9 @@ def append_to_ivf_index(
     at save time), never from the caller: pass ``scale`` only for
     pre-meta layouts (it is rejected if it contradicts the stored
     value — ADVICE r14's silent-misassignment fix)."""
-    path = read_current(path)  # append into the live generation
+    # append into the live generation's base tables (a thin
+    # generation's run is left to the folds)
+    path = tables_root(read_current(path))
     delta = ivf_assign_delta(
         new_embeddings.sparkSession, new_embeddings, path, scale
     )
@@ -1139,10 +1156,11 @@ def load_ivf_index(
     fold-between-two-resolutions race — see :func:`load_pq_index`)."""
     if root is None:
         root = read_current(path)
-    assert_not_torn(root)
+    tables = tables_root(root)
+    assert_not_torn(tables)
     return (
-        spark.read.parquet(f"{root}/assigned"),
-        spark.read.parquet(f"{root}/centers"),
+        _gen_table(spark, root, "assigned"),
+        spark.read.parquet(f"{tables}/centers"),
     )
 
 
@@ -2128,10 +2146,13 @@ def load_pq_index(spark, path: str, root: str | None = None):
     CURRENT once for the base and again for the staged mask races a
     concurrent fold — segments folded between the two reads would be
     masked out while their rows exist only in the newer base (ADVICE
-    r16)."""
+    r16).  The codes of a thin generation (a minor fold's) are its base
+    codes ∪ its run (:func:`_gen_table`); the tiny tables are the
+    base's."""
     if root is None:
         root = read_current(path)
-    assert_not_torn(root)
+    tables = tables_root(root)
+    assert_not_torn(tables)
     # 1-row meta read driver-side: a distributed job per serve just to
     # fetch four ints was pure scheduling overhead (r17, guide §1).
     # r18: the M x K codebooks are the same KB-class artifact — read
@@ -2139,9 +2160,9 @@ def load_pq_index(spark, path: str, root: str | None = None):
     # the driver, so a distributed codebook scan per serve bought
     # nothing but a job).  Same parquet bytes, same values.
     return (
-        spark.read.schema(PQ_CODES_SCHEMA).parquet(f"{root}/codes"),
-        read_codebooks(root),
-        read_tiny_rows(f"{root}/meta")[0],
+        _gen_table(spark, root, "codes", PQ_CODES_SCHEMA),
+        read_codebooks(tables),
+        read_tiny_rows(f"{tables}/meta")[0],
     )
 
 
@@ -2155,7 +2176,7 @@ def append_to_pq_index(new_embeddings: DataFrame, path: str) -> None:
     row-local given frozen codebooks.  Codebook DRIFT is the documented
     limitation, as for any frozen production quantizer: when the
     vector distribution moves, retrain via save_pq_index and re-encode."""
-    gen = read_current(path)
+    gen = tables_root(read_current(path))
     assert_not_torn(gen)
     codes = pq_encode_delta(new_embeddings.sparkSession, new_embeddings, gen)
     # torn-append marker (VERDICT r15 task 4): a crash mid-append
@@ -2167,9 +2188,9 @@ def append_to_pq_index(new_embeddings: DataFrame, path: str) -> None:
     # compacted layouts; an at-least-once source must use the staged
     # streaming path (streaming/ingest.streaming_pq_index_ingest)
     # instead — its per-batch installs are idempotent.  The append
-    # lands in the SAME generation the codebooks came from (one
+    # lands in the SAME base tables the codebooks came from (one
     # resolution above — a second read_current here could race a
-    # concurrent fold).
+    # concurrent fold); a thin generation serves them beside its run.
     begin_append(gen)
     order_pq_codes(codes).write.mode("append").parquet(f"{gen}/codes")
     end_append(gen)
@@ -2923,7 +2944,7 @@ def append_to_ivfpq_residual_index(
     production quantizer: when the distribution moves, retrain via
     :func:`save_ivfpq_residual_index`."""
     spark = new_embeddings.sparkSession
-    path = read_current(path)  # append into the live generation
+    path = tables_root(read_current(path))  # the live generation's base
     assert_not_torn(path)  # never append onto a torn layout
     codes = ivfpq_residual_encode_delta(spark, new_embeddings, path)
     # torn-append marker (VERDICT r15 task 4): see append_to_pq_index —
@@ -2997,12 +3018,13 @@ def load_ivfpq_residual_index(spark, path: str, root: str | None = None):
     driver-side reads (no Spark job, r18)."""
     if root is None:
         root = read_current(path)
-    assert_not_torn(root)
+    tables = tables_root(root)
+    assert_not_torn(tables)
     return (
-        spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(f"{root}/codes"),
-        read_centers(root),
-        read_codebooks(root),
-        read_tiny_rows(f"{root}/meta")[0],
+        _gen_table(spark, root, "codes", RESIDUAL_CODES_SCHEMA),
+        read_centers(tables),
+        read_codebooks(tables),
+        read_tiny_rows(f"{tables}/meta")[0],
     )
 
 

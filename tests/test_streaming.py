@@ -2817,6 +2817,11 @@ def test_staged_layout_job_counts(spark, tmp_path, caplog):
         "df", ing.list_objects_with_staged(spark, layout, "NATION_2", "", "/")
     ))
     read = _jobs_run(spark, lambda: listing["df"].collect())
+    # the staged telemetry reads each segment with its declared schema
+    stats = _jobs_run(
+        spark, lambda: ing.objects_staged_stats(spark, layout).collect()
+    )
+    assert stats == 4
     with caplog.at_level(logging.INFO, logger="pithos_spark"):
         assert ing.compact_staged_objects_if_needed(spark, layout) == 0
         folded = {}
@@ -2857,6 +2862,10 @@ def test_staged_layout_job_counts(spark, tmp_path, caplog):
     read = _jobs_run(spark, lambda: ing.pq_topk_with_staged(
         emb, layout, 0, 10
     ).collect())
+    stats = _jobs_run(
+        spark, lambda: ing.ann_staged_stats(spark, layout).collect()
+    )
+    assert stats == 4
     folded = {}
     fold = _jobs_run(spark, lambda: folded.setdefault(
         "n", ing.compact_staged_pq_if_needed(spark, layout, 2)
@@ -3025,3 +3034,395 @@ def test_empty_batch_installs_no_segment(spark, tmp_path, caplog, kind):
         for r in caplog.records
     )
     assert fold(spark, layout) == 0
+
+
+# --- tiered folds: a minor fold merges the segments into a run ----------
+
+
+def _append_batch(rows, src):
+    """Add ``rows`` to a stream source as ONE new file: one more
+    micro-batch for the next :func:`_run_stream` over the same
+    checkpoint (batch ids, and so the objects ``_seq``, keep rising)."""
+    rows.repartition(1).write.mode("append").parquet(src)
+
+
+def _objects_delta(objects, pred, bump):
+    """Overwrites (size bumped) and tombstones (every third inode) of
+    the objects ``pred`` selects — at most once per key, the ingest
+    contract."""
+    import pyspark.sql.functions as F
+
+    ik = F.col("inode").cast("long")
+    return (
+        objects.filter(pred)
+        .withColumn("size", F.col("size") + bump)
+        .withColumn("_tombstone", ik % 3 == 0)
+    )
+
+
+def _apply_objects_delta(state: dict, delta, columns) -> None:
+    """The driver-side reference for one mutation batch: ``state`` maps
+    (bucket, object) to the row's ``columns`` tuple; an upsert replaces
+    the row, a tombstone deletes it."""
+    for r in delta.select(*columns, "_tombstone").collect():
+        key = (r["bucket"], r["object"])
+        if r["_tombstone"]:
+            state.pop(key, None)
+        else:
+            state[key] = tuple(r)[:-1]
+
+
+def _objects_state(objects) -> dict:
+    return {(r["bucket"], r["object"]): tuple(r) for r in objects.collect()}
+
+
+# the minor fold's driver-side steps, in order: the BASE pointer that
+# makes its generation thin, then the five every fold shares
+_MINOR_CRASH_POINTS = ["write_base_pointer"] + _CRASH_POINTS
+
+
+@pytest.mark.parametrize("kind", ["objects", "pq"])
+def test_minor_fold_crash_recovery(spark, tmp_path, kind):
+    """The minor fold in the crash matrix: one small segment staged per
+    round (every fold stays minor), the policy fold killed at each
+    driver-side step in turn.  The torn state's staged read equals the
+    read after a re-run of the policy recovers (redoes the fold, or
+    finishes its cleanup), and the rounds' answers accumulate to the
+    batch reference — no double count, no loss (each round's delta
+    touches keys no other round does, so a loss would persist)."""
+    import pyspark.sql.functions as F
+    import pytest as _pt
+
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.functions.layoutcommit import (
+        read_current,
+        run_path,
+        staged_segment_keys,
+        tables_root,
+    )
+
+    t = T.load_tables(spark, SF_SMOKE)
+    layout = str(tmp_path / kind)
+    if kind == "objects":
+        objects = T.objects_df(t)
+        ing.save_objects_layout(objects, layout)
+        ik = F.col("inode").cast("long")
+        deltas = [
+            _objects_delta(objects, ik % 97 == i, 100 * (i + 1))
+            for i in range(len(_MINOR_CRASH_POINTS))
+        ]
+        stage, policy = (
+            ing.streaming_objects_ingest,
+            ing.compact_staged_objects_if_needed,
+        )
+
+        def read():
+            return sorted(
+                tuple(r)
+                for r in ing.objects_with_staged(spark, layout)
+                .select(*objects.columns)
+                .collect()
+            )
+    else:
+        emb = t["embeddings"]
+        n = len(_MINOR_CRASH_POINTS)
+        sim.save_pq_index(emb.filter(F.col("vec_id") % 100 >= n), layout)
+        deltas = [emb.filter(F.col("vec_id") % 100 == i) for i in range(n)]
+        stage, policy = (
+            ing.streaming_pq_index_ingest,
+            ing.compact_staged_pq_if_needed,
+        )
+
+        def read():  # every code row the staged serve would score
+            codes = ing._index_with_staged(spark, layout, sim.load_pq_index)[0]
+            return sorted(tuple(r) for r in codes.collect())
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    for crash_fn, delta in zip(_MINOR_CRASH_POINTS, deltas):
+        _append_batch(delta, src)
+        _run_stream(spark, stage, src, delta.schema, layout, ckpt)
+
+        mp = _pt.MonkeyPatch()
+        mp.setattr(ing, crash_fn, _boom)
+        with _pt.raises(RuntimeError, match="injected crash"):
+            policy(spark, layout, 1)
+        mp.undo()
+        torn = read()
+
+        # recovery: at threshold 0 the policy folds whatever is still
+        # live (minor), or with nothing live just finishes the cleanup
+        policy(spark, layout, 0)
+        assert read() == torn, f"torn staged read after a crash at {crash_fn}"
+        assert staged_segment_keys(layout) == []
+        assert run_path(read_current(layout)) is not None  # still minor
+
+    if kind == "objects":
+        state = _objects_state(objects)
+        for delta in deltas:
+            _apply_objects_delta(state, delta, objects.columns)
+        assert read() == sorted(state.values())
+    else:  # the base codes plus every delta encoded once
+        tables = tables_root(read_current(layout))
+        ref = sim.load_pq_index(spark, layout, tables)[0].unionByName(
+            sim.pq_encode_delta(
+                spark, emb.filter(F.col("vec_id") % 100 < n), tables
+            ).select(*sim.PQ_CODES_SCHEMA.fieldNames())
+        )
+        assert read() == sorted(tuple(r) for r in ref.collect())
+
+
+def test_tiered_fold_sequence(spark, tmp_path, caplog):
+    """Five policy folds of the objects layout and the PQ index: the
+    first three go minor (the run stays under MAJOR_FOLD_RUN_PERCENT of
+    the base), the fourth's larger delta makes it major, and the fifth
+    goes minor again, over the full generation the major wrote.  After
+    every step the staged state and listing equal the reference state
+    (the mutations applied in order on the driver, then listed), and
+    the staged PQ top-k (and the plain loader's code rows) equal the
+    one-pass frozen-codebook layout's; after each minor fold the full
+    generation the thin one names survives ``gc_generations``; every
+    decision is logged, the existing policy line unchanged."""
+    import logging
+    import os
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.functions.layoutcommit import (
+        gc_generations,
+        read_current,
+        run_path,
+        tables_root,
+    )
+    from pithos_spark.operators.listing import list_objects
+
+    t = T.load_tables(spark, SF_SMOKE)
+    objects, emb = T.objects_df(t), t["embeddings"]
+    ik, vid = F.col("inode").cast("long"), F.col("vec_id")
+    o_layout, p_layout = str(tmp_path / "objects"), str(tmp_path / "pq")
+    ing.save_objects_layout(objects, o_layout)
+    sim.save_pq_index(emb.filter(vid < 380), p_layout)
+    p_ref = str(tmp_path / "pq_ref")
+    shutil.copytree(p_layout, p_ref)
+    # three small deltas (~2% of each base), one that crosses 10%, and
+    # one more small one
+    o_deltas = [_objects_delta(objects, ik % 53 == i, 10 * (i + 1))
+                for i in range(3)]
+    o_deltas.append(_objects_delta(objects, ik % 7 == 5, 1000))
+    o_deltas.append(_objects_delta(objects, ik % 53 == 3, 2000))
+    p_deltas = [emb.filter((vid >= lo) & (vid < hi))
+                for lo, hi in ((380, 390), (390, 400), (400, 410),
+                               (410, 490), (490, 500))]
+    majors = [False, False, False, True, False]
+
+    state = _objects_state(objects)
+    for step, (o_delta, p_delta) in enumerate(zip(o_deltas, p_deltas)):
+        for layout, fn, delta in (
+            (o_layout, ing.streaming_objects_ingest, o_delta),
+            (p_layout, ing.streaming_pq_index_ingest, p_delta),
+        ):
+            src, ckpt = f"{layout}_src", f"{layout}_ckpt"
+            _append_batch(delta, src)
+            _run_stream(spark, fn, src, delta.schema, layout, ckpt)
+        _apply_objects_delta(state, o_delta, objects.columns)
+        sim.append_to_pq_index(p_delta, p_ref)
+
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="pithos_spark"):
+            assert ing.compact_staged_objects_if_needed(spark, o_layout, 1) > 0
+            assert ing.compact_staged_pq_if_needed(spark, p_layout, 1) > 0
+        msgs = [r.getMessage() for r in caplog.records]
+        tier = [m for m in msgs if m.startswith("fold tier ")]
+        assert [m.split(",")[0] for m in tier] == [
+            f"fold tier {o_layout}: {'major' if majors[step] else 'minor'}",
+            f"fold tier {p_layout}: {'major' if majors[step] else 'minor'}",
+        ], msgs
+        assert all(
+            m.endswith(f"major at {ing.MAJOR_FOLD_RUN_PERCENT}%") for m in tier
+        )
+        assert any(
+            m.startswith(f"fold policy {o_layout}: 1 live segments, "
+                         "threshold 1: folded ")
+            for m in msgs
+        )
+
+        for layout in (o_layout, p_layout):
+            root = read_current(layout)
+            if not majors[step]:  # thin: its full generation survives GC
+                assert run_path(root) is not None
+                gc_generations(layout)
+                assert os.path.isdir(tables_root(root))
+                assert tables_root(root) != root
+            else:  # major: a full generation, alone on disk
+                assert run_path(root) is None
+                assert sorted(os.listdir(layout)) == [
+                    "CURRENT", os.path.basename(root)
+                ]
+
+        got = ing.objects_with_staged(spark, o_layout).select(*objects.columns)
+        assert sorted(tuple(r) for r in got.collect()) == sorted(
+            state.values()
+        ), step
+        rebuilt = spark.createDataFrame(list(state.values()), objects.schema)
+        assert [
+            tuple(r)
+            for r in ing.list_objects_with_staged(
+                spark, o_layout, "NATION_2", "", None, None, 1000
+            ).collect()
+        ] == [
+            tuple(r)
+            for r in list_objects(
+                rebuilt, "NATION_2", "", None, None, 1000
+            ).collect()
+        ], step
+        want = [
+            tuple(r)
+            for r in sim.pq_topk_from_layout(emb, p_ref, 395, 10).collect()
+        ]
+        assert [
+            tuple(r)
+            for r in ing.pq_topk_with_staged(emb, p_layout, 395, 10).collect()
+        ] == want, step
+        # the plain loader serves a thin generation's base codes ∪ run
+        assert sorted(
+            tuple(r) for r in sim.load_pq_index(spark, p_layout)[0].collect()
+        ) == sorted(
+            tuple(r) for r in sim.load_pq_index(spark, p_ref)[0].collect()
+        ), step
+
+
+def test_appends_and_rebuild_over_thin_generation(spark, tmp_path):
+    """A batch append after a minor fold lands in the base tables the
+    thin generation names (appending into the thin generation would
+    hide the rows from every reader) and serves the one-pass answer,
+    for the PQ index and the plain-IVF index; a rebuild
+    (``finalize_rebuild``, every layout save's last step) over a thin
+    generation leaves only generation 0."""
+    import os
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.functions.layoutcommit import (
+        finalize_rebuild,
+        read_current,
+        run_path,
+    )
+
+    emb = T.load_tables(spark, SF_SMOKE)["embeddings"]
+    pct = F.col("vec_id") % 100
+    base, d1, d2 = emb.filter(pct >= 10), emb.filter(pct < 5), emb.filter(
+        (pct >= 5) & (pct < 10)
+    )
+    ivf_assigned, ivf_centers = sim.build_ivf_lloyd_index(base, 4, 1)
+
+    def ivf_save(rows, path):
+        sim.save_ivf_index(ivf_assigned, ivf_centers, path)
+
+    def ivf_read(path):
+        a, c = sim.load_ivf_index(spark, path)
+        return [
+            tuple(r)
+            for r in sim.ivf_query(a, c, 0, 10, 2, cluster_col="cluster",
+                                   metric="l2").collect()
+        ]
+
+    def pq_read(path):
+        return [
+            tuple(r)
+            for r in sim.pq_batch_topk_from_layout(emb, path, [0, 7], 10)
+            .collect()
+        ]
+
+    for save, append, stage, policy, read in (
+        (sim.save_pq_index, sim.append_to_pq_index,
+         ing.streaming_pq_index_ingest, ing.compact_staged_pq_if_needed,
+         pq_read),
+        (ivf_save, sim.append_to_ivf_index, ing.streaming_ivf_ingest,
+         ing.compact_staged_ivf_if_needed, ivf_read),
+    ):
+        layout, ref = str(tmp_path / "layout"), str(tmp_path / "ref")
+        save(base, layout)
+        shutil.copytree(layout, ref)
+        _append_batch(d1, f"{layout}_src")
+        _run_stream(spark, stage, f"{layout}_src", emb.schema, layout,
+                    f"{layout}_ckpt")
+        assert policy(spark, layout, 1) > 0
+        thin = read_current(layout)
+        assert run_path(thin) is not None  # the fold was minor
+        append(d2, layout)
+        assert sorted(os.listdir(thin)) == ["BASE", "folded_segments", "run"]
+        for d in (d1, d2):
+            append(d, ref)
+        assert read(layout) == read(ref)
+
+        # a rebuild's last step over the thin generation: generation 0
+        # (whose tables the thin generation served) alone remains
+        finalize_rebuild(layout)
+        assert sorted(os.listdir(layout)) == sorted(os.listdir(ref))
+        for p in (layout, ref, f"{layout}_src", f"{layout}_ckpt"):
+            shutil.rmtree(p)
+
+
+def test_minor_fold_job_counts(spark, tmp_path):
+    """The minor fold's job budget and the run's read tax, for the
+    objects and PQ layouts: a minor fold of two segments runs two jobs
+    (one scan shuffled into one partition, the sorted run write), and
+    with the run beside the base a staged read over two more segments
+    runs exactly the jobs it runs over base + two segments
+    (``test_staged_layout_job_counts``, ``_ANN_SERVE_JOBS``): the run
+    joins the segments' one scan."""
+    import pyspark.sql.functions as F
+
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.functions.layoutcommit import read_current, run_path
+
+    t = T.load_tables(spark, SF_SMOKE)
+    objects, emb = T.objects_df(t), t["embeddings"]
+    ik, pct = F.col("inode").cast("long"), F.col("vec_id") % 100
+    o_layout, p_layout = str(tmp_path / "objects"), str(tmp_path / "pq")
+    ing.save_objects_layout(objects, o_layout)
+    sim.save_pq_index(emb.filter(pct >= 8), p_layout)
+    cases = (
+        (o_layout, ing.streaming_objects_ingest,
+         ing.compact_staged_objects_if_needed,
+         [_objects_delta(objects, ik % 89 == i, 7) for i in range(4)]),
+        (p_layout, ing.streaming_pq_index_ingest,
+         ing.compact_staged_pq_if_needed,
+         [emb.filter(pct == i) for i in range(4)]),
+    )
+    for layout, stage, policy, deltas in cases:
+        src, ckpt = f"{layout}_src", f"{layout}_ckpt"
+        for delta in deltas[:2]:
+            _append_batch(delta, src)
+        _run_stream(spark, stage, src, deltas[0].schema, layout, ckpt)
+        fold = _jobs_run(spark, lambda: policy(spark, layout, 2))
+        assert run_path(read_current(layout)) is not None  # minor
+        assert fold == 2, layout
+        for delta in deltas[2:]:
+            _append_batch(delta, src)
+        _run_stream(spark, stage, src, deltas[0].schema, layout, ckpt)
+
+    listing = {}
+    define = _jobs_run(spark, lambda: listing.setdefault(
+        "df", ing.list_objects_with_staged(spark, o_layout, "NATION_2", "", "/")
+    ))
+    read = _jobs_run(spark, lambda: listing["df"].collect())
+    assert (define, read) == (0, 3)
+    serves = (
+        _jobs_run(spark, lambda: ing.pq_topk_with_staged(
+            emb, p_layout, 2, 10).collect()),
+        _jobs_run(spark, lambda: ing.pq_batch_topk_with_staged(
+            emb, p_layout, [0, 2, 42], 10).collect()),
+    )
+    assert serves == _ANN_SERVE_JOBS["pq"][0]
