@@ -1397,32 +1397,6 @@ _DHASH_ROWS = 8  # 8 rows x 8 difference bits = 64-bit dHash
 _DHASH_COLS = 9  # 9 sampled columns -> 8 horizontal gradients per row
 
 
-def image_dhash_fingerprints(documents: DataFrame) -> DataFrame:
-    """Per image asset, the classic dHash: nearest-neighbor downsample
-    to an 8x9 grayscale grid, one bit per horizontal gradient
-    (pixel < right neighbor), emitted as 8 band values of 8 bits each
-    (banding IS the fingerprint layout — 8-bit bands keep every value
-    in [0,255], so neither engine's 64-bit shift edge cases can fire,
-    the same reason simhash stays at 60 bits).
-
-    The DECODE is the stubbed stand-in the multimodal pipeline uses
-    (sources/multimodal.py): image assets are the ``doc_id % 3 == 0``
-    slice of ``assets_from_documents``, their payload bytes are the
-    utf-8 text, and "grayscale pixel" is the ASCII code of the sampled
-    character — deterministic, engine-portable (ascii()/ord() agree on
-    single-byte chars), and exactly where a PIL-backed real decode
-    would slot in.  Everything AFTER the pixel source — the
-    nearest-neighbor sampling arithmetic, gradient bits, band packing,
-    LSH, Hamming verify — is the real algorithm, unchanged.
-
-    Scale shape: ONE shuffle-free projection per image row — the
-    constant 8x9 grid is sampled, gradient-packed and banded by
-    row-local expressions (:func:`_stub_px_cols` +
-    :func:`_grad_band_cols`); no explode, window or groupBy anywhere
-    in the fingerprint (guide §2.4)."""
-    return _wide_to_long(_image_dhash_wide(documents), _DHASH_ROWS)
-
-
 def _stub_px_cols(grid: int) -> list[F.Column]:
     """The deterministic ASCII stand-in pixel source as ``grid``
     row-local column expressions over (text, n_px) — the same

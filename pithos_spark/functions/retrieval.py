@@ -31,6 +31,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from pithos_spark.functions.layoutcommit import (
+    append_segment,
+    live_staged_segs,
+    read_current,
+    staged_counters,
+    staged_rows,
+    write_segment_rows,
+)
+
 IDF_SCALE = 10_000
 NORM_SCALE = 1_000
 RRF_SCALE = 1_000_000
@@ -235,65 +244,108 @@ def write_postings_layout(documents: DataFrame, path: str) -> None:
     )
     from pithos_spark.functions.layoutcommit import finalize_rebuild
 
-    # a rebuild is the documented torn-append recovery: cut CURRENT
-    # back to this fresh generation 0 and GC old generations/staging,
-    # so the recovery works on previously-compacted layouts too
-    # (ADVICE r15)
+    # cut CURRENT back to this fresh generation 0 and GC old
+    # generations/staging, so a rebuild of a previously-compacted
+    # layout is what readers see (ADVICE r15)
     finalize_rebuild(path)
+
+
+def write_postings_segment(documents: DataFrame, tmp: str) -> DataFrame:
+    """The postings layout's segment writer, shared by the stream and
+    the batch append: one delta-linear :func:`build_postings` pass
+    written in :data:`POSTINGS_SCHEMA`, sorted on :data:`POSTINGS_KEY`
+    within the batch's partitions (``layoutcommit.write_segment_rows``
+    — the pushed ``term IN`` filter row-group-skips inside it); the
+    segment's (n_docs, total_len) counters are its stats row."""
+    write_segment_rows(
+        build_postings(documents), POSTINGS_SCHEMA, POSTINGS_KEY, tmp
+    )
+    return delta_postings_stats(documents)
 
 
 def append_to_postings_layout(delta_documents: DataFrame, path: str) -> None:
     """Crawl-delta maintenance for the postings layout (VERDICT r13
     task 4 — the ``append_to_ivfpq_residual_index`` contract
     transplanted to the lexical side): a daily ingest of NEW documents
-    appends its postings rows and refreshes the additive corpus stats;
-    work is delta-linear — no full-corpus re-tokenize, no vocabulary
-    rewrite.
+    installs its postings rows and additive corpus counters as one
+    staged segment (:func:`write_postings_segment`, the streaming
+    ingest's writer); work is delta-linear — no full-corpus
+    re-tokenize, no vocabulary rewrite — and :func:`bm25_topk_from_postings`
+    serves it at once.
 
     Why pure row-append is exact here: the postings table keys on
     (term, doc_id) and a crawl delta is new doc_ids, so delta rows are
     disjoint from the base's; per-term df is derived from posting rows
-    AT QUERY TIME in :func:`bm25_topk_from_postings` (a count over the
-    query terms' pruned lists), so it refreshes for free; and the
-    1-row stats table (n_docs, total_len) is a pair of additive
-    counters.  ``write_postings_layout(base)`` + append(delta) serves
+    AT QUERY TIME (a count over the query terms' pruned lists), so it
+    refreshes for free; and the (n_docs, total_len) counters are
+    additive.  ``write_postings_layout(base)`` + append(delta) serves
     bit-identically to a one-pass build over base ∪ delta (contract
     test in tests/test_layout.py).  Updates to EXISTING doc_ids are
     out of scope — those go through a rebuild, same as the ANN layouts.
 
-    The delta's rows are hash-clustered on term and sorted by
-    (term, doc_id) within the appended files, so the pushed
-    ``term IN (...)`` filter keeps row-group skipping inside every
-    segment (and, unlike ``repartitionByRange``, the clustering needs
-    no sampling job — the delta is tokenized exactly once).
+    Retry contract: a delta equal in content to one already appended
+    IS a retry — its segment key is the content hash
+    (``layoutcommit.append_key``), so re-running the append after a
+    crash at any step, or after it succeeded, leaves exactly one
+    installed copy (and the counters of a segment whose stats row a
+    crash ate are derived from its rows)."""
+    append_segment(path, delta_documents, write_postings_segment)
 
-    Resolves the layout's live generation first
-    (layoutcommit.read_current), so appends compose with compacted
-    layouts.  Retry caveat: this batch form appends straight into the
-    live postings table, so re-running it after a mid-append crash
-    doubles the delta — an at-least-once source must go through the
-    staged path (streaming/ingest.py), whose per-batch installs are
-    idempotent."""
-    from pithos_spark.functions.layoutcommit import (
-        begin_append,
-        end_append,
-        read_current,
-        read_tiny_rows,
-    )
 
+def _staged_postings_counters(
+    spark, layout_path: str, live: list[str]
+) -> tuple[int, int]:
+    """(n_docs, total_len) contributed by the live staged segments
+    (``layoutcommit.staged_counters``).  The derivation for stats-less
+    segments counts distinct (doc_id, dl) pairs over exactly those
+    segments' rows (read by path), so a document with zero tokens —
+    which has no posting rows and affects no score — is the one thing
+    it can't see."""
+
+    def derive(missing):
+        return (
+            staged_rows(spark, layout_path, missing, POSTINGS_SCHEMA)
+            .select("doc_id", "dl")
+            .distinct()
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.coalesce(F.sum("dl"), F.lit(0))
+                .cast("long")
+                .alias("total_len"),
+            )
+            .collect()[0]
+        )
+
+    c = staged_counters(layout_path, live, ("n_docs", "total_len"), derive)
+    return c["n_docs"], c["total_len"]
+
+
+def load_postings_layout(spark, path: str):
+    """THE loader of the postings layout: (posting rows, 1-row corpus
+    counters) of the live generation (layoutcommit.read_current — one
+    tiny pointer-file read) with its live staged segments.  Posting
+    rows are base ∪ segments (one multi-path scan; df derives from the
+    union at query time, so appended and streamed documents
+    participate exactly) and the counters are the generation's plus
+    the segments' (stats rows, or derived from the rows — never
+    base-only against unioned rows).  With nothing staged this is the
+    base read."""
     root = read_current(path)
-    old = read_tiny_rows(f"{root}/stats")[0]
-    p = build_postings(delta_documents)
-    begin_append(root)  # torn-append marker: cleared after the stats write
-    order_postings(p).write.mode("append").parquet(f"{root}/postings")
-    d = delta_postings_stats(delta_documents).collect()[0]
-    write_postings_stats(
-        delta_documents.sparkSession,
-        f"{root}/stats",
-        int(old["n_docs"]) + int(d["n_docs"]),
-        int(old["total_len"]) + int(d["total_len"]),
-    )
-    end_append(root)
+    post = spark.read.schema(POSTINGS_SCHEMA).parquet(f"{root}/postings")
+    stats = spark.read.parquet(f"{root}/stats")
+    # ONE listing of the live segments for both the rows and the
+    # counters (postings folds are always major: no run)
+    live = live_staged_segs(path, root)
+    if live:
+        dn, dl_sum = _staged_postings_counters(spark, path, live)
+        post = post.unionByName(
+            staged_rows(spark, path, live, POSTINGS_SCHEMA)
+        )
+        stats = stats.select(
+            (F.col("n_docs") + F.lit(dn)).alias("n_docs"),
+            (F.col("total_len") + F.lit(dl_sum)).alias("total_len"),
+        )
+    return post, stats
 
 
 def bm25_topk_from_postings(
@@ -308,22 +360,12 @@ def bm25_topk_from_postings(
     terms' posting lists — `.explain` shows the `term IN (...)` filter
     pushed into the parquet scan, and the term-range layout makes that
     row-group skipping, not a full read.  The production serving shape:
-    build once on ingest, query forever.  Reads the layout's live
-    generation (layoutcommit.read_current — one tiny pointer-file
-    read), so it serves compacted layouts transparently."""
-    from pithos_spark.functions.layoutcommit import (
-        assert_not_torn,
-        read_current,
-    )
-
-    root = read_current(path)
-    assert_not_torn(root)
-    post = (
-        spark.read.schema(POSTINGS_SCHEMA)
-        .parquet(f"{root}/postings")
-        .filter(F.col("term").isin(list(terms)))
-    )
-    stats = spark.read.parquet(f"{root}/stats")
+    build once on ingest, query forever.  Serves the layout's live
+    staged segments (:func:`load_postings_layout`): bit-identical to a
+    one-pass layout over the union of documents (tested across trigger
+    splits, after compaction, and across every injected crash point)."""
+    post, stats = load_postings_layout(spark, path)
+    post = post.filter(F.col("term").isin(list(terms)))
     df_per_term = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         post.join(F.broadcast(df_per_term), "term")

@@ -20,6 +20,8 @@ explicitly).
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -34,28 +36,14 @@ from pyspark.sql.types import (
 
 from pithos_spark.functions.dedup import portable_hash60, portable_hash60_sql
 from pithos_spark.functions.layoutcommit import (
-    assert_not_torn,
-    begin_append,
-    end_append,
+    append_segment,
     read_current,
     read_tiny_rows,
-    run_path,
     tables_root,
+    with_staged,
+    write_segment_rows,
     write_tiny_table,
 )
-
-
-def _gen_table(spark, root: str, table: str, schema=None) -> DataFrame:
-    """``table`` of the generation at ``root``: the base table under
-    ``layoutcommit.tables_root(root)``, unioned with the run when the
-    generation is thin (a minor fold's merged delta, read with the base
-    table's schema).  With a full generation this is the base read."""
-    reader = spark.read.schema(schema) if schema else spark.read
-    df = reader.parquet(f"{tables_root(root)}/{table}")
-    run = run_path(root)
-    if run:
-        df = df.unionByName(spark.read.schema(df.schema).parquet(run))
-    return df
 
 
 def _quantized(col: F.Column, scale: int = 1000) -> F.Column:
@@ -1039,11 +1027,9 @@ def save_ivf_index(
         ),
         f"{path}/meta",
     )
-    # a rebuild is the documented torn-append recovery; finalize cuts
-    # the CURRENT pointer back to generation 0 and GCs old fold
-    # generations + staging — rebuild parity with every other
-    # persisted layout (VERDICT r16 task 7, now real rather than the
-    # documented plain-IVF exception)
+    # finalize cuts the CURRENT pointer back to generation 0 and GCs
+    # old fold generations + staging — rebuild parity with every other
+    # persisted layout (VERDICT r16 task 7)
     finalize_rebuild(path)
 
 
@@ -1055,39 +1041,55 @@ def append_to_ivf_index(
     residual-IVFADC got theirs in r13, postings/grams in r14): newly
     ingested vectors assign to the STORED centers (assignment is
     row-local, so ingest order and batch boundaries cannot matter) and
-    land inside the existing cluster partition directories — no Lloyd
-    passes, work linear in the delta.  Every reader of the layout
-    works on the grown index unchanged: the SemDeDup sweep
-    (:func:`semantic_dedup_pairs_from_layout`) sees the new vectors in
-    their cells, and probe reads keep pruning because the cluster
-    value set is frozen with the centers.  Same contract/caveat as the
-    other appends: centroids drift as the corpus grows — retrain per
-    major corpus version, append within one.
+    install as one staged segment (:func:`frozen_segment`, the
+    streaming ingest's writer) — no Lloyd passes, work linear in the
+    delta.  Every reader of the layout sees the new vectors at once
+    through :func:`load_ivf_index`: the SemDeDup sweep
+    (:func:`semantic_dedup_pairs_from_layout`) in their cells, the
+    probe by row filter until a fold restores the cluster directories
+    (the cluster value set is frozen with the centers).  Same
+    contract/caveat as the other appends: centroids drift as the
+    corpus grows — retrain per major corpus version, append within one.
 
     The quantization scale comes from the layout's meta table (written
     at save time), never from the caller: pass ``scale`` only for
     pre-meta layouts (it is rejected if it contradicts the stored
-    value — ADVICE r14's silent-misassignment fix)."""
-    # append into the live generation's base tables (a thin
-    # generation's run is left to the folds)
-    path = tables_root(read_current(path))
-    delta = ivf_assign_delta(
-        new_embeddings.sparkSession, new_embeddings, path, scale
+    value — ADVICE r14's silent-misassignment fix).
+
+    Retry contract: the delta must be genuinely new vec_ids, and a
+    delta equal in content to one already appended IS a retry — its
+    segment key is the content hash (``layoutcommit.append_key``), so
+    re-running the append after a crash at any step, or after it
+    succeeded, leaves exactly one installed copy."""
+    append_segment(
+        path,
+        new_embeddings,
+        frozen_segment(
+            path,
+            functools.partial(ivf_assign_delta, scale=scale),
+            IVF_ASSIGNED_SCHEMA,
+            IVF_ASSIGNED_KEY,
+        ),
     )
-    # torn-append marker (VERDICT r15 task 4 — the postings/trigram
-    # contract extended to the ANN layouts): a crash mid-append leaves
-    # a partially-visible delta, and a retry would double-append
-    # assignment rows (duplicate vec_id candidates in every dedup
-    # sweep); the marker turns both into a loud read-time refusal, and
-    # a rebuild (save_ivf_index) is the documented recovery
-    assert_not_torn(path)
-    begin_append(path)
-    (
-        delta.write.mode("append")
-        .partitionBy("cluster")
-        .parquet(f"{path}/assigned")
-    )
-    end_append(path)
+
+
+def frozen_segment(path: str, encode, schema, key):
+    """The ANN layouts' segment writer, shared by their streams and
+    batch appends: ``write(batch_df, tmp)`` runs ``encode(spark,
+    batch_df, tables)`` against the FROZEN artifacts of the live
+    generation's base tables (row-local) and writes the rows in the
+    layout's declared ``schema``, sorted on its ``key``
+    (``layoutcommit.write_segment_rows``).  ``cluster`` rides as a
+    plain column in a segment (directory partitioning is the FOLD's
+    job); no stats row — these indexes carry no additive corpus
+    counters, so the segment rows ARE the whole delta."""
+
+    def write(batch_df, tmp):
+        tables = tables_root(read_current(path))
+        rows = encode(batch_df.sparkSession, batch_df, tables)
+        write_segment_rows(rows, schema, key, tmp)
+
+    return write
 
 
 def ivf_assign_delta(
@@ -1096,8 +1098,8 @@ def ivf_assign_delta(
     """Assign newly-ingested vectors against the FROZEN centers of the
     generation at ``gen_root``: (vec_id, label, embedding, cluster)
     rows, work linear in the delta, no Lloyd passes — the exact
-    row-local assignment :func:`append_to_ivf_index` appends and
-    ``streaming/ingest.streaming_ivf_ingest`` stages (the plain-IVF
+    row-local assignment :func:`append_to_ivf_index` and
+    ``streaming/ingest.streaming_ivf_ingest`` stage (the plain-IVF
     twin of :func:`ivfpq_residual_encode_delta`).  The quantization
     scale comes from the layout's meta table; ``scale`` is accepted
     only for pre-meta layouts and rejected on contradiction (ADVICE
@@ -1148,20 +1150,46 @@ def load_ivf_index(
     """Load a persisted IVF index: (assigned corpus, centers table) of
     the layout's LIVE generation (layoutcommit.read_current — the
     streamed-ingest compaction swaps a pointer file; a never-compacted
-    layout resolves to itself).  The assigned side keeps its cluster
-    partitioning, so ivf_query's probe filter prunes directories, not
-    rows.  Refuses a layout whose last batch append never finished
-    (torn marker — VERDICT r15 task 4).  ``root`` lets a staged-aware
-    caller pass an already-resolved generation (the
-    fold-between-two-resolutions race — see :func:`load_pq_index`)."""
+    layout resolves to itself), the assigned rows being base ∪ run ∪
+    live staged segments (``layoutcommit.with_staged``, one resolution
+    for the base read and the fold mask).  The base side keeps its
+    cluster partitioning, so ivf_query's probe filter prunes
+    directories; the delta-sized staged rows are filtered by value.
+    ``root`` pins an already-resolved generation."""
     if root is None:
         root = read_current(path)
     tables = tables_root(root)
-    assert_not_torn(tables)
+    assigned = spark.read.parquet(f"{tables}/assigned")
     return (
-        _gen_table(spark, root, "assigned"),
+        with_staged(spark, path, root, assigned),
         spark.read.parquet(f"{tables}/centers"),
     )
+
+
+def ivf_topk_from_layout(
+    spark,
+    path: str,
+    query_vec_id: int,
+    k: int = 10,
+    n_probe: int = 2,
+) -> DataFrame:
+    """IVF probe over the persisted plain-IVF index
+    (:func:`load_ivf_index`): a vector appended or streamed in is
+    searchable (and probeable as a query) before any fold.
+    Bit-identical to a layout whose vectors were all assigned in one
+    pass against the same frozen centers (assignment is row-local;
+    new vec_ids are disjoint from the base's by the ingest
+    contract)."""
+    assigned, centers = load_ivf_index(spark, path)
+    return ivf_query(
+        assigned,
+        centers,
+        query_vec_id,
+        k,
+        n_probe,
+        cluster_col="cluster",
+        metric="l2",
+    ).drop("query_id")
 
 
 # --- deterministic Lloyd IVF (engine-exact trained quantizer) --------------
@@ -2125,8 +2153,7 @@ def save_pq_index(
             f"{path}/meta",
         ),
     )
-    # a rebuild is the documented torn-append recovery; on a
-    # previously-compacted layout this also cuts CURRENT back to the
+    # on a previously-compacted layout this cuts CURRENT back to the
     # fresh generation 0 and GCs old generations/staging (ADVICE r15)
     from pithos_spark.functions.layoutcommit import finalize_rebuild
 
@@ -2138,21 +2165,16 @@ def load_pq_index(spark, path: str, root: str | None = None):
     the layout's LIVE generation (layoutcommit.read_current — the
     streamed-ingest compaction swaps a pointer file, never mutates
     tables in place; a never-compacted layout resolves to itself).
-    Refuses a layout whose last batch append never finished (torn
-    marker — VERDICT r15 task 4).
-
-    ``root`` lets a staged-aware caller pass an already-resolved
-    generation so the whole serve reads ONE generation: resolving
-    CURRENT once for the base and again for the staged mask races a
-    concurrent fold — segments folded between the two reads would be
-    masked out while their rows exist only in the newer base (ADVICE
-    r16).  The codes of a thin generation (a minor fold's) are its base
-    codes ∪ its run (:func:`_gen_table`); the tiny tables are the
-    base's."""
+    The codes are base ∪ run ∪ live staged segments
+    (``layoutcommit.with_staged``): a vector appended or streamed in is
+    served by every reader before any fold.  The generation is
+    resolved ONCE for the base read and the staged mask — two
+    resolutions race a concurrent fold (ADVICE r16); ``root`` pins an
+    already-resolved one.  The tiny tables are the base's."""
     if root is None:
         root = read_current(path)
     tables = tables_root(root)
-    assert_not_torn(tables)
+    codes = spark.read.schema(PQ_CODES_SCHEMA).parquet(f"{tables}/codes")
     # 1-row meta read driver-side: a distributed job per serve just to
     # fetch four ints was pure scheduling overhead (r17, guide §1).
     # r18: the M x K codebooks are the same KB-class artifact — read
@@ -2160,7 +2182,7 @@ def load_pq_index(spark, path: str, root: str | None = None):
     # the driver, so a distributed codebook scan per serve bought
     # nothing but a job).  Same parquet bytes, same values.
     return (
-        _gen_table(spark, root, "codes", PQ_CODES_SCHEMA),
+        with_staged(spark, path, root, codes),
         read_codebooks(tables),
         read_tiny_rows(f"{tables}/meta")[0],
     )
@@ -2169,31 +2191,26 @@ def load_pq_index(spark, path: str, root: str | None = None):
 def append_to_pq_index(new_embeddings: DataFrame, path: str) -> None:
     """Incremental index maintenance — the batch twin of
     streaming_pq_encode: encode newly-ingested vectors with the
-    index's FROZEN codebooks (an M x K collect, constant-size) and
-    append their code rows to ``{path}/codes``.  Serving over the grown
-    index is identical to an index whose codes were all encoded in one
-    pass with the same codebooks (tested), because encoding is
-    row-local given frozen codebooks.  Codebook DRIFT is the documented
-    limitation, as for any frozen production quantizer: when the
-    vector distribution moves, retrain via save_pq_index and re-encode."""
-    gen = tables_root(read_current(path))
-    assert_not_torn(gen)
-    codes = pq_encode_delta(new_embeddings.sparkSession, new_embeddings, gen)
-    # torn-append marker (VERDICT r15 task 4): a crash mid-append
-    # leaves a partially-visible code delta and a retry double-appends
-    # code rows — duplicate vec_id rows in every dedup tier and
-    # duplicate result rows in top-k.  load_pq_index refuses while the
-    # marker stands; rebuild (save_pq_index) is the recovery.  Appends
-    # land in the LIVE generation (read_current), composing with
-    # compacted layouts; an at-least-once source must use the staged
-    # streaming path (streaming/ingest.streaming_pq_index_ingest)
-    # instead — its per-batch installs are idempotent.  The append
-    # lands in the SAME base tables the codebooks came from (one
-    # resolution above — a second read_current here could race a
-    # concurrent fold); a thin generation serves them beside its run.
-    begin_append(gen)
-    order_pq_codes(codes).write.mode("append").parquet(f"{gen}/codes")
-    end_append(gen)
+    index's FROZEN codebooks (an M x K driver-side read) and install
+    their code rows as one staged segment (:func:`frozen_segment`, the
+    streaming ingest's writer), which :func:`load_pq_index` serves at
+    once.  Serving over the grown index is identical to an index whose
+    codes were all encoded in one pass with the same codebooks
+    (tested), because encoding is row-local given frozen codebooks.
+    Codebook DRIFT is the documented limitation, as for any frozen
+    production quantizer: when the vector distribution moves, retrain
+    via save_pq_index and re-encode.
+
+    Retry contract: the delta must be genuinely new vec_ids, and a
+    delta equal in content to one already appended IS a retry — its
+    segment key is the content hash (``layoutcommit.append_key``), so
+    re-running the append after a crash at any step, or after it
+    succeeded, leaves exactly one installed copy."""
+    append_segment(
+        path,
+        new_embeddings,
+        frozen_segment(path, pq_encode_delta, PQ_CODES_SCHEMA, PQ_CODES_KEY),
+    )
 
 
 def pq_encode_delta(
@@ -2919,8 +2936,7 @@ def save_ivfpq_residual_index(
             f"{path}/meta",
         ),
     )
-    # a rebuild is the documented torn-append recovery; on a
-    # previously-compacted layout this also cuts CURRENT back to the
+    # on a previously-compacted layout this cuts CURRENT back to the
     # fresh generation 0 and GCs old generations/staging
     from pithos_spark.functions.layoutcommit import finalize_rebuild
 
@@ -2934,30 +2950,29 @@ def append_to_ivfpq_residual_index(
     the :func:`append_to_pq_index` twin the canonical serving index was
     missing: assign newly-ingested vectors to their nearest FROZEN
     coarse centroid, encode the residual against the FROZEN codebooks,
-    and append the code rows into the cluster-partitioned table (each
-    new row lands in its cluster's directory, so probe pruning keeps
-    working over the grown index).  Both steps are row-local given the
-    frozen artifacts, so serving over the appended index is identical
-    to one-pass encoding of the full corpus under the same artifacts
-    regardless of ingest order or batch boundaries (tested).  Codebook
-    and centroid DRIFT is the documented limitation, as for any frozen
-    production quantizer: when the distribution moves, retrain via
-    :func:`save_ivfpq_residual_index`."""
-    spark = new_embeddings.sparkSession
-    path = tables_root(read_current(path))  # the live generation's base
-    assert_not_torn(path)  # never append onto a torn layout
-    codes = ivfpq_residual_encode_delta(spark, new_embeddings, path)
-    # torn-append marker (VERDICT r15 task 4): see append_to_pq_index —
-    # every serving entry refuses while the marker stands; rebuild
-    # (save_ivfpq_residual_index) is the recovery
-    begin_append(path)
-    (
-        order_residual_codes(codes)
-        .write.mode("append")
-        .partitionBy("cluster")
-        .parquet(f"{path}/codes")
+    and install the code rows as one staged segment
+    (:func:`frozen_segment`; cluster rides as a column until a fold
+    restores the directory partitioning).  Both steps are row-local
+    given the frozen artifacts, so serving over the appended index is
+    identical to one-pass encoding of the full corpus under the same
+    artifacts regardless of ingest order or batch boundaries (tested).
+    Codebook and centroid DRIFT is the documented limitation, as for
+    any frozen production quantizer: when the distribution moves,
+    retrain via :func:`save_ivfpq_residual_index`.
+
+    Retry contract: the delta must be genuinely new vec_ids, and a
+    delta equal in content to one already appended IS a retry — its
+    segment key is the content hash (``layoutcommit.append_key``), so
+    re-running the append after a crash at any step, or after it
+    succeeded, leaves exactly one installed copy."""
+    append_segment(
+        path,
+        new_embeddings,
+        frozen_segment(
+            path, ivfpq_residual_encode_delta, RESIDUAL_CODES_SCHEMA,
+            PQ_CODES_KEY,
+        ),
     )
-    end_append(path)
 
 
 def ivfpq_residual_encode_delta(
@@ -3011,17 +3026,20 @@ def ivfpq_residual_encode_delta(
 def load_ivfpq_residual_index(spark, path: str, root: str | None = None):
     """Load a persisted residual-IVFADC index: (codes df, centers dict,
     codebooks dict, meta row) of the layout's LIVE generation — the
-    :func:`load_pq_index` contract (refuses a torn layout; ``root``
-    lets a staged-aware caller read ONE resolved generation).  The
-    code table keeps its cluster partitioning, so the probed clusters
-    prune directories; centers, codebooks and meta are KB-sized
-    driver-side reads (no Spark job, r18)."""
+    :func:`load_pq_index` contract (codes = base ∪ run ∪ live staged
+    segments under one resolution; ``root`` pins it).  The base code
+    table keeps its cluster partitioning, so the probed clusters prune
+    directories (the delta-sized staged rows are filtered by value);
+    centers, codebooks and meta are KB-sized driver-side reads (no
+    Spark job, r18)."""
     if root is None:
         root = read_current(path)
     tables = tables_root(root)
-    assert_not_torn(tables)
+    codes = spark.read.schema(RESIDUAL_CODES_SCHEMA).parquet(
+        f"{tables}/codes"
+    )
     return (
-        _gen_table(spark, root, "codes", RESIDUAL_CODES_SCHEMA),
+        with_staged(spark, path, root, codes),
         read_centers(tables),
         read_codebooks(tables),
         read_tiny_rows(f"{tables}/meta")[0],

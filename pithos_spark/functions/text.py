@@ -15,6 +15,15 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from pithos_spark.functions.layoutcommit import (
+    append_segment,
+    live_staged_segs,
+    read_current,
+    read_tiny_rows,
+    staged_counters,
+)
 
 # language marker words -> language code, smallest usable stopword sets.
 # Deliberately tiny: the point is the operator shape (argmax over
@@ -1817,12 +1826,10 @@ GROUP BY doc_id
 ORDER BY doc_id"""
 
 
-def write_gram_tables(
-    src, n_buckets: int, path: str, mode: str = "overwrite"
-) -> None:
-    """The gram layout's physical format, declared once — build, batch
-    append, staged segment and fold all write through here: each of
-    the five count tables PARTITIONED BY its murmur3 gram bucket
+def write_gram_tables(src, n_buckets: int, path: str) -> None:
+    """The gram layout's physical format, declared once — build, staged
+    segment (stream or batch append) and fold all write through here:
+    each of the five count tables PARTITIONED BY its murmur3 gram bucket
     ``b = pmod(hash(key), n_buckets)`` and sorted by key within files.
     ``src`` is either trigram windows (counted per gram) or, for a
     fold, a dict of per-table partial count rows (summed per gram).
@@ -1835,7 +1842,7 @@ def write_gram_tables(
     keyless repartition("b") exchange per table whose few distinct
     values spread over 200 partitions (guide §2.4/§2.5).  The five
     writes are independent jobs — overlapped (guide §2.6); callers
-    commit (marker, install or pointer swap) only after all settle."""
+    commit (install or pointer swap) only after all settle."""
     from pithos_spark.plans.helpers import overlap_jobs
 
     def _write_one(key, cnt):
@@ -1849,7 +1856,7 @@ def write_gram_tables(
             .agg(agg.alias(cnt))
             .withColumn("b", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
             .sortWithinPartitions(key)
-            .write.mode(mode)
+            .write.mode("overwrite")
             .partitionBy("b")
             .parquet(f"{path}/{cnt}")
         )
@@ -1927,13 +1934,38 @@ def write_trigram_lm_layout(
         write_gram_stats(
             lm_documents.sparkSession, f"{path}/stats", n_total, n_buckets, 1
         )
-        # a rebuild is the documented torn-append recovery: cut CURRENT
-        # back to this fresh generation 0 and GC old generations and
-        # staging, so recovery works on compacted layouts too (ADVICE
-        # r15)
+        # cut CURRENT back to this fresh generation 0 and GC old
+        # generations and staging, so a rebuild of a compacted layout is
+        # what readers see (ADVICE r15)
         finalize_rebuild(path)
     finally:
         tri_lm.unpersist()
+
+
+def gram_segment(path: str):
+    """The gram layout's segment writer, shared by the stream and the
+    batch append: ``write(lm_documents, tmp)`` derives the batch's five
+    gram count tables (delta-linear) and writes ALL FIVE into the one
+    segment through :func:`write_gram_tables` with the layout's FROZEN
+    bucket count (read back from the live generation's stats, never
+    recomputed), so an installed segment always holds five complete,
+    mutually-consistent tables.  Its window count is the segment's
+    stats row (exactly re-derivable from the c3 sums if a crash ate
+    the stats append)."""
+
+    def write(lm_documents, tmp):
+        stats = read_tiny_rows(f"{read_current(path)}/stats")[0]
+        tri = _trigram_windows(lm_documents).persist()
+        try:
+            d_total = tri.count()
+            write_gram_tables(tri, int(stats["n_buckets"]), tmp)
+        finally:
+            tri.unpersist()
+        return lm_documents.sparkSession.range(1).select(
+            F.lit(int(d_total)).alias("n_total")
+        )
+
+    return write
 
 
 def append_to_trigram_lm_layout(
@@ -1941,60 +1973,28 @@ def append_to_trigram_lm_layout(
 ) -> None:
     """Crawl-delta maintenance for the gram layout (VERDICT r13 task 4
     — the ``append_to_ivfpq_residual_index`` contract transplanted):
-    the bucket count is FROZEN at build time (read back from the stats
-    table, never recomputed), the delta's five count tables hash into
-    the SAME murmur3 buckets and append as new per-segment partial
-    rows, and n_total refreshes additively.  Work is delta-linear — no
-    full-vocabulary rewrite, no re-derivation of the base counts.
+    the delta's five count tables, hashed into the layout's FROZEN
+    murmur3 buckets, and its window count install as one staged
+    segment (:func:`gram_segment`, the streaming ingest's writer).
+    Work is delta-linear — no full-vocabulary rewrite, no re-derivation
+    of the base counts.
 
-    A gram present in both base and delta now has one partial count
-    row PER SEGMENT in its (frozen-hash, therefore same) bucket
-    partition; readers merge segments per gram with one
+    A gram present in both base and delta then has one partial count
+    row per segment; every reader merges segments per gram with one
     map-side-combinable sum (:func:`_merge_segment_counts` — the LSM
-    read-merge), so append==rebuild bit-exactly for every scoring path
-    (contract test in tests/test_layout.py).  Probe pruning survives
-    appends unchanged: frozen n_buckets means a gram's partition never
-    moves, and appended files land inside existing ``b=`` directories.
-    Assumes a non-empty base layout (the empty-LM n_total clamp is a
-    build-time concern).  Resolves the layout's live generation first
-    (layoutcommit.read_current), so appends compose with compacted
-    layouts.  Retry caveat: this batch form appends straight into the
-    live tables, so re-running it after a mid-append crash doubles the
-    delta — an at-least-once source must go through the staged path
-    (streaming/ingest.py), whose per-batch installs are idempotent."""
-    from pithos_spark.functions.layoutcommit import (
-        begin_append,
-        end_append,
-        read_current,
-        read_tiny_rows,
-    )
+    read-merge) over base ∪ live segments
+    (:func:`_load_trigram_layout`), so append==rebuild bit-exactly for
+    every scoring path (contract test in tests/test_layout.py).  Probe
+    pruning survives appends unchanged: frozen n_buckets means a
+    gram's bucket never moves.  Assumes a non-empty base layout (the
+    empty-LM n_total clamp is a build-time concern).
 
-    root = read_current(path)
-    stats = read_tiny_rows(f"{root}/stats")[0]
-    n_buckets = int(stats["n_buckets"])
-    tri = _trigram_windows(delta_lm_documents).persist()
-    try:
-        d_total = tri.count()
-        begin_append(root)  # torn-append marker, cleared after stats
-        # all five appends behind the same torn-append marker, so a
-        # crash with any subset written still reads as torn
-        write_gram_tables(tri, n_buckets, root, mode="append")
-        # preserve "unknown" (0): a pre-n_segments-column layout may
-        # already hold several partial rows per gram, so writing 1 here
-        # would let readers take the no-merge fast path over duplicate
-        # gram rows and silently corrupt every score — 0 keeps forcing
-        # the LSM merge (ADVICE r15)
-        base_segs = _n_segments_of(stats)
-        write_gram_stats(
-            delta_lm_documents.sparkSession,
-            f"{root}/stats",
-            int(stats["n_total"]) + d_total,
-            n_buckets,
-            base_segs + 1 if base_segs else 0,
-        )
-        end_append(root)
-    finally:
-        tri.unpersist()
+    Retry contract: a delta equal in content to one already appended
+    IS a retry (the layout's input is new documents) — its segment key
+    is the content hash (``layoutcommit.append_key``), so re-running
+    the append after a crash at any step, or after it succeeded,
+    leaves exactly one installed copy."""
+    append_segment(path, delta_lm_documents, gram_segment(path))
 
 
 def _merge_segment_counts(
@@ -2090,36 +2090,89 @@ def _n_segments_of(stats_row) -> int:
         return 0
 
 
-def _load_trigram_layout(spark, path: str, root: str | None = None):
-    """(count tables, n_total, n_buckets, n_segments) of the layout's
-    LIVE generation (layoutcommit.read_current — compaction swaps a
-    pointer file, never mutates tables in place).  n_segments == 1
-    means every gram holds exactly one count row, so readers skip the
-    LSM merge.
+def _staged_trigram_total(spark, layout_path: str, live: list[str]) -> int:
+    """Window count contributed by the live staged segments
+    (``layoutcommit.staged_counters``); the derivation for a stats-less
+    segment is exact (a trigram segment's n_total equals the sum of its
+    c3 counts — the c3 table groups every window by its trigram, so
+    unlike the postings derivation this one has no blind spot)."""
 
-    ``root`` lets a staged-aware caller pass an already-resolved
-    generation so base and staged mask read ONE generation (the
-    fold-between-two-resolutions race, ADVICE r16 — see
-    similarity.load_pq_index)."""
-    from pithos_spark.functions.layoutcommit import (
-        assert_not_torn,
-        read_current,
-        read_tiny_rows,
-    )
+    def derive(missing):
+        total = 0
+        for s in missing:
+            total += int(
+                spark.read.parquet(f"{layout_path}/staged/seg={s}/c3")
+                .agg(F.coalesce(F.sum("c3"), F.lit(0)).alias("t"))
+                .collect()[0]["t"]
+            )
+        return {"n_total": total}
 
+    return staged_counters(layout_path, live, ("n_total",), derive)[
+        "n_total"
+    ]
+
+
+def _load_trigram_layout(
+    spark, path: str, root: str | None = None, live: list | None = None
+):
+    """(count tables, table dirs, n_total, n_buckets, n_segments) of
+    the layout's LIVE generation (layoutcommit.read_current — a fold
+    swaps a pointer file, never mutates tables in place) with its
+    ``live`` staged segments (default: every unfolded one; ``root``
+    pins an already-resolved generation — one resolution for the base
+    read and the fold mask, ADVICE r16).
+
+    Each count table is the base's partial rows (``b`` from the
+    partition directories, so a ``b IN (...)`` filter prunes them)
+    unioned with the segments' rows in ONE recursive multi-path scan
+    read with the table's declared schema (``b`` recomputed with the
+    writer's own expression — the conflicting-directory-structures
+    check rules out a partitioned multi-root read).  ``dirs`` lists
+    every file root per table, base first, for the one-scan merge
+    (:func:`_merged_counts_read`); n_total adds the segments' window
+    counts.  n_segments == 1 means every gram holds exactly one count
+    row, so readers skip the LSM merge; it reads 0 (merge) while
+    segments are live."""
     if root is None:
         root = read_current(path)
-    assert_not_torn(root)
-    counts = {
-        cnt: spark.read.parquet(f"{root}/{cnt}")
+    if live is None:
+        live = live_staged_segs(path, root)
+    stats = read_tiny_rows(f"{root}/stats")[0]
+    n_buckets = int(stats["n_buckets"])
+    dirs = {
+        cnt: [f"{root}/{cnt}"]
+        + [f"{path}/staged/seg={s}/{cnt}" for s in live]
         for _, cnt in _TRIGRAM_COUNT_TABLES
     }
-    stats = read_tiny_rows(f"{root}/stats")[0]
+    counts = {}
+    for key, cnt in _TRIGRAM_COUNT_TABLES:
+        counts[cnt] = spark.read.parquet(dirs[cnt][0])
+        if live:
+            staged = (
+                spark.read.schema(
+                    StructType(
+                        [
+                            StructField(key, StringType()),
+                            StructField(cnt, LongType()),
+                        ]
+                    )
+                )
+                .option("recursiveFileLookup", "true")
+                .parquet(*dirs[cnt][1:])
+                .withColumn(
+                    "b", F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
+                )
+            )
+            counts[cnt] = counts[cnt].unionByName(staged)
+    n_total = int(stats["n_total"])
+    if live:
+        n_total += _staged_trigram_total(spark, path, live)
     return (
         counts,
-        int(stats["n_total"]),
-        int(stats["n_buckets"]),
-        _n_segments_of(stats),
+        dirs,
+        n_total,
+        n_buckets,
+        0 if live else _n_segments_of(stats),
     )
 
 
@@ -2140,20 +2193,16 @@ def trigram_segment_stats(spark, path: str) -> DataFrame:
     The number an operator acts on is ``avg_segments_x1000``: fold when
     it crosses COMPACT_WHEN_AVG_SEGMENTS_X1000
     (streaming/ingest.py — derived from the measured per-segment
-    serving tax vs compaction cost, SCALE_r15).  This form reads the
-    BASE tables (batch appends land there); for a layout fed by the
-    STREAMING ingest, whose not-yet-folded rows live in staged
-    segments, use
-    ``streaming.ingest.trigram_segment_stats_with_staged`` — same
-    report over base ∪ staged, the numbers compaction would actually
-    merge."""
-    counts, _, _, _ = _load_trigram_layout(spark, path)
+    serving tax vs compaction cost, SCALE_r15).  The report covers
+    base ∪ live staged segments (:func:`_load_trigram_layout`) —
+    exactly the partial rows a merged serving read sums and a fold
+    would collapse; with nothing staged it is the base's."""
+    counts = _load_trigram_layout(spark, path)[0]
     return _segment_stats_from_counts(counts)
 
 
 def _segment_stats_from_counts(counts: dict[str, DataFrame]) -> DataFrame:
-    """The occupancy aggregation shared by the base-only and
-    staged-aware segment-stats forms."""
+    """The occupancy aggregation of :func:`trigram_segment_stats`."""
     key_of = {cnt: key for key, cnt in _TRIGRAM_COUNT_TABLES}
     out = None
     for _key, cnt in _TRIGRAM_COUNT_TABLES:
@@ -2240,27 +2289,23 @@ def trigram_heldout_from_layout(
     are value-identical to the derived ones), but the LM side is a
     parquet read instead of a per-run corpus shuffle.
 
-    One-segment fast path (VERDICT r14 task 5): the LSM read-merge is
-    pure tax on a layout whose grams hold one row each (fresh build or
-    post-compaction — stats says so via n_segments), so it only runs
-    on genuinely multi-segment layouts; there the merge runs as ONE
-    tagged scan+exchange over all five tables
+    Serves base ∪ live staged segments (:func:`_load_trigram_layout`;
+    n_total adds their window counts).  One-segment fast path (VERDICT
+    r14 task 5): the LSM read-merge is pure tax on a layout whose grams
+    hold one row each (fresh build or post-compaction, nothing staged —
+    stats says so via n_segments), so it only runs on genuinely
+    multi-segment layouts; there the merge runs as ONE tagged
+    scan+exchange over all five tables' base and segment files
     (:func:`_merged_counts_read`, r18 — the former per-table merges
     cost 5 scans + 5 exchanges = ~8 more scheduling round trips per
     serve; pinned in tests/test_plans.py)."""
-    from pithos_spark.functions.layoutcommit import read_current
     from pithos_spark.plans.helpers import bounded_persist
 
     spark = documents.sparkSession
-    # ONE generation resolution threaded through both reads (the
-    # fold-between-two-resolutions race, ADVICE r16)
-    root = read_current(path)
-    counts, n_total, _, n_segments = _load_trigram_layout(spark, path, root)
+    counts, dirs, n_total, _, n_segments = _load_trigram_layout(spark, path)
     counts = {cnt: df.drop("b") for cnt, df in counts.items()}
     if n_segments != 1:
-        counts = _merged_counts_read(
-            spark, {cnt: [f"{root}/{cnt}"] for _, cnt in _TRIGRAM_COUNT_TABLES}
-        )
+        counts = _merged_counts_read(spark, dirs)
     tri_score = bounded_persist(
         _trigram_windows(documents), "trigram_layout.tri_score"
     )
@@ -2285,6 +2330,8 @@ def trigram_probe_from_layout(
     Same scores as :func:`trigram_heldout_from_layout` on the same
     probe: a pruned-away partition can only hold grams the probe never
     joins, and missing grams coalesce to the same zeros either way.
+    Live staged segments' rows carry the same bucket, recomputed
+    (:func:`_load_trigram_layout`), so the filter drops them by value.
 
     The 100 TB serving shape for "is this new crawl shard in-domain?":
     the layout holds billions of gram rows, a probe of a few thousand
@@ -2292,7 +2339,7 @@ def trigram_probe_from_layout(
     from pithos_spark.plans.helpers import bounded_persist
 
     spark = probe_documents.sparkSession
-    counts, n_total, n_buckets, n_segments = _load_trigram_layout(
+    counts, _, n_total, n_buckets, n_segments = _load_trigram_layout(
         spark, path
     )
     tri_probe = bounded_persist(

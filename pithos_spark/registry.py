@@ -399,6 +399,61 @@ ORACLES["q14_promo_revenue"] = analytics.PROMO_REVENUE_SQL
 
 from pithos_spark.functions import dedup, similarity, text  # noqa: E402
 from pithos_spark.sources import multimodal  # noqa: E402
+from pithos_spark.streaming import ingest as _ing  # noqa: E402
+
+# Persisted-layout fixtures: each layout a gate serves is built once per
+# (session, sf_dir) and reaped at exit.
+_FIXTURES: dict = {}
+
+
+def _fixture(spark, sf_dir, name, build):
+    """The fixture ``name``: ``build(root)`` writes it under a fresh
+    temp dir ``root`` and returns what its gates read (the layout
+    path), memoized per (name, session, sf_dir).  Keyed on
+    applicationId, not id(spark): a new session never aliases a
+    garbage-collected one's stale path (ADVICE r8)."""
+    key = (name, spark.sparkContext.applicationId, sf_dir)
+    if key not in _FIXTURES:
+        import atexit
+        import shutil
+        import tempfile
+
+        root = tempfile.mkdtemp(prefix=f"{name}_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _FIXTURES[key] = build(root)
+    return _FIXTURES[key]
+
+
+def _stream_delta(spark, delta, root, layout, ingest):
+    """Stream ``delta`` into ``layout`` through the staged ``ingest``
+    as two micro-batches (two files, one per trigger) — two staged
+    segments."""
+    src = f"{root}/delta_src"
+    delta.repartition(2).write.parquet(src)
+    q = ingest(
+        spark.readStream.schema(delta.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        layout,
+        f"{root}/ckpt",
+    )
+    q.awaitTermination(600)
+    q.stop()
+
+
+def _compacted(spark, sf_dir, name, staged_path, fold):
+    """A copy of the staged fixture at ``staged_path`` with its segments
+    folded by ``fold`` (a ``compact_staged_*``)."""
+
+    def build(root):
+        import shutil
+
+        layout = f"{root}/layout"
+        shutil.copytree(staged_path(spark, sf_dir), layout)
+        fold(spark, layout)
+        return layout
+
+    return _fixture(spark, sf_dir, name, build)
 
 
 def _doc_query(fn, *args, **kwargs):
@@ -639,23 +694,14 @@ ORACLES["ann_pq_topk"] = similarity.pq_topk_oracle(0, 10)
 # pq_serve_topk tail over value-identical tables), so the same oracle.
 # This is the gate for the "persist the code table once, serve from
 # ~1/32 the bytes" claim; bench times the serving read separately.
-_PQ_INDEX_CACHE: dict = {}
-
-
 def _pq_index_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="pq_index_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def build(path):
         similarity.save_pq_index(
             T.load_tables(spark, sf_dir)["embeddings"], path
         )
-        _PQ_INDEX_CACHE[key] = path
-    return _PQ_INDEX_CACHE[key]
+        return path
+
+    return _fixture(spark, sf_dir, "pq_index", build)
 
 
 def _pq_from_layout(spark, sf_dir):
@@ -703,42 +749,26 @@ ORACLES["ann_pq_batch_from_layout"] = similarity.pq_batch_topk_oracle(
 # driver hash-proves streamed-ingest == one-pass frozen encode end to
 # end.
 _PQ_STAGED_PRED = "vec_id % 4 <> 3"
-_STAGED_PQ_CACHE: dict = {}
 
 
 def _staged_pq_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STAGED_PQ_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="pq_staged_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build(root):
         emb = T.load_tables(spark, sf_dir)["embeddings"]
         layout = f"{root}/layout"
         similarity.save_pq_index(emb.filter(_PQ_STAGED_PRED), layout)
-        src = f"{root}/delta_src"
-        emb.filter(f"NOT ({_PQ_STAGED_PRED})").repartition(
-            2
-        ).write.parquet(src)
-        from pithos_spark.streaming import ingest as _ing
-
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        _stream_delta(
+            spark,
+            emb.filter(f"NOT ({_PQ_STAGED_PRED})"),
+            root,
+            layout,
+            _ing.streaming_pq_index_ingest,
         )
-        q = _ing.streaming_pq_index_ingest(stream, layout, f"{root}/ckpt")
-        q.awaitTermination(600)
-        q.stop()
-        _STAGED_PQ_CACHE[key] = layout
-    return _STAGED_PQ_CACHE[key]
+        return layout
+
+    return _fixture(spark, sf_dir, "pq_staged", build)
 
 
 def _pq_topk_staged(spark, sf_dir):
-    from pithos_spark.streaming import ingest as _ing
-
     return _ing.pq_topk_with_staged(
         T.load_tables(spark, sf_dir)["embeddings"],
         _staged_pq_path(spark, sf_dir),
@@ -752,26 +782,11 @@ ORACLES["ann_pq_topk_staged"] = similarity.pq_topk_oracle(
     0, 10, train_pred=_PQ_STAGED_PRED
 )
 
-_COMPACTED_PQ_CACHE: dict = {}
-
 
 def _compacted_pq_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COMPACTED_PQ_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from pithos_spark.streaming import ingest as _ing
-
-        staged = _staged_pq_path(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="pq_compacted_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        layout = f"{root}/layout"
-        shutil.copytree(staged, layout)
-        _ing.compact_staged_pq(spark, layout)
-        _COMPACTED_PQ_CACHE[key] = layout
-    return _COMPACTED_PQ_CACHE[key]
+    return _compacted(
+        spark, sf_dir, "pq_compacted", _staged_pq_path, _ing.compact_staged_pq
+    )
 
 
 def _pq_topk_compacted(spark, sf_dir):
@@ -794,46 +809,26 @@ ORACLES["ann_pq_topk_compacted"] = similarity.pq_topk_oracle(
 # (cluster carried as a column; the fold restores the directory
 # partitioning).  Oracle: the residual twin with train_pred on BOTH
 # Lloyd unrolls.
-_STAGED_IVFPQ_CACHE: dict = {}
-
-
 def _staged_ivfpq_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STAGED_IVFPQ_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="ivfpq_staged_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build(root):
         emb = T.load_tables(spark, sf_dir)["embeddings"]
         layout = f"{root}/layout"
         similarity.save_ivfpq_residual_index(
             emb.filter(_PQ_STAGED_PRED), layout
         )
-        src = f"{root}/delta_src"
-        emb.filter(f"NOT ({_PQ_STAGED_PRED})").repartition(
-            2
-        ).write.parquet(src)
-        from pithos_spark.streaming import ingest as _ing
+        _stream_delta(
+            spark,
+            emb.filter(f"NOT ({_PQ_STAGED_PRED})"),
+            root,
+            layout,
+            _ing.streaming_ivfpq_residual_ingest,
+        )
+        return layout
 
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = _ing.streaming_ivfpq_residual_ingest(
-            stream, layout, f"{root}/ckpt"
-        )
-        q.awaitTermination(600)
-        q.stop()
-        _STAGED_IVFPQ_CACHE[key] = layout
-    return _STAGED_IVFPQ_CACHE[key]
+    return _fixture(spark, sf_dir, "ivfpq_staged", build)
 
 
 def _ivfpq_residual_staged(spark, sf_dir):
-    from pithos_spark.streaming import ingest as _ing
-
     return _ing.ivfpq_residual_topk_with_staged(
         T.load_tables(spark, sf_dir)["embeddings"],
         _staged_ivfpq_path(spark, sf_dir),
@@ -847,26 +842,15 @@ ORACLES["ann_ivfpq_residual_staged"] = similarity.ivfpq_residual_topk_oracle(
     0, 10, train_pred=_PQ_STAGED_PRED
 )
 
-_COMPACTED_IVFPQ_CACHE: dict = {}
-
 
 def _compacted_ivfpq_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COMPACTED_IVFPQ_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from pithos_spark.streaming import ingest as _ing
-
-        staged = _staged_ivfpq_path(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="ivfpq_compacted_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        layout = f"{root}/layout"
-        shutil.copytree(staged, layout)
-        _ing.compact_staged_ivfpq_residual(spark, layout)
-        _COMPACTED_IVFPQ_CACHE[key] = layout
-    return _COMPACTED_IVFPQ_CACHE[key]
+    return _compacted(
+        spark,
+        sf_dir,
+        "ivfpq_compacted",
+        _staged_ivfpq_path,
+        _ing.compact_staged_ivfpq_residual,
+    )
 
 
 def _ivfpq_residual_compacted(spark, sf_dir):
@@ -1004,23 +988,14 @@ QUERIES["ann_ivfpq_residual_topk"] = _emb_query(
 # residual codebooks + cluster-partitioned code table built once per
 # (session, sf_dir); serving is the probe-pruned read through the same
 # _residual_topk tail, so bit-identical — same oracle.
-_IVFPQ_INDEX_CACHE: dict = {}
-
-
 def _ivfpq_index_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVFPQ_INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="ivfpq_index_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def build(path):
         similarity.save_ivfpq_residual_index(
             T.load_tables(spark, sf_dir)["embeddings"], path
         )
-        _IVFPQ_INDEX_CACHE[key] = path
-    return _IVFPQ_INDEX_CACHE[key]
+        return path
+
+    return _fixture(spark, sf_dir, "ivfpq_index", build)
 
 
 def _ivfpq_residual_from_layout(spark, sf_dir):
@@ -3062,26 +3037,14 @@ ORACLES["corpus_bm25_topk"] = _retrieval_mod.bm25_topk_oracle()
 # per-session materialized postings layout (same build-once/probe-many
 # pattern as the IVF index cache): first call writes the term-range
 # parquet layout, later calls only read it
-_POSTINGS_CACHE: dict = {}
-
-
 def _postings_path(spark, sf_dir):
-    # keyed on applicationId, not id(spark): a new session never aliases
-    # a garbage-collected one's stale path; dirs are reaped at exit
-    # (ADVICE r8)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _POSTINGS_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="postings_layout_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def build(path):
         _retrieval_mod.write_postings_layout(
             T.load_tables(spark, sf_dir)["documents"], path
         )
-        _POSTINGS_CACHE[key] = path
-    return _POSTINGS_CACHE[key]
+        return path
+
+    return _fixture(spark, sf_dir, "postings_layout", build)
 
 
 def _bm25_postings(spark, sf_dir):
@@ -3100,29 +3063,18 @@ ORACLES["corpus_bm25_postings_topk"] = _retrieval_mod.bm25_topk_oracle()
 # layout contract), then serves top-k from the appended layout.  The
 # oracle is the FULL-corpus BM25 oracle, so the driver hash-checks the
 # append==rebuild equivalence itself, not just a rows count.
-_POSTINGS_APPEND_CACHE: dict = {}
-
-
 def _postings_append_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _POSTINGS_APPEND_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        import pyspark.sql.functions as F
-
-        path = tempfile.mkdtemp(prefix="postings_append_layout_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def build(path):
         docs = T.load_tables(spark, sf_dir)["documents"]
         _retrieval_mod.write_postings_layout(
-            docs.filter(F.col("doc_id") % 10 != 0), path
+            docs.filter("doc_id % 10 <> 0"), path
         )
         _retrieval_mod.append_to_postings_layout(
-            docs.filter(F.col("doc_id") % 10 == 0), path
+            docs.filter("doc_id % 10 = 0"), path
         )
-        _POSTINGS_APPEND_CACHE[key] = path
-    return _POSTINGS_APPEND_CACHE[key]
+        return path
+
+    return _fixture(spark, sf_dir, "postings_append_layout", build)
 
 
 def _bm25_postings_appended(spark, sf_dir):
@@ -3145,46 +3097,26 @@ ORACLES["corpus_bm25_postings_append_topk"] = (
 # serves the PLAIN layout read, which resolves the CURRENT pointer to
 # the new generation.  Both score against the FULL-corpus one-pass
 # oracle, so the driver itself proves stream==batch and fold==rebuild.
-_STAGED_POSTINGS_CACHE: dict = {}
-
-
 def _staged_postings_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STAGED_POSTINGS_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        import pyspark.sql.functions as F
-
-        root = tempfile.mkdtemp(prefix="postings_staged_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build(root):
         docs = T.load_tables(spark, sf_dir)["documents"]
         layout = f"{root}/layout"
         _retrieval_mod.write_postings_layout(
-            docs.filter(F.col("doc_id") % 10 != 0), layout
+            docs.filter("doc_id % 10 <> 0"), layout
         )
-        src = f"{root}/delta_src"
-        docs.filter(F.col("doc_id") % 10 == 0).repartition(2).write.parquet(
-            src
+        _stream_delta(
+            spark,
+            docs.filter("doc_id % 10 = 0"),
+            root,
+            layout,
+            _ing.streaming_postings_ingest,
         )
-        from pithos_spark.streaming import ingest as _ing
+        return layout
 
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = _ing.streaming_postings_ingest(stream, layout, f"{root}/ckpt")
-        q.awaitTermination(600)
-        q.stop()
-        _STAGED_POSTINGS_CACHE[key] = layout
-    return _STAGED_POSTINGS_CACHE[key]
+    return _fixture(spark, sf_dir, "postings_staged", build)
 
 
 def _bm25_postings_staged(spark, sf_dir):
-    from pithos_spark.streaming import ingest as _ing
-
     return _ing.bm25_topk_with_staged(
         spark, _staged_postings_path(spark, sf_dir)
     )
@@ -3195,26 +3127,15 @@ ORACLES["corpus_bm25_postings_staged_topk"] = (
     _retrieval_mod.bm25_topk_oracle()
 )
 
-_COMPACTED_POSTINGS_CACHE: dict = {}
-
 
 def _compacted_postings_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COMPACTED_POSTINGS_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from pithos_spark.streaming import ingest as _ing
-
-        staged = _staged_postings_path(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="postings_compacted_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        layout = f"{root}/layout"
-        shutil.copytree(staged, layout)
-        _ing.compact_staged_postings(spark, layout)
-        _COMPACTED_POSTINGS_CACHE[key] = layout
-    return _COMPACTED_POSTINGS_CACHE[key]
+    return _compacted(
+        spark,
+        sf_dir,
+        "postings_compacted",
+        _staged_postings_path,
+        _ing.compact_staged_postings,
+    )
 
 
 def _bm25_postings_compacted(spark, sf_dir):
@@ -3443,24 +3364,15 @@ ORACLES["dedup_semantic"] = similarity.semantic_dedup_pairs_oracle()
 # saved by save_ivf_index, same params as dedup_semantic) and runs the
 # capped in-cluster pair join.  Stored assignments are value-identical
 # to a fresh train, so the gate shares the train-in-query oracle.
-_SEM_INDEX_CACHE: dict = {}
-
-
 def _semantic_index_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SEM_INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="sem_ivf_index_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def build(path):
         assigned, centers = similarity.build_ivf_lloyd_index(
             T.load_tables(spark, sf_dir)["embeddings"], 64, 2
         )
         similarity.save_ivf_index(assigned, centers, path)
-        _SEM_INDEX_CACHE[key] = path
-    return _SEM_INDEX_CACHE[key]
+        return path
+
+    return _fixture(spark, sf_dir, "sem_ivf_index", build)
 
 
 def _semantic_dedup_from_layout(spark, sf_dir):
@@ -3703,29 +3615,21 @@ def _quality_classifier_from_layout(spark, sf_dir):
         write_classifier_weights_layout,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QC_WEIGHTS_CACHE:
-        import atexit
-        import shutil
-        import tempfile
+    docs = T.load_tables(spark, sf_dir)["documents"]
 
-        path = tempfile.mkdtemp(prefix="classifier_weights_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        docs = T.load_tables(spark, sf_dir)["documents"]
+    def build(path):
         write_classifier_weights_layout(
             docs.filter(_QC_TRAIN_PRED).withColumn(
                 "label", F.expr(_QC_LABEL).cast("int")
             ),
             path,
         )
-        _QC_WEIGHTS_CACHE[key] = path
-    docs = T.load_tables(spark, sf_dir)["documents"]
+        return path
+
     return quality_classifier_from_layout(
-        docs.filter(_QC_SCORE_PRED), _QC_WEIGHTS_CACHE[key]
+        docs.filter(_QC_SCORE_PRED),
+        _fixture(spark, sf_dir, "classifier_weights", build),
     )
-
-
-_QC_WEIGHTS_CACHE: dict = {}
 
 
 from pithos_spark.functions.text import (  # noqa: E402
@@ -3815,24 +3719,15 @@ ORACLES["corpus_trigram_heldout"] = text.trigram_heldout_score_oracle(
 # via write_trigram_lm_layout, bucket-partitioned by gram hash; scoring
 # joins the stored counts — bit-identical to corpus_trigram_heldout
 # (same _trigram_score tail, value-identical counts), so same oracle.
-_TRIGRAM_LAYOUT_CACHE: dict = {}
-
-
 def _trigram_layout_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TRIGRAM_LAYOUT_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="trigram_lm_layout_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def build(path):
         text.write_trigram_lm_layout(
             T.load_tables(spark, sf_dir)["documents"].filter(_TRI_LM_PRED),
             path,
         )
-        _TRIGRAM_LAYOUT_CACHE[key] = path
-    return _TRIGRAM_LAYOUT_CACHE[key]
+        return path
+
+    return _fixture(spark, sf_dir, "trigram_lm_layout", build)
 
 
 def _trigram_heldout_from_layout(spark, sf_dir):
@@ -3853,25 +3748,16 @@ ORACLES["corpus_trigram_heldout_from_layout"] = text.trigram_heldout_score_oracl
 # partial rows, LSM read-merge), then score against the appended
 # layout.  Oracle = the one-pass full-LM heldout oracle, so the driver
 # hash-checks append==rebuild end to end.
-_TRIGRAM_APPEND_CACHE: dict = {}
-
-
 def _trigram_append_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TRIGRAM_APPEND_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="trigram_append_layout_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def build(path):
         lm = T.load_tables(spark, sf_dir)["documents"].filter(_TRI_LM_PRED)
         text.write_trigram_lm_layout(lm.filter("doc_id % 40 <> 0"), path)
         text.append_to_trigram_lm_layout(
             lm.filter("doc_id % 40 = 0"), path
         )
-        _TRIGRAM_APPEND_CACHE[key] = path
-    return _TRIGRAM_APPEND_CACHE[key]
+        return path
+
+    return _fixture(spark, sf_dir, "trigram_append_layout", build)
 
 
 def _trigram_heldout_appended(spark, sf_dir):
@@ -3913,40 +3799,24 @@ ORACLES["corpus_trigram_segment_stats"] = text.trigram_segment_stats_oracle(
 # atomic staged segments, and held-out scoring over base ∪ staged must
 # hash-match the one-pass full-LM oracle — stream==batch proven by the
 # driver itself.
-_TRIGRAM_STAGED_CACHE: dict = {}
-
-
 def _trigram_staged_path(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TRIGRAM_STAGED_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from pithos_spark.streaming import ingest as _ing
-
-        root = tempfile.mkdtemp(prefix="trigram_staged_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build(root):
         lm = T.load_tables(spark, sf_dir)["documents"].filter(_TRI_LM_PRED)
         layout = f"{root}/layout"
         text.write_trigram_lm_layout(lm.filter("doc_id % 40 <> 0"), layout)
-        src = f"{root}/delta_src"
-        lm.filter("doc_id % 40 = 0").repartition(2).write.parquet(src)
-        stream = (
-            spark.readStream.schema(lm.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        _stream_delta(
+            spark,
+            lm.filter("doc_id % 40 = 0"),
+            root,
+            layout,
+            _ing.streaming_trigram_ingest,
         )
-        q = _ing.streaming_trigram_ingest(stream, layout, f"{root}/ckpt")
-        q.awaitTermination(600)
-        q.stop()
-        _TRIGRAM_STAGED_CACHE[key] = layout
-    return _TRIGRAM_STAGED_CACHE[key]
+        return layout
+
+    return _fixture(spark, sf_dir, "trigram_staged", build)
 
 
 def _trigram_heldout_staged(spark, sf_dir):
-    from pithos_spark.streaming import ingest as _ing
-
     docs = T.load_tables(spark, sf_dir)["documents"]
     return _ing.trigram_heldout_with_staged(
         docs.filter(_TRI_SCORE_PRED), _trigram_staged_path(spark, sf_dir)
@@ -4069,32 +3939,21 @@ _LSM_STATE_CTE = """lsm_state AS (
     FROM objects WHERE CAST(inode AS BIGINT) % 13 = 7
 )"""
 
-_OBJECTS_LSM_CACHE: dict = {}
-
 
 def _objects_lsm_paths(spark, sf_dir):
     """Session-cached pair of LSM objects layouts: one left STAGED
     (base + the two streamed mutation segments, unfolded) and one
     COMPACTED (same mutations, folded through the generation commit).
     Built once per (session, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _OBJECTS_LSM_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        import pithos_spark.streaming.ingest as _ing
-
+    def build(root):
         base = T.objects_df(T.load_tables(spark, sf_dir))
         batch1, batch2 = objects_lsm_mutations(base)
 
-        def build(fold: bool) -> str:
-            root = tempfile.mkdtemp(prefix="objects_lsm_")
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
-            layout = f"{root}/layout"
+        def one(name: str, fold: bool) -> str:
+            layout = f"{root}/{name}/layout"
             _ing.save_objects_layout(base, layout)
-            src = f"{root}/src"
-            ckpt = f"{root}/ckpt"
+            src = f"{root}/{name}/src"
+            ckpt = f"{root}/{name}/ckpt"
             for batch in (batch1, batch2):
                 batch.write.mode("append").parquet(src)
                 q = _ing.streaming_objects_ingest(
@@ -4108,16 +3967,15 @@ def _objects_lsm_paths(spark, sf_dir):
                 _ing.compact_staged_objects(spark, layout)
             return layout
 
-        _OBJECTS_LSM_CACHE[key] = (build(False), build(True))
-    return _OBJECTS_LSM_CACHE[key]
+        return one("staged", False), one("compacted", True)
+
+    return _fixture(spark, sf_dir, "objects_lsm", build)
 
 
 def _objects_lsm_staged_listing(spark, sf_dir):
     """Root ListObjects over the STAGED LSM view: streamed PUTs are
     listable (the 9-INSERTED/ prefix appears), DELETEs unlistable,
     upserts override — before any fold."""
-    import pithos_spark.streaming.ingest as _ing
-
     staged, _ = _objects_lsm_paths(spark, sf_dir)
     return _ing.list_objects_with_staged(
         spark, staged, "NATION_2", "", "/", None, 1000

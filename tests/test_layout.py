@@ -4,7 +4,7 @@ on sorted keys, chunk clustering)."""
 
 import pytest
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -324,9 +324,9 @@ def test_ivfpq_residual_incremental_append_equals_one_pass(spark, layout_dir):
             emb, path, 0, 10
         ).collect()
     ]
-    # appended rows land in the pre-existing cluster directories: the
-    # partition column's value set must not grow
-    stored = spark.read.parquet(f"{path}/codes")
+    # appended rows (staged segments, read through the loader) carry
+    # clusters of the frozen set: the cluster value set must not grow
+    stored = similarity.load_ivfpq_residual_index(spark, path)[0]
     centers_df = spark.read.parquet(f"{path}/centers")
     assert stored.select("cluster").distinct().count() == centers_df.count()
     assert stored.select("vec_id").distinct().count() == emb.count()
@@ -471,25 +471,21 @@ def test_postings_incremental_append_equals_one_pass(spark, layout_dir):
         for r in retrieval.bm25_topk_from_postings(spark, full_path).collect()
     ]
     assert got == want and len(got) == 20
-    gs = spark.read.parquet(f"{incr_path}/stats").collect()[0]
-    ws = spark.read.parquet(f"{full_path}/stats").collect()[0]
+    # the loader's view (base ∪ the appends' staged segments)
+    g_post, g_stats = retrieval.load_postings_layout(spark, incr_path)
+    w_post, w_stats = retrieval.load_postings_layout(spark, full_path)
+    gs, ws = g_stats.collect()[0], w_stats.collect()[0]
     assert (gs["n_docs"], gs["total_len"]) == (ws["n_docs"], ws["total_len"])
-    a = {
-        tuple(r)
-        for r in spark.read.parquet(f"{incr_path}/postings").collect()
+    assert {tuple(r) for r in g_post.collect()} == {
+        tuple(r) for r in w_post.collect()
     }
-    b = {
-        tuple(r)
-        for r in spark.read.parquet(f"{full_path}/postings").collect()
-    }
-    assert a == b
 
 
 @pytest.mark.slow
 def test_trigram_incremental_append_equals_one_pass(spark, layout_dir):
     """append_to_trigram_lm_layout (VERDICT r13 task 4): frozen bucket
-    count, delta counts appended as per-segment partial rows into the
-    SAME murmur3 buckets, readers LSM-merge per gram — so both scoring
+    count, delta counts staged as per-segment partial rows in the SAME
+    murmur3 buckets, readers LSM-merge per gram — so both scoring
     paths (full heldout read and the pruned probe) must equal a
     one-pass layout built over the full LM slice."""
     from pithos_spark import tables as T
@@ -518,13 +514,14 @@ def test_trigram_incremental_append_equals_one_pass(spark, layout_dir):
         for r in text.trigram_heldout_from_layout(score, full_path).collect()
     ]
     assert got == want and len(got) > 0
-    gs = spark.read.parquet(f"{incr_path}/stats").collect()[0]
-    ws = spark.read.parquet(f"{full_path}/stats").collect()[0]
-    assert (gs["n_total"], gs["n_buckets"]) == (ws["n_total"], ws["n_buckets"])
-    # appended files land inside the existing b= directories: the
-    # partition value set stays within the frozen bucket space
-    c3 = spark.read.parquet(f"{incr_path}/c3")
-    assert c3.select("b").distinct().count() <= int(ws["n_buckets"])
+    # the loader's view (base ∪ the appends' staged segments)
+    counts, _, g_total, g_buckets, _ = text._load_trigram_layout(
+        spark, incr_path
+    )
+    _, _, w_total, w_buckets, _ = text._load_trigram_layout(spark, full_path)
+    assert (g_total, g_buckets) == (w_total, w_buckets)
+    # appended grams hash into the frozen bucket space
+    assert counts["c3"].select("b").distinct().count() <= w_buckets
     # the pruned probe path merges segments too
     probe = score.filter("doc_id % 16 = 1")
     gp = [
@@ -656,186 +653,12 @@ def test_ivf_append_reads_scale_from_meta(spark, layout_dir):
 
 
 @pytest.mark.slow
-def test_batch_append_tear_is_detected(spark, tmp_path, monkeypatch):
-    """The BATCH append paths (row append + stats overwrite) are not
-    crash-atomic by design — the staged streaming path is the
-    crash-safe ingest.  What they must never do is serve silently
-    drifted scores: a crash between the row append and the stats write
-    leaves the _append_pending marker, every reader refuses loudly,
-    and a rebuild (the documented recovery) clears it."""
-    import pyspark.sql.functions as F
-
-    import pithos_spark.functions.layoutcommit as lc
-    from pithos_spark import tables as T
-    from pithos_spark.functions import retrieval, text
-    from pithos_spark.streaming.ingest import bm25_topk_with_staged
-
-    docs = T.load_tables(spark, SF_ORACLE)["documents"]
-    base = docs.filter(F.col("doc_id") % 10 != 0)
-    delta = docs.filter(F.col("doc_id") % 10 == 0)
-
-    def _boom(*_a, **_kw):
-        raise RuntimeError("injected crash")
-
-    p_layout = str(tmp_path / "postings_torn")
-    retrieval.write_postings_layout(base, p_layout)
-    monkeypatch.setattr(lc, "write_tiny_table", _boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        retrieval.append_to_postings_layout(delta, p_layout)
-    monkeypatch.undo()
-    with pytest.raises(RuntimeError, match="torn"):
-        retrieval.bm25_topk_from_postings(spark, p_layout).collect()
-    with pytest.raises(RuntimeError, match="torn"):
-        bm25_topk_with_staged(spark, p_layout).collect()
-    # rebuild = recovery: the marker clears and serving matches a
-    # one-pass full-corpus layout
-    retrieval.write_postings_layout(docs, p_layout)
-    fresh = str(tmp_path / "postings_fresh")
-    retrieval.write_postings_layout(docs, fresh)
-    assert [
-        tuple(r)
-        for r in retrieval.bm25_topk_from_postings(spark, p_layout).collect()
-    ] == [
-        tuple(r)
-        for r in retrieval.bm25_topk_from_postings(spark, fresh).collect()
-    ]
-
-    lm = docs.filter("doc_id % 4 = 0")
-    score = docs.filter("doc_id % 4 <> 0")
-    t_layout = str(tmp_path / "trigram_torn")
-    text.write_trigram_lm_layout(lm.filter("doc_id % 40 <> 0"), t_layout)
-    monkeypatch.setattr(lc, "write_tiny_table", _boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        text.append_to_trigram_lm_layout(lm.filter("doc_id % 40 = 0"), t_layout)
-    monkeypatch.undo()
-    with pytest.raises(RuntimeError, match="torn"):
-        text.trigram_heldout_from_layout(score, t_layout).collect()
-    text.write_trigram_lm_layout(lm, t_layout)  # rebuild clears it
-    t_fresh = str(tmp_path / "trigram_fresh")
-    text.write_trigram_lm_layout(lm, t_fresh)
-    from pithos_spark.plans.helpers import reset_persist_slots
-
-    reset_persist_slots()
-    got = [
-        tuple(r)
-        for r in text.trigram_heldout_from_layout(score, t_layout).collect()
-    ]
-    reset_persist_slots()
-    want = [
-        tuple(r)
-        for r in text.trigram_heldout_from_layout(score, t_fresh).collect()
-    ]
-    assert got == want and len(got) > 0
-
-
-@pytest.mark.slow
-def test_ann_append_tear_is_detected(spark, tmp_path, monkeypatch):
-    """VERDICT r15 task 4: the three ANN layout appends get the same
-    torn-marker contract as postings/grams.  Kill each append before
-    its marker clears (the worst window — delta rows already visible):
-    every serving entry refuses loudly, a RETRY of the append refuses
-    too (it would double-append code/assignment rows — duplicate
-    vec_id candidates in every dedup tier and duplicate top-k rows),
-    and a rebuild serves bit-identical to a one-pass index."""
-    import pyspark.sql.functions as F
-
-    from pithos_spark import tables as T
-    from pithos_spark.functions import similarity as sim
-
-    emb = T.load_tables(spark, SF_ORACLE)["embeddings"]
-    base = emb.filter(F.col("vec_id") % 4 != 3)
-    delta = emb.filter(F.col("vec_id") % 4 == 3)
-
-    def _boom(*_a, **_kw):
-        raise RuntimeError("injected crash")
-
-    # --- PQ ---------------------------------------------------------
-    path = str(tmp_path / "pq_torn")
-    sim.save_pq_index(base, path)
-    monkeypatch.setattr(sim, "end_append", _boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sim.append_to_pq_index(delta, path)
-    monkeypatch.undo()
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.pq_topk_from_layout(emb, path, 0, 10).collect()
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.pq_code_bucket_stats_from_layout(spark, path).collect()
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.append_to_pq_index(delta, path)  # retry would double-append
-    sim.save_pq_index(emb, path)  # rebuild = recovery
-    fresh = str(tmp_path / "pq_fresh")
-    sim.save_pq_index(emb, fresh)
-    assert [
-        tuple(r) for r in sim.pq_topk_from_layout(emb, path, 0, 10).collect()
-    ] == [
-        tuple(r) for r in sim.pq_topk_from_layout(emb, fresh, 0, 10).collect()
-    ]
-
-    # --- IVF --------------------------------------------------------
-    path = str(tmp_path / "ivf_torn")
-    assigned, centers = sim.build_ivf_lloyd_index(base, 8, 1)
-    sim.save_ivf_index(assigned, centers, path)
-    monkeypatch.setattr(sim, "end_append", _boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sim.append_to_ivf_index(delta, path)
-    monkeypatch.undo()
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.load_ivf_index(spark, path)
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.semantic_dedup_pairs_from_layout(spark, path).collect()
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.append_to_ivf_index(delta, path)
-    a_full, c_full = sim.build_ivf_lloyd_index(emb, 8, 1)
-    sim.save_ivf_index(a_full, c_full, path)  # rebuild = recovery
-    fresh = str(tmp_path / "ivf_fresh")
-    sim.save_ivf_index(a_full, c_full, fresh)
-    assert [
-        tuple(r)
-        for r in sim.semantic_dedup_pairs_from_layout(spark, path).collect()
-    ] == [
-        tuple(r)
-        for r in sim.semantic_dedup_pairs_from_layout(spark, fresh).collect()
-    ]
-
-    # --- residual IVFADC ---------------------------------------------
-    path = str(tmp_path / "ivfpq_torn")
-    sim.save_ivfpq_residual_index(base, path)
-    monkeypatch.setattr(sim, "end_append", _boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sim.append_to_ivfpq_residual_index(delta, path)
-    monkeypatch.undo()
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.ivfpq_residual_topk_from_layout(emb, path, 0, 10).collect()
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.ivfpq_residual_batch_topk_from_layout(
-            emb, path, [0, 1], 10
-        ).collect()
-    with pytest.raises(RuntimeError, match="torn"):
-        sim.append_to_ivfpq_residual_index(delta, path)
-    sim.save_ivfpq_residual_index(emb, path)  # rebuild = recovery
-    fresh = str(tmp_path / "ivfpq_fresh")
-    sim.save_ivfpq_residual_index(emb, fresh)
-    assert [
-        tuple(r)
-        for r in sim.ivfpq_residual_topk_from_layout(
-            emb, path, 0, 10
-        ).collect()
-    ] == [
-        tuple(r)
-        for r in sim.ivfpq_residual_topk_from_layout(
-            emb, fresh, 0, 10
-        ).collect()
-    ]
-
-
-@pytest.mark.slow
-def test_rebuild_resets_compacted_layout(spark, tmp_path, monkeypatch):
-    """ADVICE r15: 'rebuild the layout' is the documented torn-append
-    recovery — but on a previously-COMPACTED layout the old CURRENT
-    pointer kept readers on the superseded generation (where the torn
-    marker lives), so the rebuild never became visible and the refusal
-    never cleared.  write_*_layout must cut the pointer back to its
-    fresh generation 0 and GC the old generations and staging."""
+def test_rebuild_resets_compacted_layout(spark, tmp_path):
+    """ADVICE r15: on a previously-COMPACTED layout the old CURRENT
+    pointer kept readers on the superseded generation, so a rebuild
+    never became visible.  write_*_layout must cut the pointer back to
+    its fresh generation 0 and GC the old generations and staging —
+    a batch append's staged segment included."""
     import os
 
     import pyspark.sql.functions as F
@@ -864,17 +687,11 @@ def test_rebuild_resets_compacted_layout(spark, tmp_path, monkeypatch):
     root = lc.read_current(layout)
     assert root != layout and "fold_gen_" in root
 
-    # tear an append at the live (fold) generation
-    monkeypatch.setattr(lc, "write_tiny_table", _torn_boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        retrieval.append_to_postings_layout(
-            docs.filter("doc_id % 4 = 2"), layout
-        )
-    monkeypatch.undo()
-    with pytest.raises(RuntimeError, match="torn"):
-        retrieval.bm25_topk_from_postings(spark, layout).collect()
+    # a batch append over the fold generation stages one segment
+    retrieval.append_to_postings_layout(docs.filter("doc_id % 4 = 2"), layout)
+    assert len(lc.staged_segment_keys(layout)) == 1
 
-    # rebuild — must become visible AND clear the refusal
+    # rebuild — must become visible
     retrieval.write_postings_layout(docs, layout)
     assert lc.read_current(layout) == layout  # pointer cut to gen 0
     assert not os.path.exists(f"{layout}/CURRENT")
@@ -893,10 +710,6 @@ def test_rebuild_resets_compacted_layout(spark, tmp_path, monkeypatch):
         tuple(r)
         for r in retrieval.bm25_topk_from_postings(spark, fresh).collect()
     ]
-
-
-def _torn_boom(*_a, **_kw):
-    raise RuntimeError("injected crash")
 
 
 def test_segment_token_survives_restart_not_recreation(tmp_path):
@@ -923,13 +736,15 @@ def test_trigram_append_preserves_unknown_segment_count(
     spark, tmp_path
 ):
     """ADVICE r15 (high): a layout written before the n_segments
-    column existed reads as 'unknown' (0 = always merge).  One append
-    must NOT turn that into n_segments=1 — the layout may already hold
+    column existed reads as 'unknown' (0 = always merge).  An append
+    must NOT turn that into n_segments=1 — the base may already hold
     several partial rows per gram, and the one-segment fast path would
-    skip the LSM merge and fan out every scoring join.  Unknown stays
-    unknown (0), the merge keeps running, and scores match a one-pass
-    rebuild."""
-    import pyspark.sql.functions as F
+    skip the LSM merge and fan out every scoring join.  The append
+    stages a segment and leaves the base's stats alone, so unknown
+    stays unknown, the merge keeps running, and scores match a
+    one-pass rebuild."""
+    import os
+    import shutil
 
     from pithos_spark import tables as T
     from pithos_spark.functions import text
@@ -940,15 +755,24 @@ def test_trigram_append_preserves_unknown_segment_count(
     lm = docs.filter("doc_id % 4 = 0")
     score = docs.filter("doc_id % 4 <> 0")
     path = str(tmp_path / "tri_premeta")
-    # a pre-n_segments layout that ALREADY holds two partials per gram
+    # a pre-n_segments layout whose base ALREADY holds two partials per
+    # gram: a second slice's gram tables filed into the same buckets
     text.write_trigram_lm_layout(lm.filter("doc_id % 40 <> 0"), path)
-    text.append_to_trigram_lm_layout(
-        lm.filter("doc_id % 40 = 0 and doc_id % 80 = 0"), path
-    )
     stats = spark.read.parquet(f"{path}/stats").collect()[0]
+    extra = text._trigram_windows(
+        lm.filter("doc_id % 40 = 0 and doc_id % 80 = 0")
+    )
+    part = str(tmp_path / "tri_premeta_part")
+    text.write_gram_tables(extra, int(stats["n_buckets"]), part)
+    for d, _, files in os.walk(part):
+        for f in files:
+            if f.endswith(".parquet"):
+                dest = os.path.join(path, os.path.relpath(d, part))
+                os.makedirs(dest, exist_ok=True)
+                shutil.move(os.path.join(d, f), os.path.join(dest, f))
     write_tiny_table(
         spark.createDataFrame(
-            [(int(stats["n_total"]), int(stats["n_buckets"]))],
+            [(int(stats["n_total"]) + extra.count(), int(stats["n_buckets"]))],
             "n_total long, n_buckets int",
         ),
         f"{path}/stats",
@@ -957,8 +781,8 @@ def test_trigram_append_preserves_unknown_segment_count(
     text.append_to_trigram_lm_layout(
         lm.filter("doc_id % 40 = 0 and doc_id % 80 <> 0"), path
     )
-    after = spark.read.parquet(f"{path}/stats").collect()[0]
-    assert int(after["n_segments"]) == 0  # unknown stays unknown
+    after = spark.read.parquet(f"{path}/stats").collect()[0].asDict()
+    assert "n_segments" not in after  # unknown stays unknown
     full = str(tmp_path / "tri_premeta_full")
     text.write_trigram_lm_layout(lm, full)
     reset_persist_slots()
@@ -972,3 +796,121 @@ def test_trigram_append_preserves_unknown_segment_count(
         for r in text.trigram_heldout_from_layout(score, full).collect()
     ]
     assert got == want and len(got) > 0
+
+
+# the driver-side steps of a batch append, in order (each a module
+# global of functions/layoutcommit.py, so the test can kill it): after
+# the segment write, the footer count; the install rename; and, for the
+# layouts with additive counters, the stats-row append
+_APPEND_CRASH_POINTS = [
+    "parquet_rows",
+    "install_staged_segment",
+    "append_staged_stats",
+]
+
+
+def _append_case(spark, kind):
+    """(build, append, delta, read, has_stats) of one batch append at the
+    smoke scale; ``read(path)`` is the layout's answer as plain rows."""
+    from pithos_spark import tables as T
+    from pithos_spark.functions import retrieval, text
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.plans.helpers import reset_persist_slots
+
+    t = T.load_tables(spark, SF_SMOKE)
+    emb, docs = t["embeddings"], t["documents"]
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    base, delta = emb.filter("vec_id % 4 != 3"), emb.filter("vec_id % 4 = 3")
+    if kind == "pq":
+        return (
+            lambda p: sim.save_pq_index(base, p),
+            sim.append_to_pq_index,
+            delta,
+            lambda p: rows(sim.pq_topk_from_layout(emb, p, 7, 10)),
+            False,
+        )
+    if kind == "residual":
+        return (
+            lambda p: sim.save_ivfpq_residual_index(base, p),
+            sim.append_to_ivfpq_residual_index,
+            delta,
+            lambda p: rows(sim.ivfpq_residual_topk_from_layout(emb, p, 7, 10)),
+            False,
+        )
+    if kind == "ivf":
+        return (
+            lambda p: sim.save_ivf_index(
+                *sim.build_ivf_lloyd_index(base, 8, 1), p
+            ),
+            sim.append_to_ivf_index,
+            delta,
+            lambda p: rows(sim.ivf_topk_from_layout(spark, p, 7, 10)),
+            False,
+        )
+    if kind == "postings":
+        return (
+            lambda p: retrieval.write_postings_layout(
+                docs.filter("doc_id % 4 != 3"), p
+            ),
+            retrieval.append_to_postings_layout,
+            docs.filter("doc_id % 4 = 3"),
+            lambda p: rows(retrieval.bm25_topk_from_postings(spark, p)),
+            True,
+        )
+    lm, score = docs.filter("doc_id % 4 = 0"), docs.filter("doc_id % 4 != 0")
+
+    def heldout(p):
+        reset_persist_slots()
+        return rows(text.trigram_heldout_from_layout(score, p))
+
+    return (
+        lambda p: text.write_trigram_lm_layout(lm.filter("doc_id % 16 != 0"), p),
+        text.append_to_trigram_lm_layout,
+        lm.filter("doc_id % 16 = 0"),
+        heldout,
+        True,
+    )
+
+
+@pytest.mark.parametrize("kind", ["pq", "residual", "ivf", "postings", "trigram"])
+def test_batch_append_retry(spark, tmp_path, monkeypatch, kind):
+    """A batch append installs its delta as ONE staged segment keyed on
+    the delta's content, so it is safe to retry.  Killed at each
+    driver-side step in turn, the layout answers either as before the
+    append (nothing installed) or as after it (the segment installed;
+    a missing stats row is derived from its rows) — never a partial
+    delta.  The retry then answers as the append does (which the
+    append==rebuild contract tests tie to a one-pass build), with
+    exactly one installed ``append-*`` segment, and a second retry
+    after success installs nothing."""
+    import pithos_spark.functions.layoutcommit as lc
+
+    build, append, delta, read, has_stats = _append_case(spark, kind)
+    layout = str(tmp_path / kind)
+    build(layout)
+    pre = read(layout)
+
+    def _boom(*_a, **_kw):
+        raise RuntimeError("injected crash")
+
+    points = _APPEND_CRASH_POINTS if has_stats else _APPEND_CRASH_POINTS[:2]
+    torn = {}
+    for crash in points:
+        monkeypatch.setattr(lc, crash, _boom)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            append(delta, layout)
+        monkeypatch.undo()
+        torn[crash] = read(layout)
+    append(delta, layout)
+    want = read(layout)
+    assert want != pre
+    for crash, got in torn.items():
+        installed = crash == "append_staged_stats"
+        assert got == (want if installed else pre), crash
+    segs = lc.staged_segment_keys(layout)
+    assert len(segs) == 1 and segs[0].startswith("append-"), segs
+    append(delta, layout)
+    assert lc.staged_segment_keys(layout) == segs

@@ -64,6 +64,7 @@ def test_lsm_merge_matches_dict_oracle(spark, tmp_path_factory, base_keys, batch
     import pyspark.sql.functions as F
 
     import pithos_spark.streaming.ingest as ing
+    from pithos_spark.functions.layoutcommit import install_staged_segment
 
     # -- oracle: a dict applied in batch order ---------------------------
     state = {k: 0 for k in sorted(base_keys)}
@@ -90,7 +91,7 @@ def test_lsm_merge_matches_dict_oracle(spark, tmp_path_factory, base_keys, batch
         ).withColumn(ing.OBJECTS_SEQ, F.lit(i).cast("long"))
         tmp = f"{layout}/staged_tmp/seg=p-{i}"
         seg.repartition(1).write.mode("overwrite").parquet(tmp)
-        ing.install_staged_segment(tmp, f"{layout}/staged/seg=p-{i}")
+        install_staged_segment(tmp, f"{layout}/staged/seg=p-{i}")
 
     def served(df):
         return {

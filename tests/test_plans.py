@@ -763,9 +763,7 @@ def test_registry_trigram_from_layout_takes_fast_path(spark):
 
     # the cached layout the bench serves from: stats must record the
     # re-floored bucket count (a sf0.01 LM is far under 100k grams)
-    path = registry._TRIGRAM_LAYOUT_CACHE[
-        (spark.sparkContext.applicationId, SF_ORACLE)
-    ]
+    path = registry._trigram_layout_path(spark, SF_ORACLE)
     stats = spark.read.parquet(f"{path}/stats").collect()[0]
     assert int(stats["n_buckets"]) <= 8, stats
     assert int(stats["n_segments"]) == 1, stats
@@ -803,6 +801,7 @@ def test_lsm_staged_listing_pushes_below_merge_window(spark, tables, tmp_path):
 
     import pithos_spark.streaming.ingest as ing
     from pithos_spark import tables as T
+    from pithos_spark.functions.layoutcommit import install_staged_segment
     from pithos_spark.registry import objects_lsm_mutations
 
     base = T.objects_df(tables)
@@ -822,7 +821,7 @@ def test_lsm_staged_listing_pushes_below_merge_window(spark, tables, tmp_path):
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        ing.install_staged_segment(tmp, f"{layout}/staged/seg={seg}")
+        install_staged_segment(tmp, f"{layout}/staged/seg={seg}")
 
     df = ing.list_objects_with_staged(
         spark, layout, "NATION_2", "1-URGENT/", "/"

@@ -1548,8 +1548,8 @@ def test_streaming_trigram_ingest_matches_batch(spark, tmp_path):
     ]
     assert got == want and len(got) > 0
 
-    # staged-aware occupancy telemetry sees the staged partial rows the
-    # base-only form cannot (the compaction-policy readout for streams)
+    # the occupancy telemetry sees the staged partial rows (the
+    # compaction-policy readout for streams); the alias is the reader
     from pithos_spark.streaming.ingest import (
         trigram_segment_stats_with_staged,
     )
@@ -1558,12 +1558,8 @@ def test_streaming_trigram_ingest_matches_batch(spark, tmp_path):
         r["gram_table"]: r["avg_segments_x1000"]
         for r in trigram_segment_stats_with_staged(spark, layout).collect()
     }
-    base_only = {
-        r["gram_table"]: r["avg_segments_x1000"]
-        for r in text.trigram_segment_stats(spark, layout).collect()
-    }
-    assert all(v == 1000 for v in base_only.values())  # staged invisible
-    assert any(v > 1000 for v in pre.values())  # ...but really there
+    assert trigram_segment_stats_with_staged is text.trigram_segment_stats
+    assert any(v > 1000 for v in pre.values())
 
     folded = compact_staged_trigram(spark, layout)
     assert folded > 0
@@ -1781,25 +1777,6 @@ def test_compact_staged_trigram_crash_recovery(spark, tmp_path):
         gs = spark.read.parquet(f"{read_current(layout)}/stats").collect()[0]
         assert gs["n_segments"] == 1
         assert ing.compact_staged_trigram(spark, layout) == 0
-
-
-def test_compact_staged_trigram_refuses_torn_base(spark, tmp_path):
-    """The gram fold checks the torn-append marker before it looks at
-    staged segments, like every other fold: with nothing staged, a
-    torn layout is refused loudly instead of silently GC'd."""
-    import pytest as _pt
-
-    import pithos_spark.streaming.ingest as ing
-    from pithos_spark import tables as T
-    from pithos_spark.functions import text
-    from pithos_spark.functions.layoutcommit import begin_append, read_current
-
-    docs = T.load_tables(spark, SF_SMOKE)["documents"]
-    layout = str(tmp_path / "trigram_torn")
-    text.write_trigram_lm_layout(docs.filter("doc_id % 8 = 0"), layout)
-    begin_append(read_current(layout))
-    with _pt.raises(RuntimeError, match="torn"):
-        ing.compact_staged_trigram(spark, layout)
 
 
 def test_staged_serving_derives_missing_stats(spark, tmp_path):
@@ -2318,25 +2295,22 @@ def test_staged_serves_resolve_generation_once(spark, tmp_path, monkeypatch):
     q.stop()
 
     calls = []
-    real = ing.read_current
+    real = sim.read_current
 
     def counting(path):
         calls.append(path)
         return real(path)
 
-    monkeypatch.setattr(ing, "read_current", counting)
-    # the loaders must not re-resolve either (root is threaded in)
-    monkeypatch.setattr(
-        sim, "read_current", lambda p: (_ for _ in ()).throw(
-            AssertionError("loader re-resolved CURRENT")
-        )
-    )
+    # the loader resolves once and threads the root through the base
+    # read and the staged mask
+    monkeypatch.setattr(sim, "read_current", counting)
     ing.pq_topk_with_staged(emb, layout, 0, 10)  # plan construction
     assert len(calls) == 1, calls
 
     docs = T.load_tables(spark, SF_SMOKE)["documents"]
     tri = str(tmp_path / "tri_once")
     txt.write_trigram_lm_layout(docs.filter("doc_id % 2 = 0"), tri)
+    monkeypatch.setattr(txt, "read_current", counting)
     calls.clear()
     ing.trigram_segment_stats_with_staged(spark, tri)
     assert len(calls) == 1, calls
@@ -2855,17 +2829,18 @@ def test_staged_layout_job_counts(spark, tmp_path, caplog):
     define = _jobs_run(
         spark, lambda: served.setdefault(
             "index",
-            ing._index_with_staged(spark, layout, sim.load_pq_index),
+            sim.load_pq_index(spark, layout),
         )
     )
     # the serving tail: the query-vector collect, then the plan's jobs
     read = _jobs_run(spark, lambda: ing.pq_topk_with_staged(
         emb, layout, 0, 10
     ).collect())
+    # the ANN telemetry counts each segment's rows from its footers
     stats = _jobs_run(
         spark, lambda: ing.ann_staged_stats(spark, layout).collect()
     )
-    assert stats == 4
+    assert stats == 0
     folded = {}
     fold = _jobs_run(spark, lambda: folded.setdefault(
         "n", ing.compact_staged_pq_if_needed(spark, layout, 2)
@@ -3136,7 +3111,7 @@ def test_minor_fold_crash_recovery(spark, tmp_path, kind):
         )
 
         def read():  # every code row the staged serve would score
-            codes = ing._index_with_staged(spark, layout, sim.load_pq_index)[0]
+            codes = sim.load_pq_index(spark, layout)[0]
             return sorted(tuple(r) for r in codes.collect())
 
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
@@ -3297,12 +3272,11 @@ def test_tiered_fold_sequence(spark, tmp_path, caplog):
 
 
 def test_appends_and_rebuild_over_thin_generation(spark, tmp_path):
-    """A batch append after a minor fold lands in the base tables the
-    thin generation names (appending into the thin generation would
-    hide the rows from every reader) and serves the one-pass answer,
-    for the PQ index and the plain-IVF index; a rebuild
-    (``finalize_rebuild``, every layout save's last step) over a thin
-    generation leaves only generation 0."""
+    """A batch append after a minor fold stages a segment beside the
+    thin generation (which it leaves untouched) and serves the
+    one-pass answer, for the PQ index and the plain-IVF index; a
+    rebuild (``finalize_rebuild``, every layout save's last step) over
+    a thin generation leaves only generation 0."""
     import os
     import shutil
 
@@ -3367,7 +3341,9 @@ def test_appends_and_rebuild_over_thin_generation(spark, tmp_path):
         # a rebuild's last step over the thin generation: generation 0
         # (whose tables the thin generation served) alone remains
         finalize_rebuild(layout)
-        assert sorted(os.listdir(layout)) == sorted(os.listdir(ref))
+        assert sorted(os.listdir(layout)) == sorted(
+            n for n in os.listdir(ref) if not n.startswith("staged")
+        )
         for p in (layout, ref, f"{layout}_src", f"{layout}_ckpt"):
             shutil.rmtree(p)
 
@@ -3426,3 +3402,192 @@ def test_minor_fold_job_counts(spark, tmp_path):
             emb, p_layout, [0, 2, 42], 10).collect()),
     )
     assert serves == _ANN_SERVE_JOBS["pq"][0]
+
+
+def _rows(df) -> list:
+    """A reader's answer as a list of plain tuples, in a fixed order."""
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _layout_readers(spark, kind, tmp_path):
+    """(build the base, its staged ingest, its fold, every public
+    reader) of one layout at the smoke scale: the base holds three
+    quarters of the rows and the staged ingest streams the rest in as
+    two segments.  Each reader maps the layout path to its answer."""
+    import pithos_spark.streaming.ingest as ing
+    from pithos_spark import tables as T
+    from pithos_spark.functions import retrieval, text
+    from pithos_spark.functions import similarity as sim
+    from pithos_spark.plans.helpers import reset_persist_slots
+
+    t = T.load_tables(spark, SF_SMOKE)
+    emb, docs = t["embeddings"], t["documents"]
+    if kind == "objects":
+        base = T.objects_df(t)
+        return (
+            lambda p: ing.save_objects_layout(base, p),
+            ing.streaming_objects_ingest,
+            ing.compact_staged_objects,
+            _object_mutations(base)[0],
+            {
+                "load_objects_layout": lambda p: ing.load_objects_layout(
+                    spark, p
+                ).select(*base.columns),
+                "list_objects_from_layout": lambda p: (
+                    ing.list_objects_from_layout(spark, p, "NATION_2", "", "/")
+                ),
+            },
+        )
+    base, delta = emb.filter("vec_id % 4 != 3"), emb.filter("vec_id % 4 = 3")
+    label = emb.filter("vec_id = 7").first()["label"]  # 7 is streamed in
+    if kind == "pq":
+        return (
+            lambda p: sim.save_pq_index(base, p),
+            ing.streaming_pq_index_ingest,
+            ing.compact_staged_pq,
+            delta,
+            {
+                "pq_topk_from_layout": lambda p: sim.pq_topk_from_layout(
+                    emb, p, 7, 10
+                ),
+                "pq_batch_topk_from_layout": lambda p: (
+                    sim.pq_batch_topk_from_layout(emb, p, [0, 7, 42], 10)
+                ),
+                "pq_filtered_topk_from_layout": lambda p: (
+                    sim.pq_filtered_topk_from_layout(emb, p, 0, label, 10)
+                ),
+                "pq_code_near_pairs_from_layout": lambda p: (
+                    sim.pq_code_near_pairs_from_layout(emb, p)
+                ),
+                "pq_code_bucket_stats_from_layout": lambda p: (
+                    sim.pq_code_bucket_stats_from_layout(spark, p)
+                ),
+                "pq_recall_report": lambda p: sim.pq_recall_report(
+                    emb, p, [0, 7], 10
+                ),
+            },
+        )
+    if kind == "residual":
+        return (
+            lambda p: sim.save_ivfpq_residual_index(base, p),
+            ing.streaming_ivfpq_residual_ingest,
+            ing.compact_staged_ivfpq_residual,
+            delta,
+            {
+                "ivfpq_residual_topk_from_layout": lambda p: (
+                    sim.ivfpq_residual_topk_from_layout(emb, p, 7, 10)
+                ),
+                "ivfpq_residual_batch_topk_from_layout": lambda p: (
+                    sim.ivfpq_residual_batch_topk_from_layout(
+                        emb, p, [0, 7, 42], 10
+                    )
+                ),
+                "ivfpq_residual_filtered_topk_from_layout": lambda p: (
+                    sim.ivfpq_residual_filtered_topk_from_layout(
+                        emb, p, 0, label, 10
+                    )
+                ),
+            },
+        )
+    if kind == "ivf":
+        return (
+            lambda p: sim.save_ivf_index(
+                *sim.build_ivf_lloyd_index(base, 8, 1), p
+            ),
+            ing.streaming_ivf_ingest,
+            ing.compact_staged_ivf,
+            delta,
+            {
+                "load_ivf_index": lambda p: sim.load_ivf_index(spark, p)[0]
+                .select("vec_id", "label", "cluster"),
+                "ivf_topk_from_layout": lambda p: sim.ivf_topk_from_layout(
+                    spark, p, 7, 10
+                ),
+                "semantic_dedup_pairs_from_layout": lambda p: (
+                    sim.semantic_dedup_pairs_from_layout(spark, p)
+                ),
+            },
+        )
+    if kind == "postings":
+        return (
+            lambda p: retrieval.write_postings_layout(
+                docs.filter("doc_id % 4 != 3"), p
+            ),
+            ing.streaming_postings_ingest,
+            ing.compact_staged_postings,
+            docs.filter("doc_id % 4 = 3"),
+            {
+                "bm25_topk_from_postings": lambda p: (
+                    retrieval.bm25_topk_from_postings(spark, p)
+                ),
+            },
+        )
+    score, lm = docs.filter("doc_id % 4 != 0"), docs.filter("doc_id % 4 = 0")
+
+    def fresh(reader):
+        def read(p):
+            reset_persist_slots()
+            return reader(p)
+
+        return read
+
+    return (
+        lambda p: text.write_trigram_lm_layout(
+            lm.filter("doc_id % 16 != 0"), p
+        ),
+        ing.streaming_trigram_ingest,
+        ing.compact_staged_trigram,
+        lm.filter("doc_id % 16 = 0"),
+        {
+            "trigram_heldout_from_layout": fresh(
+                lambda p: text.trigram_heldout_from_layout(score, p)
+            ),
+            "trigram_probe_from_layout": fresh(
+                lambda p: text.trigram_probe_from_layout(
+                    score.filter("doc_id % 8 = 1"), p
+                )
+            ),
+            # the gram vocabulary of the occupancy report; the partial
+            # rows per gram are what a fold collapses (checked below)
+            "trigram_segment_stats": lambda p: text.trigram_segment_stats(
+                spark, p
+            ).select("gram_table", "n_keys"),
+        },
+    )
+
+
+@pytest.mark.parametrize(
+    "kind", ["objects", "pq", "residual", "ivf", "postings", "trigram"]
+)
+def test_every_reader_serves_live_segments(spark, tmp_path, kind):
+    """Staged segments are part of the layout: with two segments
+    streamed in, every public reader of the layout answers exactly as
+    it does after ``compact_staged_*`` folds them — the fold is file
+    hygiene, never a change of answer.  (A reader that served the base
+    alone returned the streamed rows only after the fold.)"""
+    from pithos_spark.functions import text
+    from pithos_spark.functions.layoutcommit import staged_segment_keys
+
+    build, ingest, fold, delta, readers = _layout_readers(
+        spark, kind, tmp_path
+    )
+    layout = str(tmp_path / kind)
+    build(layout)
+    src = str(tmp_path / "src")
+    delta.repartition(2).write.parquet(src)
+    _run_stream(
+        spark, ingest, src, delta.schema, layout, str(tmp_path / "ckpt")
+    )
+    assert len(staged_segment_keys(layout)) == 2
+    staged = {name: _rows(read(layout)) for name, read in readers.items()}
+    if kind == "trigram":
+        occupancy = _rows(text.trigram_segment_stats(spark, layout))
+        assert any(r[-1] > 1000 for r in occupancy), occupancy
+    assert fold(spark, layout) > 0
+    assert staged_segment_keys(layout) == []
+    for name, read in readers.items():
+        assert staged[name], name
+        assert _rows(read(layout)) == staged[name], name
+    if kind == "trigram":
+        occupancy = _rows(text.trigram_segment_stats(spark, layout))
+        assert all(r[-1] == 1000 for r in occupancy), occupancy
